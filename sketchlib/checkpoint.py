@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .agg import SketchSpec, build_partials, merge_partials
+from .agg import SketchSpec, build_partials, merge_partials, resolve_fanout
 
 LINEAGE_COLS = ["fingerprint", "updated_at"]
 
@@ -79,9 +79,13 @@ def checkpointed_sketch_aggregate(
     specs: list[SketchSpec],
     ckpt_path: str,
     fingerprint: str,
-    fanout: int | None = 32,
+    fanout: int | None | str = "auto",
 ) -> DataFrame:
+    """Checkpointed build + merge. ``fanout="auto"`` resolves from the
+    input partition count, as :func:`sketchlib.agg.sketch_aggregate`
+    does: each partition checkpoints at most one partial per key."""
     partials = build_partials_checkpointed(df, group_cols, specs, ckpt_path, fingerprint)
+    fanout = resolve_fanout(fanout, lambda: df.rdd.getNumPartitions())
     return merge_partials(partials.drop(*LINEAGE_COLS), group_cols, fanout)
 
 

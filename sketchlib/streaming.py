@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, build_partials, merge_partials
+from .agg import SketchSpec, build_partials, merge_partials, resolve_fanout
 
 _BATCH_COL = "batch_id"
 
@@ -41,8 +41,9 @@ def sketch_stream_writer(
     state store. Start with ``.start()``; combine with any trigger."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe (it is a job per trigger): an empty batch
+        # builds no partial rows, and a dynamic-overwrite write of zero
+        # rows replaces no batch partition
         _enable_batch_aqe(batch_df.sparkSession)
         partials = build_partials(batch_df, group_cols, specs).withColumn(
             _BATCH_COL, F.lit(int(batch_id))
@@ -61,15 +62,31 @@ def sketch_stream_writer(
     )
 
 
+def _salt_by_batch(partials: DataFrame) -> DataFrame:
+    """Fold ``batch_id`` into ``part_id`` before it is dropped.
+
+    ``part_id`` restarts at 0 in every micro-batch, so the salted merge
+    level's ``pmod(part_id, fanout)`` alone would put every partial of a
+    long stream of one-partition batches into bucket 0. The hash is
+    deterministic, so reruns keep the same tree shape."""
+    return partials.withColumn(
+        "part_id", F.xxhash64(_BATCH_COL, "part_id")
+    ).drop(_BATCH_COL)
+
+
 def current_states(
     spark: SparkSession,
     state_path: str,
     group_cols: list[str],
-    fanout: int | None = 32,
+    fanout: int | None | str = "auto",
 ) -> DataFrame:
-    """Merge-on-read: one row per (group, sketch) across all batches."""
-    partials = spark.read.parquet(state_path).drop(_BATCH_COL)
-    return merge_partials(partials, group_cols, fanout)
+    """Merge-on-read: one row per (group, sketch) across all batches.
+
+    ``fanout="auto"`` resolves from the store's file count: each file is
+    one write task's output and holds at most one partial per key."""
+    partials = spark.read.parquet(state_path)
+    fanout = resolve_fanout(fanout, lambda: len(partials.inputFiles()))
+    return merge_partials(_salt_by_batch(partials), group_cols, fanout)
 
 
 def compact(
@@ -77,7 +94,7 @@ def compact(
     state_path: str,
     group_cols: list[str],
     compact_path: str,
-    fanout: int | None = 32,
+    fanout: int | None | str = "auto",
 ) -> None:
     """Fold the per-batch partials into a single merged partition set.
     Writes to ``compact_path`` (callers swap paths/views atomically —
