@@ -27,10 +27,6 @@ import numpy as np
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-# Python workers inherit the driver env: make sketchlib importable there
-_pp = os.environ.get("PYTHONPATH", "")
-if _REPO not in _pp.split(os.pathsep):
-    os.environ["PYTHONPATH"] = f"{_REPO}{os.pathsep}{_pp}" if _pp else _REPO
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -40,8 +36,12 @@ from sketchlib.hll import HLL
 from sketchlib.cms import CountMinSketch
 from sketchlib.kll import KLL
 from sketchlib.reservoir import Reservoir
+from sketchlib.session import ensure_worker_pythonpath
 from sketchlib.tdigest import TDigest
 from sketchlib.topk import topk_exact_rescore
+
+# Python workers inherit the driver env: make sketchlib importable there
+ensure_worker_pythonpath()
 
 SEED = 42
 # lifecycle-certificate sample bound: driver-side key collects in the

@@ -668,11 +668,13 @@ def build_partials_direct(
 
     The work is still distributed BY SPARK — a ``spark.range`` over
     file indices packs the SORTED file list into ``tasks`` partitions
-    (default ``2 × defaultParallelism``, cap ``n_files``: measured at
-    the bench scale, one-task-per-file pays ~0.4 s of Python-worker
-    spin-up PER TASK, 2× the whole job's useful work; a handful of
-    files per task amortizes it while range packing keeps ±1-file
-    balance). Each file still streams through its OWN call of the
+    (default ``2 × defaultParallelism``, cap ``n_files``: measured on
+    4 vCPUs over 48 files, one task per file costs 2.0 s and 6.8
+    core-s against 1.1 s and 3.7 core-s for 8 tasks, ~0.08 core-s of
+    fixed Python-task cost per extra task even with the
+    :mod:`sketchlib._daemon` worker path, 0.23 core-s without it; a
+    handful of files per task amortizes it while range packing keeps
+    ±1-file balance). Each file still streams through its OWN call of the
     SAME consumer as the default feed (:func:`_consume_partials`,
     byte-identical kernel code), so ``part_id`` stays the index into
     the sorted file list — stable across reruns AND cluster sizes,
@@ -819,11 +821,12 @@ def sketch_aggregate_direct(
     files = _resolve_split_files(source)
     premerge = not skip_parts
     if tasks is None:
-        # one wave of parallelism-sized tasks measures ~0.5 s faster on
-        # a QUIET host (fewer worker spin-ups, 2× premerge fold) but has
+        # one wave of parallelism-sized tasks measures 0.06 s faster on
+        # a quiet 4-vCPU host (1.06 vs 1.12 s over 48 files) but has
         # zero straggler slack — under exogenous load bursts the leg
-        # swung 3.9–9.0 s vs a steady ~3.6 s at 2×. Keep 2×: scheduling
-        # freedom beats the quiet-host win on any shared machine.
+        # swung 3.9–9.0 s vs a steady ~3.6 s at 2× (32 CPUs). Keep 2×:
+        # scheduling freedom beats the quiet-host win on any shared
+        # machine.
         tasks = 2 * spark.sparkContext.defaultParallelism
     tasks = max(1, min(len(files), tasks))
     partials = build_partials_direct(

@@ -18,8 +18,8 @@ and 49→33 KB; near-full Bloom bitset 131 KB: 3.76→0.06 ms, both
 incompressible-input short-circuit and ratio improve — pack/unpack sat
 at ~13% of the stage-1 consumer's per-file profile). zstd payloads
 carry their raw length (8 bytes LE) because pyarrow's decompressor
-needs it. Falls back to zlib-1 where pyarrow is absent; zlib-flagged
-and version-1 (pre-compression) blobs still unpack.
+needs it. zlib-flagged (pre-r6) and version-1 (pre-compression) blobs
+still unpack.
 """
 
 from __future__ import annotations
@@ -28,13 +28,10 @@ import json
 import struct
 import zlib
 
-try:  # pyarrow ships zstd; keep the codec importable without it
-    import pyarrow as _pa
+import pyarrow as _pa
 
-    _ZSTD_C = _pa.Codec("zstd", 1)
-    _ZSTD_D = _pa.Codec("zstd")
-except Exception:  # pragma: no cover - pyarrow is a de-facto hard dep
-    _ZSTD_C = _ZSTD_D = None
+_ZSTD_C = _pa.Codec("zstd", 1)
+_ZSTD_D = _pa.Codec("zstd")
 
 MAGIC = b"SKL1"
 VERSION = 2
@@ -56,17 +53,12 @@ def pack(kind: str, params: dict, payload: bytes) -> bytes:
     ).encode()
     flags = 0
     if len(payload) >= 256:
-        if _ZSTD_C is not None:
-            packed = struct.pack("<Q", len(payload)) + _ZSTD_C.compress(
-                payload, asbytes=True
-            )
-            flag = _FLAG_ZSTD
-        else:
-            packed = zlib.compress(payload, 1)
-            flag = _FLAG_ZLIB
+        packed = struct.pack("<Q", len(payload)) + _ZSTD_C.compress(
+            payload, asbytes=True
+        )
         if len(packed) < len(payload) * 0.9:
             payload = packed
-            flags |= flag
+            flags |= _FLAG_ZSTD
     return MAGIC + struct.pack("<BBI", VERSION, flags, len(header)) + header + payload
 
 
