@@ -36,7 +36,7 @@ from sketchlib.hll import HLL
 from sketchlib.cms import CountMinSketch
 from sketchlib.kll import KLL
 from sketchlib.reservoir import Reservoir
-from sketchlib.session import ensure_worker_pythonpath
+from sketchlib.session import build_pyfiles_zip, ensure_worker_pythonpath
 from sketchlib.tdigest import TDigest
 from sketchlib.topk import topk_exact_rescore
 
@@ -122,29 +122,7 @@ def _ensure_workers(spark: SparkSession) -> None:
     key = id(sc)
     if key in _PYFILES_SENT:
         return
-    import hashlib
-    import zipfile
-
-    pkg = os.path.join(_REPO, "sketchlib")
-    members = []
-    for root, _dirs, files in os.walk(pkg):
-        if "__pycache__" in root:
-            continue
-        for f in sorted(files):
-            if f.endswith((".py", ".npz")):
-                members.append(os.path.join(root, f))
-    # name the zip by a content hash so executors never import a stale
-    # package after sketchlib/ edits (existence-only caching did)
-    h = hashlib.sha256()
-    for full in sorted(members):
-        h.update(full.encode())
-        with open(full, "rb") as fh:
-            h.update(fh.read())
-    zip_path = f"/tmp/sketchlib_pyfiles_{h.hexdigest()[:16]}.zip"
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-            for full in sorted(members):
-                z.write(full, os.path.relpath(full, _REPO))
+    zip_path = build_pyfiles_zip()
     try:
         sc.addPyFile(zip_path)
     except Exception:

@@ -93,19 +93,6 @@ _NUMERIC_KINDS = ("tdigest", "kll", "reservoir", "fd", "ddsketch")  # consume fl
 # topk over strings the emitted items are therefore xxhash64 values — use
 # topk_exact_rescore when the original values must appear in the output)
 _HASHED_KINDS = ("hll", "cms", "bloom", "lossy", "spacesaving", "topk", "ams", "kmv")
-# _PREAGG_KINDS gates count_col VALIDITY: kinds whose update_unique
-# consumes (value, count) rows exactly (counts summed or idempotently
-# ignored). topk qualifies here — its CMS substrate is count-exact —
-# but is NOT in _PREAGG_AUTO below: its candidate-heap retention
-# depends on per-partition arrival order, so pre-agg states are only
-# estimate-equivalent, not byte-equal. lossy is windowed by definition
-# and belongs to neither.
-_PREAGG_KINDS = frozenset({"hll", "cms", "bloom", "ams", "topk", "kmv", "spacesaving"})
-# _PREAGG_AUTO is the stricter set sketch_aggregate(pre_agg=True)
-# auto-routes: final state provably BYTE-IDENTICAL to the raw path
-# (HLL register-max / Bloom OR / KMV bottom-k are idempotent,
-# CMS/AMS counter adds are commutative int64 sums; pytest-asserted).
-_PREAGG_AUTO = ("hll", "cms", "bloom", "ams", "kmv")
 
 
 @dataclass(frozen=True)
@@ -113,20 +100,13 @@ class SketchSpec:
     """One sketch to build: which kernel, over which column, with which
     params. ``col`` may be a scalar numeric column, a string column
     (pre-hashed JVM-side via xxhash64 — never per-row Python), or an
-    ``array<int>`` column (consumed flattened, zero-copy).
-
-    ``count_col`` (pre-aggregated inputs): ``col`` holds distinct values
-    and ``count_col`` their multiplicities — the kernel consumes
-    ``update_unique(values, counts)``. Only meaningful for the
-    count-aware/idempotent kinds (hll/cms/bloom/ams/topk); set by the
-    :func:`sketch_aggregate` ``pre_agg`` strategy, not usually by hand."""
+    ``array<int>`` column (consumed flattened, zero-copy)."""
 
     name: str
     kind: str
     col: str
     params: dict = field(default_factory=dict)
     weight_col: str | None = None  # tdigest only
-    count_col: str | None = None  # pre-aggregated (value, count) inputs
 
     def make(self):
         return KERNELS[self.kind](**self.params)
@@ -260,11 +240,10 @@ def _grouped_column(arr: pa.Array, want_float: bool, row_order, row_bounds: np.n
         lengths = arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
         flat = arr.flatten()
         if flat.null_count:
-            # drop null ELEMENTS and shrink their rows' lengths — a
-            # null inside an array is not a value, and keeping it
-            # would upcast integer batches to float64/NaN and sketch
-            # the garbage NaN→int cast; matches the pre_agg
-            # explode-then-filter path (byte-identity contract)
+            # drop null ELEMENTS and shrink their rows' lengths: a
+            # null inside an array is not a value (keeping it would
+            # also upcast integer batches to float64/NaN and sketch
+            # the garbage NaN→int cast)
             valid = flat.is_valid().to_numpy(zero_copy_only=False)
             ends = np.cumsum(lengths)
             cum_valid = np.concatenate([[0], np.cumsum(valid.astype(np.int64))])
@@ -438,14 +417,13 @@ def _consume_partials(
                 gu_cache[col] = _grouped_unique_counts(batch.column(col), codes, G)
             return gu_cache[col]
 
-        for name, kind, col, params, wcol, ccol in specs_payload:
+        for name, kind, col, params, wcol in specs_payload:
             want_float = kind in _NUMERIC_KINDS
             if (
                 G > 1  # G==1 needs no reorder; plain unique_counts is cheaper
                 and kind in _HASHED_KINDS
                 and kind != "lossy"
                 and wcol is None
-                and ccol is None
             ):
                 gu = grouped_uniques(col)
                 if gu is not None:
@@ -473,14 +451,6 @@ def _consume_partials(
                 # values with the wrong rows' weights
                 if not np.array_equal(wbounds, bounds) or not _rows_aligned(vlens, wlens):
                     raise ValueError(f"weight col {wcol} nulls misaligned with {col}")
-            pre_counts = None
-            if ccol is not None:
-                # pre-aggregated (value, count) rows: consume the
-                # multiplicities directly — no re-dedup (it would
-                # drop the counts)
-                pre_counts, cbounds, clens = grouped(ccol, False)
-                if not np.array_equal(cbounds, bounds) or not _rows_aligned(vlens, clens):
-                    raise ValueError(f"count col {ccol} nulls misaligned with {col}")
             dedupable = kind in _HASHED_KINDS and kind != "lossy"
             for gi in range(G):
                 lo, hi = int(bounds[gi]), int(bounds[gi + 1])
@@ -493,13 +463,6 @@ def _consume_partials(
                     kernel = KERNELS[kind](**params)
                     states[skey] = kernel
                     n_updates[skey] = 0
-                if pre_counts is not None:
-                    # values are already globally distinct per group
-                    # (the pre_agg groupBy's contract); counts carry
-                    # the raw multiplicities
-                    kernel.update_unique(values[lo:hi], pre_counts[lo:hi])
-                    n_updates[skey] += int(pre_counts[lo:hi].sum())
-                    continue
                 if dedupable:
                     # one dedup per (col, group), shared by hll/cms/
                     # bloom/topk — their updates are count-aware or
@@ -544,6 +507,37 @@ def _consume_partials(
     )
 
 
+def _check_specs(specs: list[SketchSpec]) -> None:
+    """Reject an empty spec list and repeated names: every operator keys
+    its kernels and output rows by ``SketchSpec.name``."""
+    if not specs:
+        raise ValueError("need at least one SketchSpec")
+    names = [s.name for s in specs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate sketch names: {names}")
+
+
+def _plan_stage1(df: DataFrame, group_cols: list[str], specs: list[SketchSpec]):
+    """The planning both batch feeds share: check the specs, narrow
+    ``df`` to the columns they read and bind :func:`_consume_partials`
+    to them. Returns ``(narrow, consume)``; a task calls
+    ``consume(batches, part_id)``."""
+    _check_specs(specs)
+    needed = list(
+        dict.fromkeys(
+            group_cols + [s.col for s in specs] + [s.weight_col for s in specs if s.weight_col]
+        )
+    )
+    narrow = df.select(*needed)
+    pa_group_types = [_pa_type(narrow.schema[c].dataType) for c in group_cols]
+    specs_payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in specs]
+
+    def consume(batches: Iterable[pa.RecordBatch], part_id: int):
+        return _consume_partials(batches, group_cols, pa_group_types, specs_payload, part_id)
+
+    return narrow, consume
+
+
 def build_partials(
     df: DataFrame,
     group_cols: list[str],
@@ -557,31 +551,8 @@ def build_partials(
     ``skip_parts``: partition ids whose partials already exist in a
     checkpoint (see :mod:`sketchlib.checkpoint`) — those tasks emit
     nothing and pull no batches."""
-    if not specs:
-        raise ValueError("need at least one SketchSpec")
-    names = [s.name for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate sketch names: {names}")
-    out_schema = partials_schema(df, group_cols)
     hashed_df, rspecs = _resolve_specs(df, specs)
-    for s in rspecs:
-        if s.count_col is not None and s.kind not in _PREAGG_KINDS:
-            raise ValueError(
-                f"count_col only valid for {sorted(_PREAGG_KINDS)}: {s.name} ({s.kind})"
-            )
-    needed = list(
-        dict.fromkeys(
-            group_cols
-            + [s.col for s in rspecs]
-            + [s.weight_col for s in rspecs if s.weight_col]
-            + [s.count_col for s in rspecs if s.count_col]
-        )
-    )
-    narrow = hashed_df.select(*needed)
-    pa_group_types = [_pa_type(narrow.schema[c].dataType) for c in group_cols]
-    specs_payload = [
-        (s.name, s.kind, s.col, dict(s.params), s.weight_col, s.count_col) for s in rspecs
-    ]
+    narrow, consume = _plan_stage1(hashed_df, group_cols, rspecs)
 
     def fn(batches: Iterable[pa.RecordBatch]):
         from pyspark import TaskContext
@@ -590,11 +561,9 @@ def build_partials(
         part_id = tc.partitionId() if tc is not None else -1
         if skip_parts and part_id in skip_parts:
             return
-        yield from _consume_partials(
-            batches, group_cols, pa_group_types, specs_payload, part_id
-        )
+        yield from consume(batches, part_id)
 
-    return narrow.mapInArrow(fn, out_schema)
+    return narrow.mapInArrow(fn, partials_schema(narrow, group_cols))
 
 
 def _resolve_split_files(source: str | list[str]) -> list[str]:
@@ -617,7 +586,11 @@ def _resolve_split_files(source: str | list[str]) -> list[str]:
     return files
 
 
-def auto_fanout(n_parts: int, threshold: int = 256) -> int | None:
+# fanout="auto" merges up to this many partials per key in one reducer
+AUTO_FANOUT_THRESHOLD = 256
+
+
+def auto_fanout(n_parts: int) -> int | None:
     """Resolve ``fanout="auto"`` from the stage-1 partial count.
 
     The salted intermediate merge level exists to bound reducer fan-in
@@ -625,12 +598,12 @@ def auto_fanout(n_parts: int, threshold: int = 256) -> int | None:
     it costs an extra shuffle plus an extra ``applyInPandas`` pass over
     every partial state row — measured 7.1 s vs 5.1 s for the
     130-partial bench build at an 8-core cap, i.e. ~30% of the whole
-    job, when the tree buys nothing. Below ``threshold`` partials a
-    single reducer merges at most ``threshold`` kilobyte-scale states
-    (≤ ~100 MB even for the widest CMS defaults) and the tree is
+    job, when the tree buys nothing. Up to ``AUTO_FANOUT_THRESHOLD``
+    partials a single reducer merges them all (kilobyte-scale states,
+    ≤ ~100 MB even for the widest CMS defaults) and the tree is
     skipped; above it, ``isqrt(n_parts)`` balances the two levels at
     ~sqrt(n) states merged per task each."""
-    if n_parts <= threshold:
+    if n_parts <= AUTO_FANOUT_THRESHOLD:
         return None
     import math
 
@@ -710,17 +683,13 @@ def build_partials_direct(
     if premerge and skip_parts:
         raise ValueError("premerge folds files per task; resume needs per-file partials")
     files = _resolve_split_files(source)
-    if not specs:
-        raise ValueError("need at least one SketchSpec")
-    names = [s.name for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate sketch names: {names}")
-    # schema from the parquet footer (driver-side, no job); reject the
-    # string-hashed kinds the JVM feed handles
-    sdf = spark.read.parquet(files[0])
+    # schema from the parquet footer (driver-side, no job)
+    narrow, consume = _plan_stage1(spark.read.parquet(files[0]), group_cols, specs)
+    needed = narrow.columns
+    # reject the string-hashed kinds the JVM feed handles
     for s in specs:
         if s.kind in _HASHED_KINDS:
-            dt = sdf.schema[s.col].dataType
+            dt = narrow.schema[s.col].dataType
             is_str = isinstance(dt, StringType) or (
                 isinstance(dt, ArrayType) and isinstance(dt.elementType, StringType)
             )
@@ -730,24 +699,6 @@ def build_partials_direct(
                     f"column {s.col!r}; string inputs need the JVM-side "
                     "xxhash64 pre-hash — use build_partials/sketch_aggregate"
                 )
-        if s.count_col is not None and s.kind not in _PREAGG_KINDS:
-            raise ValueError(
-                f"count_col only valid for {sorted(_PREAGG_KINDS)}: {s.name} ({s.kind})"
-            )
-    needed = list(
-        dict.fromkeys(
-            group_cols
-            + [s.col for s in specs]
-            + [s.weight_col for s in specs if s.weight_col]
-            + [s.count_col for s in specs if s.count_col]
-        )
-    )
-    narrow = sdf.select(*needed)
-    out_schema = partials_schema(narrow, group_cols)
-    pa_group_types = [_pa_type(narrow.schema[c].dataType) for c in group_cols]
-    specs_payload = [
-        (s.name, s.kind, s.col, dict(s.params), s.weight_col, s.count_col) for s in specs
-    ]
 
     # broadcast the manifest: at 100 TB it's ~10^6 paths, which must ship
     # once per executor (torrent broadcast), not once per task closure
@@ -767,9 +718,7 @@ def build_partials_direct(
                     pf = pq.ParquetFile(manifest[fid])
                     yield from pf.iter_batches(batch_size=batch_rows, columns=needed)
 
-            yield from _consume_partials(
-                feed_all(), group_cols, pa_group_types, specs_payload, min(fids)
-            )
+            yield from consume(feed_all(), min(fids))
             return
         for batch in batches:
             for fid in batch.column("id").to_pylist():
@@ -778,15 +727,13 @@ def build_partials_direct(
                     continue
                 pf = pq.ParquetFile(manifest[fid])
                 feed = pf.iter_batches(batch_size=batch_rows, columns=needed)
-                yield from _consume_partials(
-                    feed, group_cols, pa_group_types, specs_payload, fid
-                )
+                yield from consume(feed, fid)
 
     n = len(files)
     if tasks is None:
         tasks = 2 * spark.sparkContext.defaultParallelism
     tasks = max(1, min(n, tasks))
-    return spark.range(0, n, 1, tasks).mapInArrow(fn, out_schema)
+    return spark.range(0, n, 1, tasks).mapInArrow(fn, partials_schema(narrow, group_cols))
 
 
 def sketch_aggregate_direct(
@@ -920,7 +867,6 @@ def sketch_aggregate(
     group_cols: list[str],
     specs: list[SketchSpec],
     fanout: int | None | str = "auto",
-    pre_agg: bool = False,
 ) -> DataFrame:
     """Build + merge in one call: one row per (group, sketch).
 
@@ -929,60 +875,9 @@ def sketch_aggregate(
     ~256 partials) resolves via :func:`resolve_fanout` from the input
     partition count (``df.rdd.getNumPartitions()`` — plan translation
     only, no job): single-level merge below 256 partials, isqrt tree
-    above, so the shape scales with the input instead of a constant.
-
-    ``pre_agg=True`` routes the count-aware token sketches (hll / cms /
-    bloom / ams) through a JVM-side global pre-aggregation:
-    ``explode(col) → groupBy(group, value).count()`` — whole-stage
-    codegen with map-side combine, so the shuffle carries at most
-    ``#input_partitions × |vocab|`` combined rows instead of the raw
-    token stream, and the Python/Arrow boundary shrinks to one weighted
-    row per distinct ``(group, value)``. Final states are BYTE-IDENTICAL
-    to the raw path (idempotent / summed updates; tested). All other
-    kinds (t-digest, KLL, reservoir, topk, lossy, FD) keep the raw
-    single-pass path unchanged.
-
-    When to use: almost never — measured at the bench scale (619 M
-    int32 tokens, vocab 50 k, local[8], quiet host) the raw path runs
-    9.3-9.9 s while pre_agg takes 34-38 s: Spark's row-at-a-time
-    explode + hash-agg over the full token stream costs ~4× more than
-    shipping the untouched Arrow buffers to the vectorized numpy
-    kernels, and the raw path never shuffles tokens at all (its only
-    shuffle is kilobyte state rows). The option exists because the
-    trade can flip on a real cluster when Python worker cores — not
-    the JVM — are the constrained resource (e.g. co-located services),
-    and as an independent oracle: its states are byte-equal to the raw
-    path's, which the test suite asserts. Null ARRAY ELEMENTS are
-    dropped by both paths (explode-then-filter here, an explicit
-    drop_null in the raw stage-1 batch path)."""
+    above, so the shape scales with the input instead of a constant."""
     fanout = resolve_fanout(fanout, lambda: df.rdd.getNumPartitions())
-    if not pre_agg:
-        return merge_partials(build_partials(df, group_cols, specs), group_cols, fanout)
-    hashed_df, rspecs = _resolve_specs(df, specs)
-    pre = [s for s in rspecs if s.kind in _PREAGG_AUTO and s.count_col is None]
-    rest = [s for s in rspecs if s.name not in {p.name for p in pre}]
-    if not pre:
-        return merge_partials(build_partials(df, group_cols, specs), group_cols, fanout)
-    parts: list[DataFrame] = []
-    for col in dict.fromkeys(s.col for s in pre):
-        col_specs = [
-            replace(s, col="__v", count_col="__c") for s in pre if s.col == col
-        ]
-        dt = hashed_df.schema[col].dataType
-        v = F.explode(F.col(col)) if isinstance(dt, ArrayType) else F.col(col)
-        g = (
-            hashed_df.select(*group_cols, v.alias("__v"))
-            .where(F.col("__v").isNotNull())
-            .groupBy(*group_cols, "__v")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        parts.append(build_partials(g, group_cols, col_specs))
-    if rest:
-        parts.append(build_partials(hashed_df, group_cols, rest))
-    partials = parts[0]
-    for p in parts[1:]:
-        partials = partials.unionByName(p)
-    return merge_partials(partials, group_cols, fanout)
+    return merge_partials(build_partials(df, group_cols, specs), group_cols, fanout)
 
 
 def rollup_states(merged: DataFrame, keep_cols: list[str]) -> DataFrame:

@@ -27,17 +27,54 @@ import os
 from pyspark.sql import SparkSession
 
 
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def ensure_worker_pythonpath() -> str:
     """Put the directory holding the sketchlib package on ``PYTHONPATH``
     (first, unless it is there already) and return it. Python workers
     are separate processes: they see ``PYTHONPATH``, not the driver's
     ``sys.path``, and a JVM started after this call passes it on to them
-    (cluster deployments ship sketchlib.zip via ``--py-files`` instead)."""
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    (cluster deployments ship :func:`build_pyfiles_zip` via
+    ``--py-files`` instead)."""
     pp = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = f"{pkg_parent}{os.pathsep}{pp}" if pp else pkg_parent
-    return pkg_parent
+    if _PKG_PARENT not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = f"{_PKG_PARENT}{os.pathsep}{pp}" if pp else _PKG_PARENT
+    return _PKG_PARENT
+
+
+def build_pyfiles_zip(out: str | None = None) -> str:
+    """Zip the sketchlib package (its ``.py`` modules and ``.npz``
+    tables) for ``spark-submit --py-files`` or ``SparkContext.addPyFile``
+    and return the zip's path.
+
+    Without ``out`` the zip is ``/tmp/sketchlib_pyfiles_<hash>.zip``,
+    named by a hash of its members' paths and bytes: an existing zip of
+    that name is reused, and workers never import a stale package after
+    an edit."""
+    import hashlib
+    import zipfile
+
+    members = sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(os.path.join(_PKG_PARENT, "sketchlib"))
+        if "__pycache__" not in root
+        for f in files
+        if f.endswith((".py", ".npz"))
+    )
+    if out is None:
+        h = hashlib.sha256()
+        for full in members:
+            h.update(full.encode())
+            with open(full, "rb") as fh:
+                h.update(fh.read())
+        out = f"/tmp/sketchlib_pyfiles_{h.hexdigest()[:16]}.zip"
+        if os.path.exists(out):
+            return out
+    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
+        for full in members:
+            z.write(full, os.path.relpath(full, _PKG_PARENT))
+    return out
 
 
 def _workers_see(pkg_parent: str) -> bool:

@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import SketchSpec, build_partials, merge_partials, resolve_fanout
+from .agg import SketchSpec, _check_specs, build_partials, merge_partials, resolve_fanout
 
 _BATCH_COL = "batch_id"
 
@@ -39,6 +39,7 @@ def sketch_stream_writer(
 ):
     """``writeStream`` builder whose foreachBatch maintains the sketch
     state store. Start with ``.start()``; combine with any trigger."""
+    _check_specs(specs)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # no emptiness probe (it is a job per trigger): an empty batch
@@ -166,6 +167,7 @@ def windowed_sketch_stream(
     from .agg import _NUMERIC_KINDS, _resolve_specs, load_state
     from .hashing import unique_counts
 
+    _check_specs(specs)  # kernels are keyed by spec name below
     hashed, rspecs = _resolve_specs(stream_df, specs)
     delay_ms = int(pd.Timedelta(watermark_delay).total_seconds() * 1000)
     win = F.window(F.col(ts_col), window_duration, slide_duration or window_duration)
@@ -836,6 +838,7 @@ def session_sketch_stream(
     from .agg import _NUMERIC_KINDS, _resolve_specs, load_state
     from .hashing import unique_counts
 
+    _check_specs(specs)  # kernels are keyed by spec name below
     hashed, rspecs = _resolve_specs(stream_df, specs)
     # all event-time arithmetic in MICROSECONDS (the column's native
     # precision — ms truncation would corrupt session_start as a join

@@ -176,63 +176,58 @@ def test_global_aggregate_no_groups(seq_small):
     assert abs(rows[0].est - 50_000) / 50_000 < 0.05
 
 
-def test_preagg_byte_identical_states(spark, seq_small):
-    """pre_agg=True (JVM explode+groupBy combine) must produce
-    BYTE-IDENTICAL final states to the raw path for hll/cms/bloom/ams,
-    and leave non-pre-agg kinds (tdigest) on the raw path unchanged."""
-    specs = [
-        SketchSpec("hll", "hll", "tokens", {"p": 12, "seed": 7}),
-        SketchSpec("cms", "cms", "tokens", {"w": 2048, "d": 4, "seed": 7}),
-        SketchSpec("bloom", "bloom", "tokens", {"m": 1 << 16, "k": 5, "seed": 7}),
-        SketchSpec("ams", "ams", "tokens", {"w": 1024, "d": 5, "seed": 7}),
-        SketchSpec("kmv", "kmv", "tokens", {"k": 512, "seed": 7}),
-        SketchSpec("td", "tdigest", "n_tok", {"delta": 100.0}),
-    ]
-    raw = {
-        (r.source, r.sketch): (bytes(r.state), r.n_updates)
-        for r in sketch_aggregate(seq_small, ["source"], specs, fanout=8).collect()
+# byte-commutative kinds: any partitioning and merge tree yields the
+# state of one kernel fed every value at once
+REF_PARAMS = {
+    "hll": {"p": 12, "seed": 7},
+    "cms": {"w": 2048, "d": 4, "seed": 7},
+    "bloom": {"m": 1 << 16, "k": 5, "seed": 7},
+    "ams": {"w": 1024, "d": 5, "seed": 7},
+    "kmv": {"k": 512, "seed": 7},
+}
+
+
+def _driver_state(spec: SketchSpec, values) -> bytes:
+    kernel = spec.make()
+    kernel.update(np.asarray(values, dtype=np.int64))
+    return kernel.to_bytes()
+
+
+@pytest.mark.parametrize(
+    "group_cols, col",
+    [(["source"], "tokens"), ([], "doc_id")],
+    ids=["grouped-int-array", "global-scalar-string"],
+)
+def test_stage1_states_match_driver_kernel(seq_small, group_cols, col):
+    """The stage-1 reference: a state Spark builds over 8 input
+    partitions and a fanout=8 merge tree is byte-equal to ONE kernel
+    built in the driver over the collected values, and n_updates is the
+    exact value count. A string column is pre-hashed JVM-side with
+    xxhash64, so the reference collects the same hashes."""
+    specs = [SketchSpec(kind, kind, col, params) for kind, params in REF_PARAMS.items()]
+    got = {
+        (tuple(r[c] for c in group_cols), r.sketch): (bytes(r.state), r.n_updates)
+        for r in sketch_aggregate(seq_small, group_cols, specs, fanout=8).collect()
     }
-    pre = {
-        (r.source, r.sketch): (bytes(r.state), r.n_updates)
-        for r in sketch_aggregate(
-            seq_small, ["source"], specs, fanout=8, pre_agg=True
-        ).collect()
-    }
-    assert set(raw) == set(pre)
-    for key in raw:
-        assert raw[key][1] == pre[key][1], f"n_updates mismatch for {key}"
-        if key[1] == "td":
-            # t-digest is NOT in the pre-agg set — it rides the raw
-            # path in both jobs, but its merge is only value-
-            # associative, so byte equality is not part of the
-            # contract; n_updates equality above is the assertion
-            continue
-        assert raw[key][0] == pre[key][0], f"state bytes differ for {key}"
+    vcol = F.col(col) if col == "tokens" else F.array(F.xxhash64(col))
+    values: dict = {}
+    for r in seq_small.select(*group_cols, vcol.alias("v")).collect():
+        values.setdefault(tuple(r[c] for c in group_cols), []).extend(r.v)
+    assert len(values) == (4 if group_cols else 1)
+    assert set(got) == {(key, s.name) for key in values for s in specs}
+    for key, vals in values.items():
+        for spec in specs:
+            assert got[(key, spec.name)] == (_driver_state(spec, vals), len(vals)), (
+                key,
+                spec.name,
+            )
 
 
-def test_preagg_string_column_and_scalar(spark, seq_small):
-    """pre_agg with a scalar STRING column: xxhash64 then groupBy the
-    hash — estimates must match the raw path exactly (same hashes)."""
-    specs = [SketchSpec("hll_doc", "hll", "doc_id", {"p": 12, "seed": 3})]
-    raw = sketch_aggregate(seq_small, [], specs, fanout=None).collect()[0]
-    pre = sketch_aggregate(seq_small, [], specs, fanout=None, pre_agg=True).collect()[0]
-    assert bytes(raw.state) == bytes(pre.state)
-    assert raw.n_updates == pre.n_updates == 2000
-
-
-def test_preagg_count_col_validation(spark, seq_small):
-    with pytest.raises(ValueError, match="count_col"):
-        sketch_aggregate(
-            seq_small,
-            ["source"],
-            [SketchSpec("td", "tdigest", "n_tok", {"delta": 100.0}, count_col="n_tok")],
-        ).collect()
-
-
-def test_preagg_null_array_elements_match_raw(spark):
-    """Null ARRAY ELEMENTS are dropped by BOTH build paths (review
-    finding r4): states byte-identical, n_updates counts only real
-    values."""
+def test_null_array_elements_are_not_values(spark):
+    """A null inside an array is not a value: stage 1 drops it, so the
+    state equals a kernel fed only the real values and n_updates counts
+    only them; a group whose arrays hold nothing but nulls emits no
+    state."""
     df = spark.createDataFrame(
         [("a", [1, None, 3]), ("a", [4]), ("b", None), ("b", [None, None])],
         "source string, tokens array<bigint>",
@@ -241,55 +236,10 @@ def test_preagg_null_array_elements_match_raw(spark):
         SketchSpec("hll", "hll", "tokens", {"p": 10, "seed": 3}),
         SketchSpec("cms", "cms", "tokens", {"w": 256, "d": 3, "seed": 3}),
     ]
-    raw = {
+    got = {
         (r.source, r.sketch): (bytes(r.state), r.n_updates)
         for r in sketch_aggregate(df, ["source"], specs, fanout=None).collect()
     }
-    pre = {
-        (r.source, r.sketch): (bytes(r.state), r.n_updates)
-        for r in sketch_aggregate(df, ["source"], specs, fanout=None, pre_agg=True).collect()
-    }
-    # source b has no non-null values: raw path emits no state for it
-    # on the cms/hll specs only if every row empty — group rows still
-    # counted; both paths must agree on the emitted key set
-    assert set(raw) == set(pre)
-    for k in raw:
-        assert raw[k] == pre[k], f"mismatch for {k}"
-    assert raw[("a", "hll")][1] == 3  # 1, 3, 4 — the null never counted
-
-
-def test_preagg_count_col_spacesaving_guarantees(spark, seq_small):
-    """Explicit count_col routing for the r5 kind: building SpaceSaving
-    from pre-aggregated (token, count) rows must consume the
-    multiplicities exactly — n equals the raw token total and the
-    guarantee triple holds vs exact counts (estimate-equivalent to the
-    raw path, not byte-equal: compress timing differs by grouping)."""
-    from sketchlib.agg import load_state
-
-    m = 199
-    flat = seq_small.select("source", F.explode("tokens").alias("tok"))
-    pre = flat.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("cnt"))
-    merged = sketch_aggregate(
-        pre,
-        ["source"],
-        [SketchSpec("ss", "spacesaving", "tok", {"m": m}, count_col="cnt")],
-        fanout=4,
-    )
-    exact = {
-        (r["source"], r["tok"]): r["cnt"] for r in pre.collect()
-    }
-    totals: dict = {}
-    for (src, _), c in exact.items():
-        totals[src] = totals.get(src, 0) + c
-    rows = {r["source"]: bytes(r["state"]) for r in merged.collect()}
-    assert set(rows) == set(totals)
-    for src, blob in rows.items():
-        ss = load_state(blob)
-        n = totals[src]
-        assert ss.n == n and ss.err * (m + 1) <= n
-        items, f = ss.query(0.02)
-        for it, fv in zip(items.tolist(), f.tolist()):
-            ex = exact.get((src, it), 0)
-            assert fv <= ex and ex - fv <= ss.err
-        heavy = {t for (s, t), c in exact.items() if s == src and c >= 0.02 * n}
-        assert heavy <= set(items.tolist())
+    assert set(got) == {("a", "hll"), ("a", "cms")}
+    for spec in specs:
+        assert got[("a", spec.name)] == (_driver_state(spec, [1, 3, 4]), 3), spec.name

@@ -121,9 +121,9 @@ def test_consume_partials_states_identical_between_paths(monkeypatch):
         names=["g", "toks"],
     )
     specs = [
-        ("h", "hll", "toks", {"p": 10, "seed": 7}, None, None),
-        ("c", "cms", "toks", {"w": 256, "d": 3, "seed": 7}, None, None),
-        ("b", "bloom", "toks", {"m": 1 << 14, "k": 5, "seed": 7}, None, None),
+        ("h", "hll", "toks", {"p": 10, "seed": 7}, None),
+        ("c", "cms", "toks", {"w": 256, "d": 3, "seed": 7}, None),
+        ("b", "bloom", "toks", {"m": 1 << 14, "k": 5, "seed": 7}, None),
     ]
 
     def run(force_fallback):

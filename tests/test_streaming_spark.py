@@ -8,7 +8,12 @@ from pyspark.sql import functions as F
 from sketchlib.agg import SketchSpec, sketch_aggregate
 from sketchlib.estimates import hll_count
 from sketchlib.gen import sequences_df
-from sketchlib.streaming import current_states, sketch_stream_writer
+from sketchlib.streaming import (
+    current_states,
+    session_sketch_stream,
+    sketch_stream_writer,
+    windowed_sketch_stream,
+)
 
 SPECS = [
     SketchSpec("hll", "hll", "tokens", {"p": 12, "seed": 1}),
@@ -79,3 +84,28 @@ def test_stream_equals_batch(spark, stream_dirs):
     assert se == be
     for k in b:
         assert s[k][0] == b[k][0], f"state bytes differ for {k}"
+
+
+@pytest.mark.parametrize("operator", ["writer", "windowed", "session"])
+@pytest.mark.parametrize(
+    "specs",
+    [
+        [SketchSpec("x", "hll", "value"), SketchSpec("x", "cms", "value")],
+        [],
+    ],
+    ids=["duplicate-name", "empty"],
+)
+def test_stream_operators_reject_bad_spec_lists(spark, tmp_path, operator, specs):
+    """Every streaming operator keys its kernels and rows by spec name:
+    a repeated name or an empty list is a ValueError while the query is
+    being built, not two rows sharing one kernel."""
+    rate = spark.readStream.format("rate").load().withColumn("g", F.col("value") % 2)
+    build = {
+        "writer": lambda: sketch_stream_writer(
+            rate, ["g"], specs, str(tmp_path / "state"), str(tmp_path / "ckpt")
+        ),
+        "windowed": lambda: windowed_sketch_stream(rate, "timestamp", ["g"], specs),
+        "session": lambda: session_sketch_stream(rate, "timestamp", ["g"], specs),
+    }[operator]
+    with pytest.raises(ValueError, match="duplicate sketch names|at least one SketchSpec"):
+        build()

@@ -9,24 +9,12 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def build(out: str) -> str:
-    pkg = os.path.join(REPO, "sketchlib")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith((".py", ".npz")):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
-    return out
-
+from sketchlib.session import build_pyfiles_zip  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "sketchlib.zip")
-    print(build(out))
+    print(build_pyfiles_zip(out))
