@@ -8,7 +8,13 @@ stage 1 (*build partials*, :func:`build_partials`)
     rows (NO shuffle of raw data; at 100 TB the raw table never moves)
     and emits one tiny state row per (group, sketch) it saw. Token
     arrays flow zero-copy: Arrow ``ListArray.flatten()`` → numpy → the
-    vectorized kernels. No per-row Python anywhere.
+    vectorized kernels. No per-row Python anywhere. One consumer,
+    :func:`_consume_partials`, does this for every operator: the JVM
+    feed, the direct split feed (:func:`build_partials_direct`, one
+    partial per key per task, ``part_id`` = the task's first file index)
+    and the stateful stream operators (``sketchlib.streaming``), which
+    merge its partials into their state. Resume is the JVM feed's
+    (``build_partials(skip_parts=)``, :mod:`sketchlib.checkpoint`).
 
 stage 2 (*tree merge*, :func:`merge_partials`)
     the only shuffle in the job moves kilobyte-scale state rows. A
@@ -142,10 +148,12 @@ _PA_BY_SPARK = {
 
 
 def _pa_type(dt: DataType) -> pa.DataType:
+    if isinstance(dt, ArrayType):
+        return pa.list_(_pa_type(dt.elementType))
     for k, v in _PA_BY_SPARK.items():
         if isinstance(dt, k):
             return v
-    raise TypeError(f"unsupported group column type for sketch agg: {dt}")
+    raise TypeError(f"unsupported column type for sketch agg: {dt}")
 
 
 def partials_schema(df: DataFrame, group_cols: list[str]) -> StructType:
@@ -357,10 +365,11 @@ def _consume_partials(
 ):
     """Shared stage-1 consumer: fold a stream of Arrow record batches
     into per-(group, sketch) kernels and yield ONE partials record
-    batch. Both feeds use this verbatim — the default JVM-scan feed
-    (:func:`build_partials`) and the direct parquet-split feed
-    (:func:`build_partials_direct`) — so their states are built by
-    byte-identical code and differ only in partition boundaries."""
+    batch. Every operator that updates kernels uses this verbatim — the
+    default JVM-scan feed (:func:`build_partials`), the direct
+    parquet-split feed (:func:`build_partials_direct`) and the stateful
+    stream operators — so their states are built by byte-identical code
+    and differ only in partition boundaries."""
     states: dict = {}  # (gkey, name) -> kernel
     n_updates: dict = {}
     n_rows: dict = {}
@@ -568,8 +577,8 @@ def build_partials(
 
 def _resolve_split_files(source: str | list[str]) -> list[str]:
     """Driver-side split list for the direct feed: a parquet file, a
-    directory of part files, or an explicit manifest (sorted so
-    ``part_id`` = index is stable across reruns and cluster sizes)."""
+    directory of part files, or an explicit manifest (sorted so a
+    task's file range, and its ``part_id``, is stable across reruns)."""
     import glob as _glob
 
     if isinstance(source, str):
@@ -622,15 +631,30 @@ def resolve_fanout(fanout: int | None | str, fan_in: Callable[[], int]) -> int |
     return auto_fanout(fan_in())
 
 
+# rows per record batch a direct-feed task reads from a file: bounds
+# per-task memory, a task never holds more than one batch of a file
+DIRECT_BATCH_ROWS = 1 << 16
+
+
+def _direct_tasks(spark, n_files: int, tasks: int | None) -> int:
+    """Task count of the direct feed: ``tasks`` or 2 × defaultParallelism,
+    capped at the file count. One wave of parallelism-sized tasks
+    measures 0.06 s faster on a quiet 4-vCPU host (1.06 vs 1.12 s over
+    48 files) but has zero straggler slack — under exogenous load bursts
+    the leg swung 3.9–9.0 s vs a steady ~3.6 s at 2× (32 CPUs). Keep 2×:
+    scheduling freedom beats the quiet-host win on any shared machine."""
+    if tasks is None:
+        tasks = 2 * spark.sparkContext.defaultParallelism
+    return max(1, min(n_files, tasks))
+
+
 def build_partials_direct(
     spark,
     source: str | list[str],
     group_cols: list[str],
     specs: list[SketchSpec],
-    skip_parts: frozenset[int] | None = None,
-    batch_rows: int = 1 << 16,
     tasks: int | None = None,
-    premerge: bool = False,
+    premerge: bool = True,
 ) -> DataFrame:
     """Stage 1 over parquet SPLITS read directly by the Python workers
     (pyarrow ``iter_batches``), bypassing the JVM scan → row →
@@ -641,19 +665,25 @@ def build_partials_direct(
 
     The work is still distributed BY SPARK — a ``spark.range`` over
     file indices packs the SORTED file list into ``tasks`` partitions
-    (default ``2 × defaultParallelism``, cap ``n_files``: measured on
-    4 vCPUs over 48 files, one task per file costs 2.0 s and 6.8
-    core-s against 1.1 s and 3.7 core-s for 8 tasks, ~0.08 core-s of
-    fixed Python-task cost per extra task even with the
-    :mod:`sketchlib._daemon` worker path, 0.23 core-s without it; a
-    handful of files per task amortizes it while range packing keeps
-    ±1-file balance). Each file still streams through its OWN call of the
-    SAME consumer as the default feed (:func:`_consume_partials`,
-    byte-identical kernel code), so ``part_id`` stays the index into
-    the sorted file list — stable across reruns AND cluster sizes,
-    which makes checkpoint resume (``skip_parts``) per-FILE and
-    deterministic rather than scheduler-dependent. Only kilobyte state
-    rows leave the task; stage 2 is unchanged.
+    (see :func:`_direct_tasks`: measured on 4 vCPUs over 48 files, one
+    task per file costs 2.0 s and 6.8 core-s against 1.1 s and 3.7
+    core-s for 8 tasks, ~0.08 core-s of fixed Python-task cost per extra
+    task even with the :mod:`sketchlib._daemon` worker path, 0.23 core-s
+    without it; a handful of files per task amortizes it while range
+    packing keeps ±1-file balance). A task folds ALL its files through
+    one call of the SAME consumer as the default feed
+    (:func:`_consume_partials`, byte-identical kernel code) — map-side
+    combine, guide §2.3 "aggregate before you shuffle": one partial per
+    (group, sketch) per TASK, so the job's only shuffle shrinks by the
+    files-per-task factor (measured 86 MB → ~11 MB at the bench shape,
+    8 files/task). ``part_id`` is the task's first file index
+    (deterministic for a given file list and ``tasks``). Final states
+    are byte-identical for the byte-commutative kinds (hll/cms/bloom/
+    kmv/ams — merge order invisible); order-sensitive kinds agree within
+    their published bounds, exactly as any repartition does. There is
+    no per-file resume: resume is the JVM feed's
+    (:mod:`sketchlib.checkpoint`). ``premerge`` is accepted only as
+    True, the one mode.
 
     At 100 TB the ``source`` list is the table's file (or split)
     manifest — for Iceberg, the data files of the pinned snapshot
@@ -664,24 +694,9 @@ def build_partials_direct(
     string-valued sketch columns are NOT supported (the default feed
     hashes them JVM-side with ``xxhash64``; replicating Spark's exact
     hash in Python would fork the hash contract) — pre-tokenized
-    integer corpora (the north-rule input shape) are the target.
-    ``batch_rows`` bounds per-task memory: a task never materializes
-    more than one record batch of its file at a time.
-
-    ``premerge=True`` (map-side combine, guide §2.3 "aggregate before
-    you shuffle"): a task folds ALL its files through one consumer
-    call, emitting one partial per (group, sketch) per TASK instead of
-    per FILE — the stage-1→stage-2 Arrow traffic and the job's only
-    shuffle shrink by the files-per-task factor (measured 86 MB → ~11
-    MB at the bench shape, 8 files/task). ``part_id`` becomes the
-    task's first file id (still deterministic). Final states are
-    byte-identical for the byte-commutative kinds (hll/cms/bloom/kmv/
-    ams — merge order invisible); order-sensitive kinds agree within
-    their published bounds, exactly as any repartition does. Not
-    compatible with ``skip_parts`` resume (which needs per-FILE
-    partials) — callers pass it only when skip_parts is None."""
-    if premerge and skip_parts:
-        raise ValueError("premerge folds files per task; resume needs per-file partials")
+    integer corpora (the north-rule input shape) are the target."""
+    if not premerge:
+        raise ValueError("build_partials_direct always pre-merges per task")
     files = _resolve_split_files(source)
     # schema from the parquet footer (driver-side, no job)
     narrow, consume = _plan_stage1(spark.read.parquet(files[0]), group_cols, specs)
@@ -708,32 +723,21 @@ def build_partials_direct(
         import pyarrow.parquet as pq
 
         manifest = bfiles.value
-        if premerge:
-            fids = [int(f) for batch in batches for f in batch.column("id").to_pylist()]
-            if not fids:
-                return
-
-            def feed_all():
-                for fid in fids:
-                    pf = pq.ParquetFile(manifest[fid])
-                    yield from pf.iter_batches(batch_size=batch_rows, columns=needed)
-
-            yield from consume(feed_all(), min(fids))
+        fids = [int(f) for batch in batches for f in batch.column("id").to_pylist()]
+        if not fids:
             return
-        for batch in batches:
-            for fid in batch.column("id").to_pylist():
-                fid = int(fid)
-                if skip_parts and fid in skip_parts:
-                    continue
+
+        def feed():
+            for fid in fids:
                 pf = pq.ParquetFile(manifest[fid])
-                feed = pf.iter_batches(batch_size=batch_rows, columns=needed)
-                yield from consume(feed, fid)
+                yield from pf.iter_batches(batch_size=DIRECT_BATCH_ROWS, columns=needed)
+
+        yield from consume(feed(), min(fids))
 
     n = len(files)
-    if tasks is None:
-        tasks = 2 * spark.sparkContext.defaultParallelism
-    tasks = max(1, min(n, tasks))
-    return spark.range(0, n, 1, tasks).mapInArrow(fn, partials_schema(narrow, group_cols))
+    return spark.range(0, n, 1, _direct_tasks(spark, n, tasks)).mapInArrow(
+        fn, partials_schema(narrow, group_cols)
+    )
 
 
 def sketch_aggregate_direct(
@@ -742,7 +746,6 @@ def sketch_aggregate_direct(
     group_cols: list[str],
     specs: list[SketchSpec],
     fanout: int | None | str = "auto",
-    skip_parts: frozenset[int] | None = None,
     tasks: int | None = None,
 ) -> DataFrame:
     """Direct-feed build + merge (see :func:`build_partials_direct`):
@@ -754,34 +757,14 @@ def sketch_aggregate_direct(
     bounds, exactly as any repartition of the default feed does.
 
     ``fanout="auto"`` (the default) resolves via :func:`resolve_fanout`
-    from a per-key partial bound that is free here: the task count when
-    stage 1 pre-merges (one partial per key per task), the file count
-    on resume (one per key per file). Below 256 that is one shuffle and
-    one merge pass — the bench-scale build's 8 pre-merged partials per
-    key no longer pay for a salted level that merges nothing.
-
-    Without ``skip_parts`` (no resume in play) stage 1 pre-merges per
-    task (see :func:`build_partials_direct` ``premerge``): the shuffle
-    and merge fan-in shrink by the files-per-task factor and the final
-    states are unchanged (byte-identical for the byte-commutative
-    kinds)."""
+    from the task count, a free per-key partial bound (stage 1 emits one
+    partial per key per task). Below 256 that is one shuffle and one
+    merge pass — the bench-scale build's 8 partials per key pay for no
+    salted level that merges nothing."""
     files = _resolve_split_files(source)
-    premerge = not skip_parts
-    if tasks is None:
-        # one wave of parallelism-sized tasks measures 0.06 s faster on
-        # a quiet 4-vCPU host (1.06 vs 1.12 s over 48 files) but has
-        # zero straggler slack — under exogenous load bursts the leg
-        # swung 3.9–9.0 s vs a steady ~3.6 s at 2× (32 CPUs). Keep 2×:
-        # scheduling freedom beats the quiet-host win on any shared
-        # machine.
-        tasks = 2 * spark.sparkContext.defaultParallelism
-    tasks = max(1, min(len(files), tasks))
-    partials = build_partials_direct(
-        spark, files, group_cols, specs, skip_parts=skip_parts, tasks=tasks,
-        premerge=premerge,
-    )
-    fanout = resolve_fanout(fanout, lambda: tasks if premerge else len(files))
-    return merge_partials(partials, group_cols, fanout)
+    tasks = _direct_tasks(spark, len(files), tasks)
+    partials = build_partials_direct(spark, files, group_cols, specs, tasks=tasks)
+    return merge_partials(partials, group_cols, resolve_fanout(fanout, lambda: tasks))
 
 
 # ---------------------------------------------------------------------------
@@ -825,14 +808,16 @@ def _make_merge_fn(group_cols: list[str]):
 def merge_partials(
     partials: DataFrame,
     group_cols: list[str],
-    fanout: int | None = 32,
+    fanout: int | None = None,
 ) -> DataFrame:
     """Stage 2: reduce partial state rows to one row per (group, sketch).
 
     ``fanout`` enables the salted intermediate level: partials are first
     merged within ``pmod(part_id, fanout)`` buckets (bounding reducer
     fan-in), then across buckets. Associativity/commutativity of every
-    kernel merge makes the tree shape invisible in the result.
+    kernel merge makes the tree shape invisible in the result. The
+    default None is one merge level, as ``fanout="auto"`` resolves to at
+    the entry points below 256 partials per key.
     """
     if isinstance(fanout, str):
         raise ValueError(

@@ -24,17 +24,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .agg import SketchSpec, build_partials, merge_partials, resolve_fanout
+from .io import path_exists
 
 LINEAGE_COLS = ["fingerprint", "updated_at"]
 
 
 def _existing_parts(spark, ckpt_path: str, fingerprint: str) -> frozenset[int]:
-    try:
-        existing = spark.read.parquet(ckpt_path)
-    except Exception:
+    """Partition ids this fingerprint has checkpointed. An absent path
+    means none, and so does a directory without data files (an aborted
+    first append leaves one): the explicit schema spares the read the
+    schema inference that fails on it. Any other read failure raises
+    here, before stage 1 runs, instead of re-building every partition
+    and appending its partials a second time."""
+    if not path_exists(spark, ckpt_path):
         return frozenset()
     rows = (
-        existing.filter(F.col("fingerprint") == fingerprint)
+        spark.read.schema("fingerprint string, part_id int")
+        .parquet(ckpt_path)
+        .filter(F.col("fingerprint") == fingerprint)
         .select("part_id")
         .distinct()
         .collect()

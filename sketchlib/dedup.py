@@ -509,7 +509,7 @@ def connected_components(
         # near-dup join) re-runs per consumer
     )
 
-    def fingerprint(df: DataFrame):
+    def edge_digest(df: DataFrame):
         lo, hi = F.least("a", "b"), F.greatest("a", "b")
         row = df.select(
             F.count(F.lit(1)).alias("n"),
@@ -546,7 +546,7 @@ def connected_components(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        cur = fingerprint(e)
+        cur = edge_digest(e)
         if cur == prev:
             break
         prev = cur

@@ -17,6 +17,17 @@ def _is_path(ident: str) -> bool:
     return "/" in ident or ident.startswith(("file:", "hdfs:", "s3:", "s3a:", "gs:"))
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Filesystem-agnostic existence probe via the Hadoop FileSystem API
+    (works for local, HDFS, and object stores alike). Used instead of
+    catching the read's exception: path-not-found is the ONLY condition
+    that may mean "nothing written yet" — any other read failure
+    (corrupt file, schema drift) must propagate."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
 def iceberg_available(spark: SparkSession) -> bool:
     # py4j package traversal (spark._jvm.org.apache...) never raises —
     # it builds JavaPackage objects lazily — so probe with an actual

@@ -17,15 +17,53 @@ double-counting.
 Reads merge on the fly (:func:`current_states`); :func:`compact`
 folds all batch partitions into one to bound read fan-in on
 long-running streams.
+
+The stateful operators (:func:`windowed_sketch_stream`,
+:func:`session_sketch_stream`) keep one ``{sketch: (state, n_updates)}``
+value per open key and fold a key's new rows into it by merging the
+partials of the same stage-1 consumer the batch path runs
+(``agg._consume_partials``) — the merge contract again, so a finalized
+state equals a batch build of its rows (bytes for the byte-commutative
+kinds, published bounds for the rest).
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import pickle
+import time
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-from .agg import SketchSpec, _check_specs, build_partials, merge_partials, resolve_fanout
+from .agg import (
+    SketchSpec,
+    _check_specs,
+    _pa_type,
+    _plan_stage1,
+    _resolve_specs,
+    build_partials,
+    load_state,
+    merge_partials,
+    resolve_fanout,
+)
+from .io import path_exists
+
+_log = logging.getLogger(__name__)
 
 _BATCH_COL = "batch_id"
 
@@ -114,6 +152,45 @@ def compact(
 # ---------------------------------------------------------------------------
 
 
+def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
+    """``(hashed, fold)`` for the stateful operators: ``hashed`` is the
+    stream with string inputs pre-hashed (as the batch path does), and
+    ``fold(kernels, pdf)`` runs the batch path's stage-1 consumer over a
+    key's rows and merges each partial into the ``{name: (blob,
+    n_updates)}`` state. A spec with no state yet takes the partial's
+    bytes as they are; a spec still without state afterwards (no
+    non-null value so far) gets an empty kernel, so every emitted window
+    or session has one row per spec.
+
+    The rows go to Arrow with the types of the stream's Spark schema:
+    pandas hands nullable longs over as float64, which the hashed kinds
+    must not see."""
+    hashed, rspecs = _resolve_specs(stream_df, specs)
+    narrow, consume = _plan_stage1(hashed, [], rspecs)  # checks the specs
+    schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in narrow.schema])
+
+    def fold(kernels: dict, pdf) -> dict:
+        batch = pa.RecordBatch.from_pandas(
+            pdf[schema.names], schema=schema, preserve_index=False
+        )
+        out = dict(kernels)
+        for part in consume([batch], 0):
+            cols = (part.column(c).to_pylist() for c in ("sketch", "state", "n_updates"))
+            for name, blob, n in zip(*cols):
+                if name in out:
+                    kernel = load_state(out[name][0])
+                    kernel.merge(load_state(blob))
+                    out[name] = (kernel.to_bytes(), out[name][1] + n)
+                else:
+                    out[name] = (blob, n)
+        for s in rspecs:
+            if s.name not in out:
+                out[s.name] = (s.make().to_bytes(), 0)
+        return out
+
+    return hashed, fold
+
+
 def windowed_sketch_stream(
     stream_df: DataFrame,
     ts_col: str,
@@ -131,44 +208,22 @@ def windowed_sketch_stream(
     duration/slide kernels — state stays one blob per OPEN (window,
     group) key either way.
 
-    Each (window, group) key accumulates one kernel per spec in the
-    Spark state store (serialized KB-scale blobs — same codec as the
-    batch path); when the watermark passes ``window_end +
+    Each (window, group) key keeps one state per spec in the Spark
+    state store (serialized KB-scale blobs — same codec as the batch
+    path), and a micro-batch's rows merge in as stage-1 partials
+    (:func:`_state_folder`); when the watermark passes ``window_end +
     watermark_delay`` the state times out and the FINAL merged states
     are appended downstream, exactly once per window. Late rows beyond
     the watermark cannot resurrect an emitted window: the function
     drops data for already-expired windows explicitly, so the append
     contract holds even if the engine delivers stragglers.
 
-    This is the streaming dual of :func:`sketchlib.agg.build_partials`
-    + merge: kernels are associative/commutative (reference
-    merge-equivalence contract), so per-micro-batch accumulation order
-    never changes the finalized state for order-insensitive kernels
-    (HLL/CMS/Bloom/KLL).
-
     Output rows: ``window_start, window_end, group_cols..., sketch,
     state, n_updates`` — readable by the same estimate UDFs as batch
     states.
     """
-    import pickle
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from .agg import _NUMERIC_KINDS, _resolve_specs, load_state
-    from .hashing import unique_counts
-
-    _check_specs(specs)  # kernels are keyed by spec name below
-    hashed, rspecs = _resolve_specs(stream_df, specs)
+    hashed, fold = _state_folder(stream_df, specs)
+    names = [s.name for s in specs]
     delay_ms = int(pd.Timedelta(watermark_delay).total_seconds() * 1000)
     win = F.window(F.col(ts_col), window_duration, slide_duration or window_duration)
     # materialize the window struct ONCE: referencing win.start and
@@ -193,11 +248,8 @@ def windowed_sketch_stream(
     ]
     out_schema = StructType(out_fields)
     state_schema = StructType([StructField("pkl", BinaryType(), True)])
-    specs_payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in rspecs]
 
     def fn(key, pdfs, state: GroupState):
-        from .agg import KERNELS
-
         win_end_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
         expiry_ms = win_end_ms + delay_ms
         if state.hasTimedOut:
@@ -205,62 +257,23 @@ def windowed_sketch_stream(
             kernels = pickle.loads(bytes(pkl))
             state.remove()
             rows = {
-                "window_start": [key[0]] * len(specs_payload),
-                "window_end": [key[1]] * len(specs_payload),
+                "window_start": [key[0]] * len(names),
+                "window_end": [key[1]] * len(names),
             }
             for i, c in enumerate(group_cols):
-                rows[c] = [key[2 + i]] * len(specs_payload)
-            rows["sketch"] = [name for name, *_ in specs_payload]
-            rows["state"] = [kernels[name][0] for name, *_ in specs_payload]
-            rows["n_updates"] = [kernels[name][1] for name, *_ in specs_payload]
+                rows[c] = [key[2 + i]] * len(names)
+            rows["sketch"] = names
+            rows["state"] = [kernels[name][0] for name in names]
+            rows["n_updates"] = [kernels[name][1] for name in names]
             yield pd.DataFrame(rows)
             return
         # a straggler for an already-finalized window: drop, never re-emit
         if state.getCurrentWatermarkMs() >= expiry_ms:
             return
-        kernels = (
-            pickle.loads(bytes(state.get[0])) if state.exists else
-            {name: (KERNELS[kind](**params).to_bytes(), 0)
-             for name, kind, _, params, _ in specs_payload}
-        )
-        live = {name: load_state(blob) for name, (blob, _) in kernels.items()}
-        counts = {name: n for name, (_, n) in kernels.items()}
+        kernels = pickle.loads(bytes(state.get[0])) if state.exists else {}
         for pdf in pdfs:
-            for name, kind, col, params, wcol in specs_payload:
-                vals = pdf[col].dropna()
-                if not len(vals):
-                    continue
-                k = live[name]
-                if kind in _NUMERIC_KINDS:
-                    if kind == "tdigest" and wcol is not None:
-                        # same contract as the batch path
-                        # (agg.build_partials): a value with a null
-                        # weight (or vice versa) is a data error, not a
-                        # row to silently drop — stream and batch must
-                        # agree on the same input
-                        if (pdf[col].isna() != pdf[wcol].isna()).any():
-                            raise ValueError(
-                                f"weight col {wcol} nulls misaligned with {col}"
-                            )
-                        aligned = pdf[[col, wcol]].dropna()
-                        k.update(
-                            aligned[col].to_numpy(dtype="float64"),
-                            aligned[wcol].to_numpy(dtype="float64"),
-                        )
-                        counts[name] += len(aligned)
-                    else:
-                        k.update(vals.to_numpy(dtype="float64"))
-                        counts[name] += len(vals)
-                else:
-                    v = vals.to_numpy(dtype="int64")
-                    if kind == "lossy":
-                        k.update(v)
-                    else:
-                        k.update_unique(*unique_counts(v))
-                    counts[name] += len(vals)
-        state.update((pickle.dumps(
-            {name: (live[name].to_bytes(), counts[name]) for name in live}
-        ),))
+            kernels = fold(kernels, pdf)
+        state.update((pickle.dumps(kernels),))
         state.setTimeoutTimestamp(max(expiry_ms, state.getCurrentWatermarkMs() + 1))
 
     return keyed.groupBy(*gcols).applyInPandasWithState(
@@ -274,18 +287,6 @@ def windowed_sketch_stream(
 
 
 _BUCKET_COL = "__bkt"
-
-
-def _hdfs_path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence probe via the Hadoop FileSystem API
-    (works for local, HDFS, and object stores alike). Used instead of
-    catching AnalysisException on read: path-not-found is the ONLY
-    condition that may fall back to an empty history — any other
-    analysis failure (corrupt store, schema drift) must propagate."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
 
 
 def _read_store(
@@ -311,8 +312,6 @@ def _read_store(
     of this batch) is overwriting — and a file vanishing mid-listing
     fails the read. With explicit paths the in-flight generation is
     never touched."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     full = StructType(
         [
             *data_schema.fields,
@@ -355,11 +354,7 @@ def _read_store(
     return df.drop(_BATCH_COL, _BUCKET_COL)
 
 
-def _enable_batch_aqe(
-    spark: SparkSession,
-    shuffle_partitions: int | None = None,
-    adaptive: bool | None = None,
-) -> None:
+def _enable_batch_aqe(spark: SparkSession, shuffle_partitions: int | None = None) -> None:
     """Structured Streaming disables AQE on the query's cloned session
     (it is unsupported for *streaming* plans), but the DataFrame actions
     a foreachBatch body runs are plain BATCH queries — re-enabling AQE
@@ -377,19 +372,16 @@ def _enable_batch_aqe(
     Size the override to the TRIGGER volume, not the cluster (measured
     at sf0.1: 32 → 8 cut the candidate phase ~20%).
 
-    ``adaptive=None`` (auto) DISABLES AQE when the caller set an
-    explicit ``shuffle_partitions``: an explicitly-sized body leaves
-    AQE nothing to coalesce (its shuffles are already trigger-sized,
-    and the persisted ones are uncoalescible regardless), so all AQE
-    contributes is one extra adaptive re-plan job round-trip per
-    shuffle stage — measured 17.8–18.1 s → 14.3–16.1 s warm on the
-    4-batch near-dup query at sf0.1 (identical 256 output pairs).
-    Large deployments that leave ``shuffle_partitions=None`` keep AQE
-    (runtime coalescing + broadcast conversion are worth the per-stage
-    round-trips when batch volumes actually vary); ``adaptive=True`` /
-    ``False`` forces either choice."""
-    adaptive_on = adaptive if adaptive is not None else not shuffle_partitions
-    spark.conf.set("spark.sql.adaptive.enabled", str(adaptive_on).lower())
+    AQE is off exactly when ``shuffle_partitions`` is set: an
+    explicitly-sized body leaves AQE nothing to coalesce (its shuffles
+    are already trigger-sized, and the persisted ones are uncoalescible
+    regardless), so all AQE contributes is one extra adaptive re-plan
+    job round-trip per shuffle stage — measured 17.8–18.1 s → 14.3–16.1
+    s warm on the 4-batch near-dup query at sf0.1 (identical 256 output
+    pairs). Large deployments that leave ``shuffle_partitions=None``
+    keep AQE (runtime coalescing + broadcast conversion are worth the
+    per-stage round-trips when batch volumes actually vary)."""
+    spark.conf.set("spark.sql.adaptive.enabled", str(not shuffle_partitions).lower())
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # coalesce to the advisory partition SIZE, not the cluster's
     # default parallelism: a micro-batch's internal shuffles are KB-to-
@@ -436,7 +428,6 @@ def neardup_stream_writer(
     bucket_cap: int | None = 4096,
     n_buckets: int = 16,
     batch_shuffle_partitions: int | None = None,
-    batch_adaptive: bool | None = None,
 ):
     """Incremental near-dup detection: every micro-batch's docs are
     MinHash-banded and matched against all previously seen docs via the
@@ -472,10 +463,14 @@ def neardup_stream_writer(
       body persists its intermediates and AQE cannot coalesce cached
       shuffles, so an oversized session width costs pure scheduling per
       batch. None keeps the session setting. Setting it also disables
-      AQE for the bodies by default (``batch_adaptive=None`` auto —
-      see :func:`_enable_batch_aqe`): an explicitly-sized body gains
-      nothing from runtime coalescing and pays one adaptive re-plan
-      job per shuffle stage (~3.5 s of the 4-batch query at sf0.1).
+      AQE for the bodies (see :func:`_enable_batch_aqe`): an
+      explicitly-sized body gains nothing from runtime coalescing and
+      pays one adaptive re-plan job per shuffle stage (~3.5 s of the
+      4-batch query at sf0.1).
+
+    Each non-empty trigger logs one DEBUG record on the
+    ``sketchlib.streaming`` logger with ``batch_id``, ``total_s`` and
+    ``phases`` (seconds per phase) as record attributes.
 
     Re-ingest guard: a ``doc_id`` that already exists in the store is
     dropped from the batch (its pairs were emitted when first seen), so
@@ -485,14 +480,6 @@ def neardup_stream_writer(
     with other content is undefined (the guard only sees history in the
     buckets the new signature touches).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from .dedup import (
         DEFAULT_SEED,
         _signature_fn,
@@ -509,21 +496,17 @@ def neardup_stream_writer(
     cnt_dir = os.path.join(store_path, "counts")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
+        t0 = time.perf_counter()
+        marks: list[tuple[str, float]] = []
 
-        _dbg = os.environ.get("SKETCHLIB_STREAM_TIMING") == "1"
-        _t0 = _time.time()
-        _marks: list[tuple[str, float]] = []
-
-        def _mark(label: str) -> None:
-            if _dbg:
-                _marks.append((label, _time.time() - _t0))
+        def mark(label: str) -> None:
+            marks.append((label, time.perf_counter()))
 
         if batch_df.isEmpty():
             return
-        _mark("isEmpty")
+        mark("isEmpty")
         spark = batch_df.sparkSession
-        _enable_batch_aqe(spark, batch_shuffle_partitions, batch_adaptive)
+        _enable_batch_aqe(spark, batch_shuffle_partitions)
         bid = int(batch_id)
         # fan the trigger's files out BEFORE the shingle+signature Arrow
         # pass: a 1-file trigger otherwise runs the heaviest per-batch
@@ -565,7 +548,7 @@ def neardup_stream_writer(
                 StructField("n", LongType(), False),
             ]
         )
-        has_history = _hdfs_path_exists(spark, keys_dir)
+        has_history = path_exists(spark, keys_dir)
         if has_history:
             # the batch's keys determine which store buckets can possibly
             # match: collect that (<= n_buckets ints) and prune the read
@@ -573,7 +556,7 @@ def neardup_stream_writer(
                 r[0]
                 for r in brows.select(key_bucket.cast("int").alias("b")).distinct().collect()
             ]
-            _mark("touched_collect")
+            mark("touched_collect")
             hist = _read_store(spark, keys_dir, brows.schema, bid, touched).persist()
             hist_cnt = _read_store(spark, cnt_dir, cnt_schema, bid, touched)
         else:  # first batch: nothing seen yet
@@ -685,7 +668,7 @@ def neardup_stream_writer(
                     .distinct()
                     .collect()
                 ]
-                _mark("cand_collect")
+                mark("cand_collect")
                 hist_sh = _read_store(
                     spark, sh_dir, shingles.schema, bid, cand_buckets
                 ).join(cand_ids, "doc_id", "left_semi")
@@ -704,7 +687,7 @@ def neardup_stream_writer(
             # the same batch directory could corrupt the store)
             for t in threads:
                 t.join()
-        _mark("writes")
+        mark("writes")
         if errs:
             raise errs[0]
         for df in persisted:
@@ -712,20 +695,18 @@ def neardup_stream_writer(
                 df.unpersist()
             except Exception:
                 pass
-        if _dbg:
-            import sys as _sys
-
-            steps = []
-            prev = 0.0
-            for label, t in _marks:
-                steps.append(f"{label}={t - prev:.2f}")
-                prev = t
-            print(
-                f"[stream-timing] batch={bid} total={_time.time() - _t0:.2f} "
-                + " ".join(steps),
-                file=_sys.stderr,
-                flush=True,
-            )
+        phases, prev = {}, t0
+        for label, t in marks:
+            phases[label] = t - prev
+            prev = t
+        total = time.perf_counter() - t0
+        _log.debug(
+            "near-dup trigger batch_id=%d total=%.2fs %s",
+            bid,
+            total,
+            " ".join(f"{k}={v:.2f}" for k, v in phases.items()),
+            extra={"batch_id": bid, "total_s": total, "phases": phases},
+        )
 
     return (
         stream_df.writeStream.foreachBatch(process_batch)
@@ -742,7 +723,7 @@ def neardup_compact(spark: SparkSession, store_path: str, compact_path: str) -> 
     ``compact_path`` in atomically (same contract as :func:`compact`)."""
     for sub, agg in (("keys", None), ("shingles", None), ("counts", "sum")):
         src = os.path.join(store_path, sub)
-        if not _hdfs_path_exists(spark, src):
+        if not path_exists(spark, src):
             continue
         df = spark.read.parquet(src)
         if agg == "sum":
@@ -820,26 +801,8 @@ def session_sketch_stream(
     time), sketch, state, n_updates`` — readable by the same estimate
     UDFs as batch states.
     """
-    import pickle
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from .agg import _NUMERIC_KINDS, _resolve_specs, load_state
-    from .hashing import unique_counts
-
-    _check_specs(specs)  # kernels are keyed by spec name below
-    hashed, rspecs = _resolve_specs(stream_df, specs)
+    hashed, fold = _state_folder(stream_df, specs)
+    names = [s.name for s in specs]
     # all event-time arithmetic in MICROSECONDS (the column's native
     # precision — ms truncation would corrupt session_start as a join
     # key against batch session_window output); the state API's
@@ -857,55 +820,17 @@ def session_sketch_stream(
     ]
     out_schema = StructType(out_fields)
     state_schema = StructType([StructField("pkl", BinaryType(), True)])
-    specs_payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in rspecs]
 
     def emit_frame(key, start_us: int, end_us: int, kernels: dict) -> pd.DataFrame:
         rows = {}
         for i, c in enumerate(key_cols):
-            rows[c] = [key[i]] * len(specs_payload)
-        rows["session_start"] = [pd.Timestamp(start_us, unit="us")] * len(specs_payload)
-        rows["session_end"] = [pd.Timestamp(end_us, unit="us")] * len(specs_payload)
-        rows["sketch"] = [name for name, *_ in specs_payload]
-        rows["state"] = [kernels[name][0] for name, *_ in specs_payload]
-        rows["n_updates"] = [kernels[name][1] for name, *_ in specs_payload]
+            rows[c] = [key[i]] * len(names)
+        rows["session_start"] = [pd.Timestamp(start_us, unit="us")] * len(names)
+        rows["session_end"] = [pd.Timestamp(end_us, unit="us")] * len(names)
+        rows["sketch"] = names
+        rows["state"] = [kernels[name][0] for name in names]
+        rows["n_updates"] = [kernels[name][1] for name in names]
         return pd.DataFrame(rows)
-
-    def fresh_kernels():
-        from .agg import KERNELS
-
-        return {
-            name: (KERNELS[kind](**params).to_bytes(), 0)
-            for name, kind, _, params, _ in specs_payload
-        }
-
-    def update_kernels(kernels: dict, pdf: pd.DataFrame) -> dict:
-        live = {name: load_state(blob) for name, (blob, _) in kernels.items()}
-        counts = {name: n for name, (_, n) in kernels.items()}
-        for name, kind, col, params, wcol in specs_payload:
-            vals = pdf[col].dropna()
-            if not len(vals):
-                continue
-            k = live[name]
-            if kind in _NUMERIC_KINDS:
-                if kind == "tdigest" and wcol is not None:
-                    if (pdf[col].isna() != pdf[wcol].isna()).any():
-                        raise ValueError(f"weight col {wcol} nulls misaligned with {col}")
-                    aligned = pdf[[col, wcol]].dropna()
-                    k.update(
-                        aligned[col].to_numpy(dtype="float64"),
-                        aligned[wcol].to_numpy(dtype="float64"),
-                    )
-                    counts[name] += len(aligned)
-                    continue
-                k.update(vals.to_numpy(dtype="float64"))
-            else:
-                v = vals.to_numpy(dtype="int64")
-                if kind == "lossy":
-                    k.update(v)
-                else:
-                    k.update_unique(*unique_counts(v))
-            counts[name] += len(vals)
-        return {name: (live[name].to_bytes(), counts[name]) for name in live}
 
     def fn(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -942,12 +867,12 @@ def session_sketch_stream(
                 open_sess = (
                     min(open_sess[0], s0),
                     max(open_sess[1], s1),
-                    update_kernels(open_sess[2], seg_pdf),
+                    fold(open_sess[2], seg_pdf),
                 )
             else:
                 if open_sess is not None:  # closed by this newer segment
                     yield emit_frame(key, open_sess[0], open_sess[1], open_sess[2])
-                open_sess = (s0, s1, update_kernels(fresh_kernels(), seg_pdf))
+                open_sess = (s0, s1, fold({}, seg_pdf))
         state.update((pickle.dumps(open_sess),))
         timeout_ms = -(-(open_sess[1] + gap_us + delay_us) // 1000)  # ceil to ms
         state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))

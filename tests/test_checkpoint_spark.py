@@ -81,3 +81,35 @@ def test_distinct_fingerprints_coexist(spark, seq_small, tmp_path):
     b = _final_states(checkpointed_sketch_aggregate(df, ["source"], SPECS, ckpt, "fp-b", fanout=None))
     assert a == b
     assert lineage_summary(spark, ckpt).count() == 2
+
+
+def test_unreadable_checkpoint_raises_before_rebuild(spark, seq_small, tmp_path):
+    """A checkpoint that exists but cannot be read is an error, not an
+    empty history: resuming must raise before stage 1 appends a second
+    copy of every partition's partials."""
+    import glob
+    import os
+
+    ckpt = str(tmp_path / "ckpt4")
+    df = seq_small.repartition(4)
+    checkpointed_sketch_aggregate(df, ["source"], SPECS, ckpt, FP, fanout=None).collect()
+    for name in ("0-garbage.parquet", "1-garbage.parquet"):
+        with open(os.path.join(ckpt, name), "wb") as f:
+            f.write(b"not a parquet file")
+    files = sorted(glob.glob(os.path.join(ckpt, "*.parquet")))
+    with pytest.raises(Exception):
+        checkpointed_sketch_aggregate(df, ["source"], SPECS, ckpt, FP, fanout=None).collect()
+    assert sorted(glob.glob(os.path.join(ckpt, "*.parquet"))) == files
+
+
+def test_empty_checkpoint_dir_is_nothing_done(spark, seq_small, tmp_path):
+    """An aborted first append leaves the checkpoint directory without
+    data files; resuming over it builds every partition."""
+    ckpt = tmp_path / "ckpt5"
+    ckpt.mkdir()
+    df = seq_small.repartition(4)
+    resumed = _final_states(
+        checkpointed_sketch_aggregate(df, ["source"], SPECS, str(ckpt), FP, fanout=None)
+    )
+    assert resumed == _final_states(merge_partials(build_partials(df, ["source"], SPECS), ["source"]))
+    assert lineage_summary(spark, str(ckpt)).collect()[0].partitions_done == 4

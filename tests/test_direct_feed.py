@@ -64,8 +64,8 @@ def test_feeds_agree(spark, seq_path):
 
 
 def test_task_packing_invariant(spark, seq_path):
-    """Results do not depend on how files pack into tasks; part_id stays
-    the sorted-file index under every packing."""
+    """Results do not depend on how files pack into tasks; part_id is
+    the first sorted-file index of each task."""
     one = _states(
         sketch_aggregate_direct(spark, seq_path, ["source"], SPECS, tasks=1).collect()
     )
@@ -78,19 +78,15 @@ def test_task_packing_invariant(spark, seq_path):
         if k[1] != "tdigest":
             assert one[k][0] == many[k][0], k
     files = sorted(glob.glob(os.path.join(seq_path, "*.parquet")))
+    assert len(files) == 6
     parts = build_partials_direct(spark, seq_path, ["source"], SPECS, tasks=2)
     pids = {r.part_id for r in parts.select("part_id").distinct().collect()}
-    assert pids == set(range(len(files)))
+    assert pids == {0, 3}
 
 
-def test_skip_parts_is_per_file(spark, seq_path):
-    files = sorted(glob.glob(os.path.join(seq_path, "*.parquet")))
-    skipped = frozenset({0, len(files) - 1})
-    parts = build_partials_direct(
-        spark, seq_path, ["source"], SPECS, skip_parts=skipped, tasks=2
-    )
-    pids = {r.part_id for r in parts.select("part_id").distinct().collect()}
-    assert pids == set(range(len(files))) - skipped
+def test_premerge_is_the_only_mode(spark, seq_path):
+    with pytest.raises(ValueError, match="pre-merges"):
+        build_partials_direct(spark, seq_path, ["source"], SPECS, premerge=False)
 
 
 def test_string_sketch_columns_rejected(spark, seq_path):

@@ -24,7 +24,9 @@ from sketchlib import streaming
 from sketchlib.agg import (
     SketchSpec,
     auto_fanout,
+    build_partials,
     load_state,
+    merge_partials,
     partials_schema,
     sketch_aggregate,
     sketch_aggregate_direct,
@@ -96,8 +98,17 @@ def _assert_same_results(auto: dict, tree: dict, exact: dict) -> None:
 
 
 # ---------------------------------------------------------------------------
-# direct feed and checkpointed build
+# direct feed, checkpointed build and merge_partials itself
 # ---------------------------------------------------------------------------
+
+
+def test_merge_partials_default_is_one_merge_pass(spark, seq_small):
+    partials = build_partials(seq_small, ["source"], SPECS)
+    flat_df = merge_partials(partials, ["source"])
+    tree_df = merge_partials(partials, ["source"], 4)
+    assert _merge_nodes(flat_df) == 1
+    assert _merge_nodes(tree_df) == 2
+    _assert_same_results(_states(flat_df), _states(tree_df), _exact_n_tok(seq_small))
 
 
 def test_direct_feed_default_is_one_merge_pass(spark, tmp_path):

@@ -2,6 +2,8 @@
 incrementally across micro-batches must equal the one-shot batch path's
 (and, at these LSH settings, the exact shingle-Jaccard answer)."""
 
+import glob
+import logging
 import os
 import shutil
 import tempfile
@@ -25,7 +27,8 @@ def _docs(spark, n=300, dup_every=7):
     return spark.createDataFrame(rows, "doc_id string, words array<string>")
 
 
-def test_stream_equals_batch_neardup(spark):
+def test_stream_equals_batch_neardup(spark, caplog):
+    caplog.set_level(logging.DEBUG, logger="sketchlib.streaming")
     docs = _docs(spark)
     root = tempfile.mkdtemp(prefix="sk_neardup_stream_")
     try:
@@ -50,6 +53,15 @@ def test_stream_equals_batch_neardup(spark):
             .start()
         )
         q.awaitTermination(600)
+        # one timing record per trigger; every source file is one
+        # non-empty trigger
+        recs = [r for r in caplog.records if r.name == "sketchlib.streaming"]
+        n_files = len(glob.glob(os.path.join(src, "*.parquet")))
+        assert sorted(r.batch_id for r in recs) == list(range(n_files))
+        for r in recs:
+            assert r.levelno == logging.DEBUG
+            assert "writes" in r.phases
+            assert r.total_s >= sum(r.phases.values()) > 0
         streamed = {
             (r.doc_a, r.doc_b)
             for r in neardup_pairs(spark, os.path.join(root, "pairs")).collect()

@@ -109,3 +109,90 @@ def test_stream_operators_reject_bad_spec_lists(spark, tmp_path, operator, specs
     }[operator]
     with pytest.raises(ValueError, match="duplicate sketch names|at least one SketchSpec"):
         build()
+
+
+FOLD_SPECS = [
+    SketchSpec("hll", "hll", "v", {"p": 12, "seed": 3}),
+    SketchSpec("cms", "cms", "v", {"w": 512, "d": 4, "seed": 3}),
+    SketchSpec("bloom", "bloom", "v", {"m": 1 << 14, "k": 4, "seed": 3}),
+    SketchSpec("kmv", "kmv", "v", {"k": 64, "seed": 3}),
+    SketchSpec("ams", "ams", "v", {"w": 256, "d": 3, "seed": 3}),
+    SketchSpec("dd", "ddsketch", "x", {"alpha": 0.01}),
+    SketchSpec("td", "tdigest", "x", {"delta": 100.0}),
+    SketchSpec("kll", "kll", "x", {"k": 200}),
+    SketchSpec("tdw", "tdigest", "x", {"delta": 100.0}, weight_col="w"),
+    SketchSpec("hll_t", "hll", "toks", {"p": 12, "seed": 3}),
+]
+FOLD_BYTE_KINDS = {"hll", "cms", "bloom", "kmv", "ams", "dd", "hll_t"}
+
+
+def test_stateful_fold_matches_stage1_consumer(spark):
+    """The windowed/session operators' fold over one pandas frame (as
+    applyInPandasWithState delivers it: a nullable long arrives as
+    float64, an array column as objects) equals the batch path's stage-1
+    consumer over the same rows, byte for byte; folding two halves (the
+    second with only null arrays) gives the same bytes for the
+    byte-commutative kinds, and a spec that saw no value is an empty
+    kernel with n_updates 0."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from sketchlib.agg import _consume_partials, load_state
+    from sketchlib.streaming import _state_folder
+
+    rng = np.random.default_rng(5)
+    n = 600
+    v = rng.integers(0, 300, n).astype(np.float64)
+    v[::7] = np.nan
+    x = rng.gamma(2.0, 10.0, n)
+    w = rng.uniform(0.5, 2.0, n)
+    x[::11] = w[::11] = np.nan
+    toks = [
+        rng.integers(0, 50, i % 5).astype(np.int64) if i < n // 2 and i % 3 else None
+        for i in range(n)
+    ]
+    pdf = pd.DataFrame({"v": v, "x": x, "w": w, "toks": pd.Series(toks, dtype=object)})
+    assert pdf["v"].dtype == np.float64
+
+    _, fold = _state_folder(
+        spark.createDataFrame([], "v long, x double, w double, toks array<long>"),
+        FOLD_SPECS,
+    )
+    got = fold({}, pdf)
+
+    def col(a, t):
+        return pa.array([None if np.isnan(e) else e for e in a.tolist()], type=t)
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            col(v, pa.int64()),
+            col(x, pa.float64()),
+            col(w, pa.float64()),
+            pa.array([None if t is None else t.tolist() for t in toks], pa.list_(pa.int64())),
+        ],
+        names=["v", "x", "w", "toks"],
+    )
+    payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in FOLD_SPECS]
+    (ref,) = _consume_partials([batch], [], [], payload, 0)
+    want = {
+        name: (blob, n)
+        for name, blob, n in zip(
+            *(ref.column(c).to_pylist() for c in ("sketch", "state", "n_updates"))
+        )
+    }
+    assert got == want
+    assert got["hll"][1] == int(np.isfinite(v).sum())
+    assert got["tdw"][1] == got["td"][1] == int(np.isfinite(x).sum())
+    assert got["hll_t"][1] == sum(len(t) for t in toks if t is not None)
+
+    halves = fold(fold({}, pdf.iloc[: n // 2]), pdf.iloc[n // 2 :])
+    for s in FOLD_SPECS:
+        assert halves[s.name][1] == got[s.name][1], s.name
+        if s.name in FOLD_BYTE_KINDS:
+            assert halves[s.name][0] == got[s.name][0], s.name
+
+    empty = fold({}, pdf.iloc[:0])
+    for s in FOLD_SPECS:
+        assert empty[s.name] == (s.make().to_bytes(), 0), s.name
+    assert load_state(empty["hll"][0]).count() == 0

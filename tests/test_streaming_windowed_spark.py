@@ -306,3 +306,84 @@ def test_windowed_ddsketch_states(spark, tmp_path_factory):
     assert dd0.n == 3 and dd1.n == 2
     assert abs(dd0.quantile(0.5) - 20.0) <= 0.01 * 20.0
     assert abs(dd1.quantile(0.5) - 40.0) <= 0.01 * 40.0
+
+
+def test_null_only_spec_still_emits_its_row(spark, tmp_path_factory):
+    """A window in which one spec's column held only nulls still emits
+    that spec's row: an empty kernel with n_updates 0."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from sketchlib.streaming import windowed_sketch_stream
+
+    src = str(tmp_path_factory.mktemp("win_null_src"))
+    ckpt = str(tmp_path_factory.mktemp("win_null_ckpt"))
+    schema = StructType(
+        [
+            StructField("ts", TimestampType()),
+            StructField("user_id", LongType()),
+            StructField("score", DoubleType()),
+        ]
+    )
+
+    def write(idx, rows):
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array(
+                        [EPOCH + dt.timedelta(seconds=s) for s, _, _ in rows],
+                        type=pa.timestamp("us"),
+                    ),
+                    "user_id": pa.array([u for _, u, _ in rows], type=pa.int64()),
+                    "score": pa.array([x for _, _, x in rows], type=pa.float64()),
+                }
+            ),
+            os.path.join(src, f"batch{idx}.parquet"),
+        )
+
+    specs = [
+        SketchSpec("hll", "hll", "user_id", {"p": 12}),
+        SketchSpec("kll", "kll", "score", {"k": 200}),
+    ]
+    out = windowed_sketch_stream(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
+        "ts",
+        [],
+        specs,
+        window_duration="1 minute",
+        watermark_delay="30 seconds",
+    )
+    # window0 [0,60): scores all null; window1 [60,120): two scores
+    write(1, [(0, 1, None), (10, 2, None), (20, 3, None), (61, 4, 1.0), (70, 5, 2.0)])
+    q = (
+        out.writeStream.format("memory")
+        .queryName("win_null_sink")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        write(2, [(400, 9, 3.0)])
+        q.processAllAvailable()
+        write(3, [(500, 9, 4.0)])
+        q.processAllAvailable()
+        rows = spark.sql("select * from win_null_sink").collect()
+    finally:
+        q.stop()
+    got = {
+        ((r["window_start"] - EPOCH).total_seconds(), r["sketch"]): r
+        for r in rows
+        if (r["window_start"] - EPOCH).total_seconds() < 120
+    }
+    assert set(got) == {(0.0, "hll"), (0.0, "kll"), (60.0, "hll"), (60.0, "kll")}
+    assert got[(0.0, "hll")]["n_updates"] == 3
+    assert got[(0.0, "kll")]["n_updates"] == 0
+    assert bytes(got[(0.0, "kll")]["state"]) == specs[1].make().to_bytes()
+    assert got[(60.0, "kll")]["n_updates"] == 2
+    assert load_state(bytes(got[(60.0, "kll")]["state"])).n == 2
