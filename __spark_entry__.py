@@ -3047,21 +3047,24 @@ _DECLARED: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "checkpoint_resume": q_checkpoint_resume,
 }
 
-# Driver correctness-window rotation (VERDICT r4 #1). The driver
-# hash-checks the FIRST ~50 entries of queries() against the DuckDB
-# oracles; with 65 registered queries, 15 fall outside each round's
-# window. queries() therefore orders the dict STALEST-FIRST: entries
-# whose last driver hash-match is oldest (or who never had one) lead,
-# freshly-verified ones trail, declaration order breaks ties. Bump this
-# map from CORRECTNESS_r{N}.json each round; with a 50-wide window over
-# 65 queries the 15 that drop out are always the 15 most recently
-# verified, so no entry goes more than one round without a driver
-# oracle row. (Local verification — tools/check_oracles.py — covers
-# ALL queries every round regardless; this rotation is about the
-# driver's independent record.)
+# Correctness-window rotation (VERDICT r4 #1). The external oracle
+# check hash-compares the FIRST 50 entries of queries() against the
+# DuckDB oracles; with 68 registered queries, 18 fall outside each
+# round's window. queries() therefore orders the dict STALEST-FIRST:
+# entries whose last recorded hash-match is oldest (or who never had
+# one) lead, freshly-verified ones trail, declaration order breaks ties.
+# Bump this map from CORRECTNESS_r{N}.json each round: a name that file
+# lists takes _LATEST_ROUND = N (drop it from the map), a name it does
+# not list keeps its older round. With a 50-wide window over 68 queries
+# the 18 that drop out are always 18 of the most recently verified, so
+# no entry goes more than one round without a recorded oracle row.
+# (Local verification — tools/check_oracles.py — covers ALL queries
+# every round regardless; this rotation is about the independent
+# record.)
 _VERIFIED_ROUND: dict[str, int] = {
-    # last driver hash-match: round 4 (CORRECTNESS_r04.json — these 18
-    # rotated OUT of round 5's 50-row window, so they lead round 6's)
+    # last recorded hash-match: round 4 (CORRECTNESS_r04.json). These 18
+    # rotated out of round 5's window, are absent from
+    # CORRECTNESS_r06.json, and lead round 7's window.
     "bloom_len_estimate": 4,
     "ctor_goldens": 4,
     "cuckoo_filter_ops": 4,
@@ -3080,9 +3083,10 @@ _VERIFIED_ROUND: dict[str, int] = {
     "streaming_state_equivalence": 4,
     "tdigest_cdf_quantity": 4,
     "windowed_stream_watermark": 4,
-    # everything else: hash-matched in round 5 (CORRECTNESS_r05.json)
+    # everything else: hash-matched in round 6 (CORRECTNESS_r06.json,
+    # all 50 rows hash_match)
 }
-_LATEST_ROUND = 5  # default for entries not listed above
+_LATEST_ROUND = 6  # default for entries not listed above
 
 _DECL_POS = {name: i for i, name in enumerate(_DECLARED)}
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

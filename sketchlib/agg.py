@@ -631,9 +631,42 @@ def resolve_fanout(fanout: int | None | str, fan_in: Callable[[], int]) -> int |
     return auto_fanout(fan_in())
 
 
-# rows per record batch a direct-feed task reads from a file: bounds
-# per-task memory, a task never holds more than one batch of a file
+# rows per chunk a direct-feed task hands the stage-1 consumer: a task
+# folds its files in chunks of at most this many rows, concatenated
+# across file boundaries, so this is the per-task memory bound
 DIRECT_BATCH_ROWS = 1 << 16
+
+
+def _row_chunks(batches: Iterable[pa.RecordBatch], max_rows: int):
+    """Regroup ``batches`` into record batches of at most ``max_rows``
+    rows, rows in order. Small batches (one per file) concatenate, so
+    the consumer dedups and updates each kernel once per chunk instead
+    of once per file; a batch that does not fit is sliced. A chunk also
+    ends where the schema changes (files of one table may differ, e.g.
+    an int→long promotion): nothing is cast, each chunk keeps its
+    files' own types."""
+    buf: list[pa.RecordBatch] = []
+    n = 0
+
+    def chunk():
+        if len(buf) == 1:
+            return buf[0]
+        return pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
+
+    for batch in batches:
+        if buf and not batch.schema.equals(buf[0].schema):
+            yield chunk()
+            buf, n = [], 0
+        while batch.num_rows:
+            take = min(batch.num_rows, max_rows - n)
+            buf.append(batch.slice(0, take))
+            n += take
+            batch = batch.slice(take)
+            if n == max_rows:
+                yield chunk()
+                buf, n = [], 0
+    if buf:
+        yield chunk()
 
 
 def _direct_tasks(spark, n_files: int, tasks: int | None) -> int:
@@ -676,7 +709,15 @@ def build_partials_direct(
     combine, guide §2.3 "aggregate before you shuffle": one partial per
     (group, sketch) per TASK, so the job's only shuffle shrinks by the
     files-per-task factor (measured 86 MB → ~11 MB at the bench shape,
-    8 files/task). ``part_id`` is the task's first file index
+    8 files/task). The consumer sees the task's rows in chunks of at
+    most :data:`DIRECT_BATCH_ROWS` rows concatenated across file
+    boundaries (:func:`_row_chunks`), not one batch per file: per-group
+    dedup, hashing and kernel updates run once per chunk — once per
+    task at the bench shape, where a task's 6 files of 1,000 docs hold
+    3.2× fewer distinct tokens per group than the six files' per-file
+    distinct counts summed. A chunk is the per-task memory bound (a
+    single file of ≥ 65,536 rows already reached it before). ``part_id``
+    is the task's first file index
     (deterministic for a given file list and ``tasks``). Final states
     are byte-identical for the byte-commutative kinds (hll/cms/bloom/
     kmv/ams — merge order invisible); order-sensitive kinds agree within
@@ -732,7 +773,7 @@ def build_partials_direct(
                 pf = pq.ParquetFile(manifest[fid])
                 yield from pf.iter_batches(batch_size=DIRECT_BATCH_ROWS, columns=needed)
 
-        yield from consume(feed(), min(fids))
+        yield from consume(_row_chunks(feed(), DIRECT_BATCH_ROWS), min(fids))
 
     n = len(files)
     return spark.range(0, n, 1, _direct_tasks(spark, n, tasks)).mapInArrow(

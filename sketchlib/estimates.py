@@ -241,69 +241,70 @@ def heavy_hitters_udf(theta: float):
 # -- broadcast point queries (big column × small broadcast state) ------------
 
 
+def _group_query_udf(spark, state_by_group: dict, from_bytes, query, dtype, return_type):
+    """Pandas UDF ``(group, values)`` answering each row with
+    ``query(kernel, values)`` against its group's kernel from the
+    broadcast ``state_by_group``; rows whose group has no state get
+    0 / False. Per batch the group column is factorized once and each
+    group's kernel answers its rows in one vectorized call; a null group
+    is the ``None`` key. Kernels deserialize once per worker process."""
+    bc = spark.sparkContext.broadcast({k: bytes(v) for k, v in state_by_group.items()})
+    cache: dict = {}
+
+    def kernel(g):
+        if g not in cache:
+            blob = bc.value.get(g)
+            cache[g] = None if blob is None else from_bytes(blob)
+        return cache[g]
+
+    @F.pandas_udf(return_type)
+    def _q(group: pd.Series, values: pd.Series) -> pd.Series:
+        out = np.zeros(len(values), dtype=dtype)
+        v = values.to_numpy()
+        codes, uniques = pd.factorize(group, use_na_sentinel=False)
+        if len(uniques) == 1:
+            spans = [(uniques[0], slice(None))]
+        else:
+            order = np.argsort(codes, kind="stable")
+            bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
+            spans = [(g, order[bounds[i] : bounds[i + 1]]) for i, g in enumerate(uniques)]
+        for g, rows in spans:
+            sk = kernel(None if pd.isna(g) else g)
+            if sk is not None:
+                out[rows] = query(sk, v[rows])
+        return pd.Series(out)
+
+    return _q
+
+
 def membership_udf(spark, state_by_group: dict):
     """Vectorized Bloom membership against per-group filters.
 
-    ``state_by_group``: {group_value: state_bytes} (pass ``{None: blob}``
-    and a lit(None) group col for a global filter). The dict is a Spark
-    broadcast: one copy per executor, deserialized once.
+    ``state_by_group``: {group_value: state_bytes}. For a global filter
+    pass ``{None: blob}`` with a null group column
+    (``F.lit(None).cast("string")``): a null group looks up the ``None``
+    key. Rows of a group without a filter are not members. The dict is a
+    Spark broadcast: one copy per executor, deserialized once.
     """
-    bc = spark.sparkContext.broadcast(
-        {k: bytes(v) for k, v in state_by_group.items()}
+    return _group_query_udf(
+        spark, state_by_group, BloomFilter.from_bytes, BloomFilter.query, bool, BooleanType()
     )
-    cache: dict = {}
-
-    def _get(g):
-        f = cache.get(g)
-        if f is None:
-            blob = bc.value.get(g)
-            f = BloomFilter.from_bytes(blob) if blob is not None else False
-            cache[g] = f
-        return f
-
-    @F.pandas_udf(BooleanType())
-    def _member(group: pd.Series, values: pd.Series) -> pd.Series:
-        out = np.zeros(len(values), dtype=bool)
-        v = values.to_numpy()
-        for g in group.unique():
-            filt = _get(g)
-            if filt is False:
-                continue
-            mask = (group == g).to_numpy()
-            out[mask] = filt.query(v[mask])
-        return pd.Series(out)
-
-    return _member
 
 
 def point_query_udf(spark, state_by_group: dict):
-    """Vectorized CMS frequency estimates against per-group sketches."""
-    bc = spark.sparkContext.broadcast(
-        {k: bytes(v) for k, v in state_by_group.items()}
+    """Vectorized CMS frequency estimates against per-group sketches.
+
+    Same ``state_by_group`` contract as :func:`membership_udf` (a null
+    group reads the ``None`` key); rows of a group without a sketch
+    estimate 0."""
+    return _group_query_udf(
+        spark,
+        state_by_group,
+        CountMinSketch.from_bytes,
+        lambda sk, v: sk.query_points(v).astype(np.int64),
+        np.int64,
+        LongType(),
     )
-    cache: dict = {}
-
-    def _get(g):
-        s = cache.get(g)
-        if s is None:
-            blob = bc.value.get(g)
-            s = CountMinSketch.from_bytes(blob) if blob is not None else False
-            cache[g] = s
-        return s
-
-    @F.pandas_udf(LongType())
-    def _freq(group: pd.Series, values: pd.Series) -> pd.Series:
-        out = np.zeros(len(values), dtype=np.int64)
-        v = values.to_numpy()
-        for g in group.unique():
-            sk = _get(g)
-            if sk is False:
-                continue
-            mask = (group == g).to_numpy()
-            out[mask] = sk.query_points(v[mask]).astype(np.int64)
-        return pd.Series(out)
-
-    return _freq
 
 
 def collect_states(

@@ -162,17 +162,31 @@ def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
     non-null value so far) gets an empty kernel, so every emitted window
     or session has one row per spec.
 
-    The rows go to Arrow with the types of the stream's Spark schema:
-    pandas hands nullable longs over as float64, which the hashed kinds
-    must not see."""
+    The rows go to Arrow with the types of the stream's Spark schema.
+    Pandas hands a nullable long over as float64, which loses values
+    ≥ 2^53, so ``hashed`` also carries each nullable long input ``c`` as
+    ``coalesce(c, 0)`` plus a ``c IS NULL`` flag, and ``fold`` rebuilds
+    the exact masked column from the two when the frame has them."""
     hashed, rspecs = _resolve_specs(stream_df, specs)
     narrow, consume = _plan_stage1(hashed, [], rspecs)  # checks the specs
     schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in narrow.schema])
+    exact = {}  # long input -> (value column, null-flag column)
+    for f in narrow.schema:
+        if isinstance(f.dataType, LongType) and f.nullable:
+            vcol, ncol = exact[f.name] = (f"__v__{f.name}", f"__n__{f.name}")
+            hashed = hashed.withColumn(ncol, F.col(f.name).isNull()).withColumn(
+                vcol, F.coalesce(F.col(f.name), F.lit(0).cast("long"))
+            )
+
+    def column(pdf, field: pa.Field) -> pa.Array:
+        split = exact.get(field.name)
+        if split is not None and split[1] in pdf:
+            values, nulls = (pdf[c].to_numpy() for c in split)
+            return pa.array(values, type=field.type, mask=nulls.astype(bool))
+        return pa.Array.from_pandas(pdf[field.name], type=field.type)
 
     def fold(kernels: dict, pdf) -> dict:
-        batch = pa.RecordBatch.from_pandas(
-            pdf[schema.names], schema=schema, preserve_index=False
-        )
+        batch = pa.RecordBatch.from_arrays([column(pdf, f) for f in schema], schema=schema)
         out = dict(kernels)
         for part in consume([batch], 0):
             cols = (part.column(c).to_pylist() for c in ("sketch", "state", "n_updates"))

@@ -243,3 +243,75 @@ def test_null_array_elements_are_not_values(spark):
     assert set(got) == {("a", "hll"), ("a", "cms")}
     for spec in specs:
         assert got[("a", spec.name)] == (_driver_state(spec, [1, 3, 4]), 3), spec.name
+
+
+def _bloom_cms_blobs(ids):
+    from sketchlib.bloom import BloomFilter
+    from sketchlib.cms import CountMinSketch
+
+    bloom = BloomFilter(m=1 << 14, k=5)
+    cms = CountMinSketch(w=1024, d=4)
+    vals = np.asarray(ids, dtype=np.int64)
+    bloom.update(vals)
+    cms.update(vals)
+    return bloom, cms
+
+
+def test_point_queries_global_none_group(spark):
+    """The documented global form: ``{None: blob}`` with a null group
+    column. Every inserted id is a member and the CMS never
+    underestimates, so 100 ids of count 1 sum to at least 100."""
+    bloom, cms = _bloom_cms_blobs(range(100))
+    member = E.membership_udf(spark, {None: bloom.to_bytes()})
+    freq = E.point_query_udf(spark, {None: cms.to_bytes()})
+    df = spark.range(100).withColumn("g", F.lit(None).cast("string"))
+    row = (
+        df.select(member("g", "id").alias("hit"), freq("g", "id").alias("est"))
+        .agg(F.sum(F.col("hit").cast("long")).alias("hits"), F.sum("est").alias("est"))
+        .collect()[0]
+    )
+    assert row["hits"] == 100
+    assert row["est"] >= 100
+
+
+def test_point_queries_missing_group_is_empty(spark):
+    """A group absent from the state dict answers False / 0."""
+    bloom, cms = _bloom_cms_blobs(range(100))
+    member = E.membership_udf(spark, {"a": bloom.to_bytes()})
+    freq = E.point_query_udf(spark, {"a": cms.to_bytes()})
+    df = spark.range(100).withColumn("g", F.lit("b"))
+    rows = df.select(member("g", "id").alias("hit"), freq("g", "id").alias("est")).collect()
+    assert not any(r["hit"] for r in rows)
+    assert all(r["est"] == 0 for r in rows)
+
+
+def test_point_queries_mixed_groups_match_per_row_kernel(spark):
+    """A frame whose batches mix groups (a, b, a null group and one
+    with no state) answers every row exactly as that row's own kernel
+    would."""
+    rng = np.random.default_rng(11)
+    kernels = {
+        "a": _bloom_cms_blobs(rng.integers(0, 400, 300)),
+        "b": _bloom_cms_blobs(rng.integers(200, 600, 300)),
+        None: _bloom_cms_blobs(rng.integers(0, 50, 500)),
+    }
+    member = E.membership_udf(spark, {g: k[0].to_bytes() for g, k in kernels.items()})
+    freq = E.point_query_udf(spark, {g: k[1].to_bytes() for g, k in kernels.items()})
+    n = 2000
+    groups = [("a", "b", None, "c")[j] for j in rng.integers(0, 4, n)]
+    ids = rng.integers(0, 700, n).tolist()
+    df = spark.createDataFrame(list(zip(groups, ids)), "g string, v long")
+    rows = (
+        df.repartition(3)
+        .select("g", "v", member("g", "v").alias("hit"), freq("g", "v").alias("est"))
+        .collect()
+    )
+    assert len(rows) == n
+    for r in rows:
+        kernel = kernels.get(r["g"])
+        if kernel is None:
+            assert (r["hit"], r["est"]) == (False, 0), r
+            continue
+        v = np.array([r["v"]], dtype=np.int64)
+        assert r["hit"] == bool(kernel[0].query(v)[0]), r
+        assert r["est"] == int(kernel[1].query_points(v)[0]), r

@@ -149,3 +149,188 @@ def test_merge_partials_rejects_unresolved_auto(spark, seq_path):
     partials = build_partials_direct(spark, seq_path, ["source"], SPECS[:1])
     with _pytest.raises(ValueError, match="auto"):
         merge_partials(partials, ["source"], fanout="auto")
+
+
+# -- row chunks: a task's files reach the consumer concatenated ------------
+
+
+def _table_batch(n, start=0, n_tok_type=None):
+    import numpy as np
+    import pyarrow as pa
+
+    ids = np.arange(start, start + n, dtype=np.int64)
+    return pa.record_batch(
+        [pa.array(ids), pa.array(ids % 97, type=n_tok_type or pa.int32())],
+        names=["doc_id", "n_tok"],
+    )
+
+
+def test_row_chunks_concatenate_small_batches():
+    from sketchlib.agg import DIRECT_BATCH_ROWS, _row_chunks
+
+    batches = [_table_batch(1000, 1000 * i) for i in range(6)]
+    (chunk,) = _row_chunks(iter(batches), DIRECT_BATCH_ROWS)
+    assert chunk.num_rows == 6000
+    assert chunk.column("doc_id").to_pylist() == list(range(6000))
+
+
+def test_row_chunks_bound_rows_and_keep_order():
+    import pyarrow as pa
+
+    from sketchlib.agg import DIRECT_BATCH_ROWS, _row_chunks
+
+    sizes = [30_000, 25_000, 1, 14_999]  # 70,000 rows in batches that do not align
+    starts = [sum(sizes[:i]) for i in range(len(sizes))]
+    batches = [_table_batch(n, s) for n, s in zip(sizes, starts)]
+    chunks = list(_row_chunks(batches, DIRECT_BATCH_ROWS))
+    assert [c.num_rows for c in chunks] == [DIRECT_BATCH_ROWS, 70_000 - DIRECT_BATCH_ROWS]
+    joined = pa.Table.from_batches(chunks)
+    assert joined.column("doc_id").to_pylist() == list(range(70_000))
+    # a small bound slices inside batches and still keeps every row once
+    chunks = list(_row_chunks(batches, 4096))
+    assert max(c.num_rows for c in chunks) == 4096
+    assert pa.Table.from_batches(chunks).equals(pa.Table.from_batches(batches))
+
+
+def test_row_chunks_end_at_schema_change():
+    import pyarrow as pa
+
+    from sketchlib.agg import DIRECT_BATCH_ROWS, _row_chunks
+
+    batches = [
+        _table_batch(1000, 0, pa.int32()),
+        _table_batch(1000, 1000, pa.int32()),
+        _table_batch(1000, 2000, pa.int64()),
+        _table_batch(1000, 3000, pa.int32()),
+    ]
+    chunks = list(_row_chunks(batches, DIRECT_BATCH_ROWS))
+    assert [(c.num_rows, c.schema.field("n_tok").type) for c in chunks] == [
+        (2000, pa.int32()),
+        (1000, pa.int64()),
+        (1000, pa.int32()),
+    ]
+
+
+def _write_task_files(dir_, n_files=6, docs=1000, seed=3):
+    """One task's share on disk: ``source``, ``tokens`` (Zipf-like ids,
+    heavy overlap between files), ``n_tok`` and a float ``score``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    paths = []
+    for f in range(n_files):
+        lens = rng.integers(0, 40, docs)
+        toks = (rng.zipf(1.3, int(lens.sum())) % 5000).astype(np.int64)
+        offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+        tbl = pa.table(
+            {
+                "source": pa.array(rng.choice(["a", "b", "c", "d"], docs)),
+                "tokens": pa.ListArray.from_arrays(pa.array(offsets), pa.array(toks)),
+                "n_tok": pa.array(lens.astype(np.int32)),
+                "score": pa.array(rng.gamma(2.0, 10.0, docs)),
+            }
+        )
+        path = os.path.join(dir_, f"part-{f:05d}.parquet")
+        pq.write_table(tbl, path)
+        paths.append(path)
+    return paths
+
+
+def _rank_ok(sketch, values, eps):
+    import numpy as np
+
+    v = np.sort(values)
+    for q in np.linspace(0.01, 0.99, 33):
+        est = sketch.quantile(q)
+        lo = np.searchsorted(v, est, side="left") / v.size
+        hi = np.searchsorted(v, est, side="right") / v.size
+        if not lo - eps <= q <= hi + eps:
+            return False
+    return True
+
+
+def test_chunked_consumer_matches_per_file_feed(tmp_path):
+    """The consumer over a task's files in row chunks equals the
+    consumer over one batch per file: HLL/CMS/Bloom bytes, n_updates and
+    n_rows are equal, and t-digest/KLL answer within their rank bound."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.agg import DIRECT_BATCH_ROWS, _consume_partials, _row_chunks
+
+    paths = _write_task_files(str(tmp_path))
+    specs = [
+        SketchSpec("hll", "hll", "tokens", {"p": 12, "seed": SEED}),
+        SketchSpec("cms", "cms", "tokens", {"w": 1024, "d": 5, "seed": SEED}),
+        SketchSpec("bloom", "bloom", "tokens", {"m": 1 << 16, "k": 5, "seed": SEED}),
+        SketchSpec("hll_n", "hll", "n_tok", {"p": 12, "seed": SEED}),
+        SketchSpec("tdigest", "tdigest", "score", {"delta": 100.0}),
+        SketchSpec("kll", "kll", "score", {"k": 200}),
+    ]
+    payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in specs]
+
+    def per_file():
+        for p in paths:
+            yield from pq.ParquetFile(p).iter_batches(batch_size=DIRECT_BATCH_ROWS)
+
+    def states(batches):
+        (part,) = _consume_partials(batches, ["source"], [pa.string()], payload, 0)
+        return {
+            (r["source"], r["sketch"]): (r["state"], r["n_updates"], r["n_rows"])
+            for r in part.to_pylist()
+        }
+
+    ref = states(per_file())
+    table = pa.concat_tables([pq.read_table(p) for p in paths])
+    for max_rows in (DIRECT_BATCH_ROWS, 700):  # one chunk; chunks that slice files
+        got = states(_row_chunks(per_file(), max_rows))
+        assert set(got) == set(ref)
+        for key, (blob, n_upd, n_rows) in got.items():
+            assert (n_upd, n_rows) == ref[key][1:], key
+            if key[1] in ("tdigest", "kll"):
+                mask = np.asarray(table.column("source").to_pylist()) == key[0]
+                scores = table.column("score").to_numpy()[mask]
+                assert _rank_ok(load_state(blob), scores, 0.02), (key, max_rows)
+            else:
+                assert blob == ref[key][0], (key, max_rows)
+
+
+def test_mixed_int_widths_across_files(spark, tmp_path):
+    """Files whose ``n_tok`` is int32 in some and int64 in others (an
+    int→long promotion) build through the direct feed exactly as through
+    the JVM feed: equal HLL/CMS/Bloom bytes and n_updates."""
+    import functools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    paths = _write_task_files(str(tmp_path), n_files=4, docs=500, seed=9)
+    for p in paths[1::2]:
+        tbl = pq.read_table(p)
+        i = tbl.schema.get_field_index("n_tok")
+        pq.write_table(tbl.set_column(i, "n_tok", tbl.column("n_tok").cast(pa.int64())), p)
+    specs = [
+        SketchSpec(kind, kind, "n_tok", params)
+        for kind, params in (
+            ("hll", {"p": 12, "seed": SEED}),
+            ("cms", {"w": 1024, "d": 5, "seed": SEED}),
+            ("bloom", {"m": 1 << 16, "k": 5, "seed": SEED}),
+        )
+    ]
+    jvm = functools.reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.parquet(p).withColumn("n_tok", F.col("n_tok").cast("long"))
+            for p in paths
+        ],
+    )
+    want = _states(sketch_aggregate(jvm, ["source"], specs).collect())
+    for tasks in (1, None):
+        got = _states(
+            sketch_aggregate_direct(spark, str(tmp_path), ["source"], specs, tasks=tasks).collect()
+        )
+        assert got == want, tasks

@@ -387,3 +387,63 @@ def test_null_only_spec_still_emits_its_row(spark, tmp_path_factory):
     assert bytes(got[(0.0, "kll")]["state"]) == specs[1].make().to_bytes()
     assert got[(60.0, "kll")]["n_updates"] == 2
     assert load_state(bytes(got[(60.0, "kll")]["state"])).n == 2
+
+
+def test_nullable_long_inputs_beyond_2_53_are_exact(spark, tmp_path_factory):
+    """A nullable long column reaches pandas as float64, where ids 2^60+1,
+    2^60+2 and 2^60+3 collapse into one value. The window of those three
+    ids and one null must equal the batch build over the same rows: equal
+    HLL/CMS bytes and n_updates 3."""
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    from sketchlib.agg import sketch_aggregate
+    from sketchlib.streaming import windowed_sketch_stream
+
+    src = str(tmp_path_factory.mktemp("win_big_src"))
+    ckpt = str(tmp_path_factory.mktemp("win_big_ckpt"))
+    schema = StructType(
+        [StructField("ts", TimestampType()), StructField("user_id", LongType())]
+    )
+    specs = [
+        SketchSpec("hll", "hll", "user_id", {"p": 12}),
+        SketchSpec("cms", "cms", "user_id", {"w": 256, "d": 3}),
+    ]
+    out = windowed_sketch_stream(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
+        "ts",
+        [],
+        specs,
+        window_duration="1 minute",
+        watermark_delay="30 seconds",
+    )
+    big = 1 << 60
+    _write_batch(src, 1, [(0, big + 1), (10, big + 2), (20, big + 3), (30, None)])
+    q = (
+        out.writeStream.format("memory")
+        .queryName("win_big_sink")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        _write_batch(src, 2, [(400, 9)])
+        q.processAllAvailable()
+        _write_batch(src, 3, [(500, 9)])
+        q.processAllAvailable()
+        rows = spark.sql("select * from win_big_sink").collect()
+    finally:
+        q.stop()
+    got = {
+        r["sketch"]: (bytes(r["state"]), r["n_updates"])
+        for r in rows
+        if r["window_start"] == EPOCH
+    }
+    batch = spark.read.schema(schema).parquet(os.path.join(src, "batch1.parquet"))
+    want = {
+        r["sketch"]: (bytes(r["state"]), r["n_updates"])
+        for r in sketch_aggregate(batch, [], specs).collect()
+    }
+    assert got == want
+    assert got["hll"][1] == 3
+    assert load_state(got["hll"][0]).count() == 3
