@@ -37,6 +37,7 @@ from sketchlib.cms import CountMinSketch
 from sketchlib.kll import KLL
 from sketchlib.reservoir import Reservoir
 from sketchlib.session import build_pyfiles_zip, ensure_worker_pythonpath
+from sketchlib.session import run_concurrently as _par
 from sketchlib.tdigest import TDigest
 from sketchlib.topk import topk_exact_rescore
 
@@ -80,37 +81,6 @@ class _stream_shuffle:
     def __exit__(self, *exc):
         self.spark.conf.set(self.KEY, self.old)
         return False
-
-
-def _par(*thunks):
-    """Run independent Spark actions concurrently (optimization guide
-    §2.6: actions are only sequential because driver code calls them
-    sequentially — overlapping independent jobs lets the next job's
-    tasks back-fill executors freed by the current job's tail). Returns
-    the thunks' results in order; the first failure propagates.
-    InheritableThread so each job inherits the caller's job group /
-    scheduler properties. Safe with shared persisted frames: Spark's
-    BlockManager computes a cached block once and concurrent readers
-    block on / reuse it."""
-    from pyspark import InheritableThread
-
-    results = [None] * len(thunks)
-    errs: list[BaseException] = []
-
-    def run(i):
-        try:
-            results[i] = thunks[i]()
-        except BaseException as e:  # surfaced after all joins
-            errs.append(e)
-
-    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
-    return results
 
 
 def _ensure_workers(spark: SparkSession) -> None:

@@ -77,6 +77,44 @@ def build_pyfiles_zip(out: str | None = None) -> str:
     return out
 
 
+def run_concurrently(*thunks):
+    """Run independent Spark actions concurrently and return the thunks'
+    results in order (optimization guide §2.6: actions are only
+    sequential because driver code calls them sequentially —
+    overlapping independent jobs lets the next job's tasks back-fill
+    executors freed by the current job's tail).
+
+    Every thunk runs to completion before this returns or raises, so no
+    job outlives the call. The first failure is raised; each further
+    failure is attached to it as a note. ``InheritableThread`` so each
+    job inherits the caller's job group and local properties (a
+    streaming query's ``stop()`` can then cancel them). Safe with shared
+    persisted frames, though two jobs that reach an uncached block at
+    the same time may both compute it (the BlockManager keeps one)."""
+    from pyspark import InheritableThread
+
+    results = [None] * len(thunks)
+    errs: list[BaseException] = []
+
+    def run(i):
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # surfaced after all joins
+            errs.append(e)
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errs:
+        first = errs[0]
+        for e in errs[1:]:
+            first.add_note(f"concurrent failure: {type(e).__name__}: {e}")
+        raise first
+    return results
+
+
 def _workers_see(pkg_parent: str) -> bool:
     """Whether Python workers of the next SparkContext start with
     ``pkg_parent`` on their path, so that they can run

@@ -25,6 +25,11 @@ partials of the same stage-1 consumer the batch path runs
 (``agg._consume_partials``) — the merge contract again, so a finalized
 state equals a batch build of its rows (bytes for the byte-commutative
 kinds, published bounds for the rest).
+
+The near-dup writer (:func:`neardup_stream_writer`) keeps two
+bucket-partitioned stores, ``keys/`` and ``shingles/``. Each trigger
+statically overwrites its own ``batch_id`` generation of both and of
+the pairs output, so a replay rewrites exactly what it wrote.
 """
 
 from __future__ import annotations
@@ -33,10 +38,12 @@ import logging
 import os
 import pickle
 import time
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -62,6 +69,7 @@ from .agg import (
     resolve_fanout,
 )
 from .io import path_exists
+from .session import run_concurrently
 
 _log = logging.getLogger(__name__)
 
@@ -163,30 +171,31 @@ def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
     or session has one row per spec.
 
     The rows go to Arrow with the types of the stream's Spark schema.
-    Pandas hands a nullable long over as float64, which loses values
-    ≥ 2^53, so ``hashed`` also carries each nullable long input ``c`` as
-    ``coalesce(c, 0)`` plus a ``c IS NULL`` flag, and ``fold`` rebuilds
-    the exact masked column from the two when the frame has them."""
+    Pandas hands an integer column or list over as float64 once it holds
+    a null, which loses longs ≥ 2^53, so ``hashed`` carries each array
+    or nullable long input ``c`` as ``__x__c``: its non-null elements
+    (a scalar as a 0-or-1-element array), filtered JVM-side, and the
+    spec reads that column. Nulls are never values (the consumer drops
+    them too), and group and time columns stay as they are."""
     hashed, rspecs = _resolve_specs(stream_df, specs)
-    narrow, consume = _plan_stage1(hashed, [], rspecs)  # checks the specs
+    xspecs = []
+    for s in rspecs:
+        f = hashed.schema[s.col]
+        is_array = isinstance(f.dataType, ArrayType)
+        if is_array or (isinstance(f.dataType, LongType) and f.nullable):
+            xcol = f"__x__{s.col}"
+            if xcol not in hashed.columns:
+                arr = F.col(s.col) if is_array else F.array(s.col)
+                hashed = hashed.withColumn(xcol, F.filter(arr, lambda x: x.isNotNull()))
+            s = replace(s, col=xcol)
+        xspecs.append(s)
+    narrow, consume = _plan_stage1(hashed, [], xspecs)  # checks the specs
     schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in narrow.schema])
-    exact = {}  # long input -> (value column, null-flag column)
-    for f in narrow.schema:
-        if isinstance(f.dataType, LongType) and f.nullable:
-            vcol, ncol = exact[f.name] = (f"__v__{f.name}", f"__n__{f.name}")
-            hashed = hashed.withColumn(ncol, F.col(f.name).isNull()).withColumn(
-                vcol, F.coalesce(F.col(f.name), F.lit(0).cast("long"))
-            )
-
-    def column(pdf, field: pa.Field) -> pa.Array:
-        split = exact.get(field.name)
-        if split is not None and split[1] in pdf:
-            values, nulls = (pdf[c].to_numpy() for c in split)
-            return pa.array(values, type=field.type, mask=nulls.astype(bool))
-        return pa.Array.from_pandas(pdf[field.name], type=field.type)
 
     def fold(kernels: dict, pdf) -> dict:
-        batch = pa.RecordBatch.from_arrays([column(pdf, f) for f in schema], schema=schema)
+        batch = pa.RecordBatch.from_arrays(
+            [pa.Array.from_pandas(pdf[f.name], type=f.type) for f in schema], schema=schema
+        )
         out = dict(kernels)
         for part in consume([batch], 0):
             cols = (part.column(c).to_pylist() for c in ("sketch", "state", "n_updates"))
@@ -197,7 +206,7 @@ def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
                     out[name] = (kernel.to_bytes(), out[name][1] + n)
                 else:
                     out[name] = (blob, n)
-        for s in rspecs:
+        for s in xspecs:
             if s.name not in out:
                 out[s.name] = (s.make().to_bytes(), 0)
         return out
@@ -462,10 +471,10 @@ def neardup_stream_writer(
       batch generation) — more buckets prune finer but cost listing
       overhead, so small deployments keep the default and 100 TB
       deployments raise it with the store.
-    - ``counts/`` holds per-batch (band, key, n) COUNT DELTAS in the
-      same bucket layout; hot-key detection sums deltas for the touched
-      buckets instead of recounting the whole key store. Keys whose
-      cumulative count exceeds ``bucket_cap`` stop producing candidates.
+    - hot keys are counted from the key rows a batch already reads: the
+      touched buckets' history plus the batch's own rows, per (band,
+      key). Keys whose cumulative count exceeds ``bucket_cap`` stop
+      producing candidates.
     - ``shingles/`` is partitioned by ``pmod(xxhash64(doc_id),
       n_buckets)``; exact verification reads only the buckets that hold
       a candidate's historical counterpart.
@@ -482,7 +491,7 @@ def neardup_stream_writer(
       pays one adaptive re-plan job per shuffle stage (~3.5 s of the
       4-batch query at sf0.1).
 
-    Each non-empty trigger logs one DEBUG record on the
+    Each trigger logs one DEBUG record on the
     ``sketchlib.streaming`` logger with ``batch_id``, ``total_s`` and
     ``phases`` (seconds per phase) as record attributes.
 
@@ -507,208 +516,147 @@ def neardup_stream_writer(
         raise ValueError(f"bands ({bands}) must divide n_hashes ({n_hashes})")
     keys_dir = os.path.join(store_path, "keys")
     sh_dir = os.path.join(store_path, "shingles")
-    cnt_dir = os.path.join(store_path, "counts")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # no emptiness probe (it is a job per trigger): an empty trigger
+        # writes empty generations of its own directories and no pairs
         t0 = time.perf_counter()
         marks: list[tuple[str, float]] = []
 
         def mark(label: str) -> None:
             marks.append((label, time.perf_counter()))
 
-        if batch_df.isEmpty():
-            return
-        mark("isEmpty")
         spark = batch_df.sparkSession
         _enable_batch_aqe(spark, batch_shuffle_partitions)
         bid = int(batch_id)
-        # fan the trigger's files out BEFORE the shingle+signature Arrow
-        # pass: a 1-file trigger otherwise runs the heaviest per-batch
-        # compute on ONE task (the file source gives one scan partition
-        # per ≤maxPartitionBytes file, guide §2.5 input skew; measured
-        # in the per-batch timing marks). The fan-out targets the FULL
-        # session parallelism, not batch_shuffle_partitions: that knob
-        # sizes the SHUFFLE stages to the trigger volume, but this is a
-        # narrow per-row compute pass that scales with cores (measured
-        # 8 vs 32 on a 32-core local run: paired A/B best-min 16.7 vs
-        # 15.2 s — a wash at sf0.1 where the pass is ~0.5 s/batch, but
-        # the fan-out scales with the trigger volume where the coupled
-        # width could not)
-        width = int(spark.sparkContext.defaultParallelism)
-        if batch_df.rdd.getNumPartitions() < width:
-            batch_df = batch_df.repartition(width)
-        shingles = shingle_hash_frame(
-            batch_df, id_col, words_col, shingle_n
-        ).persist()
-        id_type = batch_df.schema[id_col].dataType
-        sigs = shingles.mapInArrow(
-            _signature_fn(n_hashes, bands, seed),
-            StructType(
-                [
-                    StructField("doc_id", id_type, False),
-                    StructField("band_keys", ArrayType(LongType()), False),
-                ]
-            ),
-        )
-        brows = sigs.select(
-            "doc_id", F.posexplode("band_keys").alias("band", "key")
-        ).persist()
-        key_bucket = F.pmod(F.col("key"), F.lit(n_buckets))
-        doc_bucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets))
-        cnt_schema = StructType(
-            [
-                StructField("band", IntegerType(), False),
-                StructField("key", LongType(), False),
-                StructField("n", LongType(), False),
-            ]
-        )
-        has_history = path_exists(spark, keys_dir)
-        if has_history:
-            # the batch's keys determine which store buckets can possibly
-            # match: collect that (<= n_buckets ints) and prune the read
-            touched = [
-                r[0]
-                for r in brows.select(key_bucket.cast("int").alias("b")).distinct().collect()
-            ]
-            mark("touched_collect")
-            hist = _read_store(spark, keys_dir, brows.schema, bid, touched).persist()
-            hist_cnt = _read_store(spark, cnt_dir, cnt_schema, bid, touched)
-        else:  # first batch: nothing seen yet
-            hist = spark.createDataFrame([], brows.schema)
-            hist_cnt = spark.createDataFrame([], cnt_schema)
-        # re-ingest guard: identical content re-ingested under a seen
-        # doc_id hashes to the same (band, key) rows, so its history is
-        # fully inside the touched buckets — drop it from the batch.
-        # First batch short-circuits (nothing can be seen yet).
-        if has_history:
-            seen = hist.select("doc_id").distinct().persist()
-            brows_new = brows.join(seen, "doc_id", "left_anti").persist()
-            shingles_new = shingles.join(seen, "doc_id", "left_anti").persist()
-        else:
-            seen = None
-            brows_new = brows
-            shingles_new = shingles
-        delta = (
-            brows_new.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n")).persist()
-        )
-        if bucket_cap is not None:
-            # cumulative per-key counts = prior deltas (touched buckets
-            # only) + this batch's delta — never a recount of the store
-            hot = (
-                hist_cnt.unionByName(delta)
-                .groupBy("band", "key")
-                .agg(F.sum("n").alias("__n"))
-                .filter(F.col("__n") > bucket_cap)
-                .select("band", "key")
-            )
-            hist_f = hist.join(F.broadcast(hot), ["band", "key"], "left_anti")
-            brows_c = brows_new.join(F.broadcast(hot), ["band", "key"], "left_anti")
-        else:
-            hist_f = hist
-            brows_c = brows_new
-        # the three STORE writes (keys/counts/shingles) depend only on
-        # brows_new / delta / shingles_new — not on candidates — so they
-        # start NOW and run concurrently with the whole candidate +
-        # verify phase below (previously all four writes ran after it,
-        # making per-batch latency candidates + writes instead of
-        # max(candidates, writes); measured ~0.7 s/batch at sf0.1).
-        # Concurrent first-materialization of the shared persisted
-        # frames (brows_new, shingles_new, delta) is safe: Spark's
-        # BlockManager computes a cached block once and later readers
-        # block on / reuse it. InheritableThread (not a bare
-        # ThreadPoolExecutor) so each write inherits the streaming
-        # query's job group / local properties — otherwise query.stop()
-        # cannot cancel in-flight batch writes (ADVICE r3). A mid-batch
-        # failure is replay-safe regardless of which writes finished:
-        # the replay statically overwrites exactly these directories.
-        from pyspark import InheritableThread
+        persisted: list[DataFrame] = []
 
-        errs: list[BaseException] = []
+        def keep(df: DataFrame) -> DataFrame:
+            persisted.append(df)
+            return df.persist()
 
-        def _run(fn):
-            try:
-                fn()
-            except BaseException as e:  # surfaces after all joins
-                errs.append(e)
-
-        store_jobs = [
-            lambda: _write_bucketed(brows_new, keys_dir, bid, key_bucket),
-            lambda: _write_bucketed(delta, cnt_dir, bid, key_bucket),
-            lambda: _write_bucketed(shingles_new, sh_dir, bid, doc_bucket),
-        ]
-        threads = [InheritableThread(target=_run, args=(j,)) for j in store_jobs]
-        for t in threads:
-            t.start()
         try:
-            x = brows_c.alias("x")
-            y = hist_f.unionByName(brows_c).alias("y")
-            cands = (
-                x.join(
-                    y,
-                    (F.col("x.band") == F.col("y.band"))
-                    & (F.col("x.key") == F.col("y.key"))
-                    & (F.col("x.doc_id") != F.col("y.doc_id")),
-                )
-                .select(
-                    F.least("x.doc_id", "y.doc_id").alias("doc_a"),
-                    F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
-                )
-                .distinct()
-                .persist()
+            shingles = keep(shingle_hash_frame(batch_df, id_col, words_col, shingle_n))
+            id_type = batch_df.schema[id_col].dataType
+            sigs = shingles.mapInArrow(
+                _signature_fn(n_hashes, bands, seed),
+                StructType(
+                    [
+                        StructField("doc_id", id_type, False),
+                        StructField("band_keys", ArrayType(LongType()), False),
+                    ]
+                ),
             )
-            # exact verification needs shingles only for the candidates'
-            # historical members: prune the shingle store to their buckets,
-            # then semi-join down to exactly those docs
-            persisted = [
-                df
-                for df in (shingles, brows, brows_new, shingles_new, cands, hist, seen, delta)
-                if df is not None
-            ]
-            if has_history:  # keys/ and shingles/ are written together
-                # explode both endpoints in ONE pass + one distinct — the
-                # previous union-of-projections shape cost two extra stages
-                # per batch (measured in the cand_collect phase)
-                cand_ids = (
-                    cands.select(
-                        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-                    )
-                    .distinct()
-                    .persist()
-                )
-                persisted.append(cand_ids)
-                cand_buckets = [
+            brows = keep(
+                sigs.select("doc_id", F.posexplode("band_keys").alias("band", "key"))
+            )
+            key_bucket = F.pmod(F.col("key"), F.lit(n_buckets))
+            doc_bucket = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets))
+            has_history = path_exists(spark, keys_dir)
+            if has_history:
+                # the batch's keys determine which store buckets can
+                # possibly match: collect that (<= n_buckets ints) and
+                # prune the read
+                touched = [
                     r[0]
-                    for r in cand_ids.select(doc_bucket.cast("int").alias("b"))
+                    for r in brows.select(key_bucket.cast("int").alias("b"))
                     .distinct()
                     .collect()
                 ]
-                mark("cand_collect")
-                hist_sh = _read_store(
-                    spark, sh_dir, shingles.schema, bid, cand_buckets
-                ).join(cand_ids, "doc_id", "left_semi")
+                mark("touched_collect")
+                hist = keep(_read_store(spark, keys_dir, brows.schema, bid, touched))
+                # re-ingest guard: identical content re-ingested under a
+                # seen doc_id hashes to the same (band, key) rows, so its
+                # history is fully inside the touched buckets — drop it
+                seen = keep(hist.select("doc_id").distinct())
+                brows_new = keep(brows.join(seen, "doc_id", "left_anti"))
+                shingles_new = keep(shingles.join(seen, "doc_id", "left_anti"))
+            else:  # first batch: nothing seen yet
+                hist = spark.createDataFrame([], brows.schema)
+                brows_new = brows
+                shingles_new = shingles
+            if bucket_cap is not None:
+                # cumulative per-key counts from the key rows themselves:
+                # ``hist`` holds every earlier batch's rows in the touched
+                # buckets, ``brows_new`` this batch's
+                hot = (
+                    hist.select("band", "key")
+                    .unionByName(brows_new.select("band", "key"))
+                    .groupBy("band", "key")
+                    .count()
+                    .filter(F.col("count") > bucket_cap)
+                    .select("band", "key")
+                )
+                hist_f = hist.join(F.broadcast(hot), ["band", "key"], "left_anti")
+                brows_c = brows_new.join(F.broadcast(hot), ["band", "key"], "left_anti")
             else:
-                hist_sh = spark.createDataFrame([], shingles.schema)
-            pairs = jaccard_verify(cands, hist_sh.unionByName(shingles_new), threshold)
-            # the pairs write (the only candidate-dependent sink) runs on
-            # the main thread while the three store writes finish behind it
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(pairs_path, f"{_BATCH_COL}={bid}")
+                hist_f = hist
+                brows_c = brows_new
+
+            def candidates_and_pairs() -> None:
+                x = brows_c.alias("x")
+                y = hist_f.unionByName(brows_c).alias("y")
+                cands = keep(
+                    x.join(
+                        y,
+                        (F.col("x.band") == F.col("y.band"))
+                        & (F.col("x.key") == F.col("y.key"))
+                        & (F.col("x.doc_id") != F.col("y.doc_id")),
+                    )
+                    .select(
+                        F.least("x.doc_id", "y.doc_id").alias("doc_a"),
+                        F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
+                    )
+                    .distinct()
+                )
+                # exact verification needs shingles only for the
+                # candidates' historical members: prune the shingle store
+                # to their buckets, then semi-join down to exactly those
+                # docs
+                if has_history:  # keys/ and shingles/ are written together
+                    cand_ids = keep(
+                        cands.select(
+                            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+                        ).distinct()
+                    )
+                    cand_buckets = [
+                        r[0]
+                        for r in cand_ids.select(doc_bucket.cast("int").alias("b"))
+                        .distinct()
+                        .collect()
+                    ]
+                    mark("cand_collect")
+                    hist_sh = _read_store(
+                        spark, sh_dir, shingles.schema, bid, cand_buckets
+                    ).join(cand_ids, "doc_id", "left_semi")
+                else:
+                    hist_sh = spark.createDataFrame([], shingles.schema)
+                pairs = jaccard_verify(cands, hist_sh.unionByName(shingles_new), threshold)
+                pairs.write.mode("overwrite").parquet(
+                    os.path.join(pairs_path, f"{_BATCH_COL}={bid}")
+                )
+
+            # the two store writes depend only on brows_new / shingles_new,
+            # not on candidates, so they run concurrently with the
+            # candidate + verify phase (per-trigger latency is the max of
+            # the three, not their sum). A mid-batch failure is
+            # replay-safe whichever writes finished: the replay statically
+            # overwrites exactly these directories.
+            run_concurrently(
+                lambda: _write_bucketed(brows_new, keys_dir, bid, key_bucket),
+                lambda: _write_bucketed(shingles_new, sh_dir, bid, doc_bucket),
+                candidates_and_pairs,
             )
+            mark("writes")
         finally:
-            # join the store writers on EVERY exit: an exception in the
-            # candidate phase or pairs write must not orphan in-flight
-            # writes (a replay's overwrite racing an orphaned writer on
-            # the same batch directory could corrupt the store)
-            for t in threads:
-                t.join()
-        mark("writes")
-        if errs:
-            raise errs[0]
-        for df in persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            # on every exit: a failed trigger must not leave its cached
+            # frames behind, and a failing release must not mask the
+            # trigger's own error
+            for df in persisted:
+                try:
+                    df.unpersist()
+                except Exception:
+                    _log.warning("near-dup trigger %d: unpersist failed", bid, exc_info=True)
         phases, prev = {}, t0
         for label, t in marks:
             phases[label] = t - prev
@@ -732,22 +680,20 @@ def neardup_stream_writer(
 def neardup_compact(spark: SparkSession, store_path: str, compact_path: str) -> None:
     """Fold a near-dup stream's per-batch store partitions into a single
     ``batch_id=-1`` generation per bucket: key and shingle rows are
-    rewritten as-is, count DELTAS are summed into one row per (band,
-    key). Run between micro-batches or on a schedule; callers swap
-    ``compact_path`` in atomically (same contract as :func:`compact`)."""
-    for sub, agg in (("keys", None), ("shingles", None), ("counts", "sum")):
+    rewritten as-is. Run between micro-batches or on a schedule; callers
+    swap ``compact_path`` in atomically (same contract as
+    :func:`compact`)."""
+    for sub in ("keys", "shingles"):
         src = os.path.join(store_path, sub)
         if not path_exists(spark, src):
             continue
-        df = spark.read.parquet(src)
-        if agg == "sum":
-            df = (
-                df.groupBy("band", "key", _BUCKET_COL)
-                .agg(F.sum("n").alias("n"))
-                .select("band", "key", "n", _BUCKET_COL)
-            )
-        else:
-            df = df.drop(_BATCH_COL)
+        try:
+            df = spark.read.parquet(src)
+        except AnalysisException as e:
+            # every trigger so far was empty: directories, no rows
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            continue
         (
             df.withColumn(_BATCH_COL, F.lit(-1))
             .write.mode("overwrite")

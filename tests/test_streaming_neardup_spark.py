@@ -8,6 +8,8 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,66 +27,6 @@ def _docs(spark, n=300, dup_every=7):
         if i % dup_every == 0:
             rows.append((f"e{i:04d}", words[:-2] + ["x1", "x2"]))
     return spark.createDataFrame(rows, "doc_id string, words array<string>")
-
-
-def test_stream_equals_batch_neardup(spark, caplog):
-    caplog.set_level(logging.DEBUG, logger="sketchlib.streaming")
-    docs = _docs(spark)
-    root = tempfile.mkdtemp(prefix="sk_neardup_stream_")
-    try:
-        src = os.path.join(root, "src")
-        docs.repartition(4).write.parquet(src)
-        stream_df = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            neardup_stream_writer(
-                stream_df,
-                "doc_id",
-                "words",
-                os.path.join(root, "store"),
-                os.path.join(root, "pairs"),
-                os.path.join(root, "ckpt"),
-                threshold=0.5,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        # one timing record per trigger; every source file is one
-        # non-empty trigger
-        recs = [r for r in caplog.records if r.name == "sketchlib.streaming"]
-        n_files = len(glob.glob(os.path.join(src, "*.parquet")))
-        assert sorted(r.batch_id for r in recs) == list(range(n_files))
-        for r in recs:
-            assert r.levelno == logging.DEBUG
-            assert "writes" in r.phases
-            assert r.total_s >= sum(r.phases.values()) > 0
-        streamed = {
-            (r.doc_a, r.doc_b)
-            for r in neardup_pairs(spark, os.path.join(root, "pairs")).collect()
-        }
-        batch = {
-            (r.doc_a, r.doc_b)
-            for r in minhash_neardup_pairs(
-                docs, "doc_id", "words", threshold=0.5
-            ).collect()
-        }
-        assert streamed == batch
-        assert len(streamed) > 0
-        # exactly-once: no pair appears in two batch partitions
-        dup = (
-            spark.read.parquet(os.path.join(root, "pairs"))
-            .groupBy("doc_a", "doc_b")
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        assert dup == 0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _run_stream(spark, docs, root, src_partitions=4, **writer_kw):
@@ -110,13 +52,51 @@ def _run_stream(spark, docs, root, src_partitions=4, **writer_kw):
     q.awaitTermination(600)
 
 
+def _pairs(spark, root):
+    return {(r.doc_a, r.doc_b) for r in neardup_pairs(spark, os.path.join(root, "pairs")).collect()}
+
+
+def test_stream_equals_batch_neardup(spark, caplog):
+    caplog.set_level(logging.DEBUG, logger="sketchlib.streaming")
+    docs = _docs(spark)
+    root = tempfile.mkdtemp(prefix="sk_neardup_stream_")
+    try:
+        _run_stream(spark, docs, root)
+        # one timing record per trigger; every source file is one trigger
+        recs = [r for r in caplog.records if r.name == "sketchlib.streaming"]
+        n_files = len(glob.glob(os.path.join(root, "src", "*.parquet")))
+        assert sorted(r.batch_id for r in recs) == list(range(n_files))
+        for r in recs:
+            assert r.levelno == logging.DEBUG
+            assert "writes" in r.phases
+            assert r.total_s >= sum(r.phases.values()) > 0
+        streamed = _pairs(spark, root)
+        batch = {
+            (r.doc_a, r.doc_b)
+            for r in minhash_neardup_pairs(
+                docs, "doc_id", "words", threshold=0.5
+            ).collect()
+        }
+        assert streamed == batch
+        assert len(streamed) > 0
+        # exactly-once: no pair appears in two batch partitions
+        dup = (
+            spark.read.parquet(os.path.join(root, "pairs"))
+            .groupBy("doc_a", "doc_b")
+            .count()
+            .filter(F.col("count") > 1)
+            .count()
+        )
+        assert dup == 0
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_bucket_pruning_never_opens_untouched_buckets(spark):
     """The store is partitioned by pmod(key, n_buckets); a read filtered
     to a bucket subset must never OPEN files in other buckets. Proof: a
     deliberately corrupted parquet file in an excluded bucket does not
     fail the pruned read, but does fail an unpruned one."""
-    import glob
-
     from sketchlib.streaming import _read_store
 
     docs = _docs(spark, n=120)
@@ -153,15 +133,14 @@ def test_bucket_pruning_never_opens_untouched_buckets(spark):
 def test_read_store_missing_root_is_empty_history(spark):
     """Crash-recovery: the caller's has_history probe checks only the
     FIRST sibling store (keys/), so a kill between batch 0's store
-    writes can leave keys/ present while cnt/ (or shingles/) has no
-    root yet. The replay's read of the missing store must see EMPTY
+    writes can leave keys/ present while shingles/ has no root yet. The replay's read of the missing store must see EMPTY
     history — schema-correct, zero rows — not wedge the stream on a
     FileNotFoundException."""
     from sketchlib.streaming import _read_store
 
     schema = spark.createDataFrame([], "doc_id string, band int, key long").schema
     missing = os.path.join(
-        tempfile.mkdtemp(prefix="sk_neardup_missing_"), "store", "cnt"
+        tempfile.mkdtemp(prefix="sk_neardup_missing_"), "store", "shingles"
     )
     df = _read_store(spark, missing, schema, exclude_batch=0)
     assert df.count() == 0
@@ -217,18 +196,9 @@ def test_compact_preserves_store(spark):
             a = spark.read.parquet(os.path.join(store, sub)).drop("batch_id", "__bkt")
             b = spark.read.parquet(os.path.join(compact, sub)).drop("batch_id", "__bkt")
             assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-        # count deltas fold to the same cumulative totals
-        a = (
-            spark.read.parquet(os.path.join(store, "counts"))
-            .groupBy("band", "key")
-            .agg(F.sum("n").alias("n"))
-        )
-        b = (
-            spark.read.parquet(os.path.join(compact, "counts"))
-            .groupBy("band", "key")
-            .agg(F.sum("n").alias("n"))
-        )
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        # hot keys are counted from the key rows: no other store exists
+        for d in (store, compact):
+            assert sorted(os.listdir(d)) == ["keys", "shingles"]
         # compacted generation is a single batch partition per store
         assert set(
             r.batch_id
@@ -245,23 +215,7 @@ def test_stream_clusters_match_batch(spark):
     docs = _docs(spark, n=120)
     root = tempfile.mkdtemp(prefix="sk_neardup_cc_")
     try:
-        src = os.path.join(root, "src")
-        docs.repartition(3).write.parquet(src)
-        stream_df = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            neardup_stream_writer(
-                stream_df, "doc_id", "words",
-                os.path.join(root, "store"), os.path.join(root, "pairs"),
-                os.path.join(root, "ckpt"), threshold=0.5,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+        _run_stream(spark, docs, root, src_partitions=3)
         from sketchlib.dedup import connected_components, minhash_neardup_pairs
         streamed = {
             (r.node, r.component)
@@ -332,5 +286,119 @@ def test_resume_after_compaction(spark):
             for r in minhash_neardup_pairs(all_docs, "doc_id", "words", threshold=0.5).collect()
         }
         assert streamed == batch and streamed
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _write_sources(root, files):
+    """One parquet file per trigger, in list order: ``files`` holds
+    lists of (doc_id, words) rows; modification times are set apart so
+    the file source takes them in that order."""
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    for i, rows in enumerate(files):
+        path = os.path.join(src, f"part-{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([d for d, _ in rows], pa.string()),
+                    "words": pa.array([w for _, w in rows], pa.list_(pa.string())),
+                }
+            ),
+            path,
+        )
+        os.utime(path, (1_000_000 + 10 * i, 1_000_000 + 10 * i))
+    return src
+
+
+_DOC_SCHEMA = "doc_id string, words array<string>"
+
+
+@pytest.mark.parametrize(
+    "bucket_cap, want",
+    [
+        (3, {("a", "b")}),
+        (None, {("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")}),
+    ],
+)
+def test_bucket_cap_is_cumulative_across_triggers(spark, bucket_cap, want):
+    """Four docs with the same 30 words arrive two per trigger. Every
+    (band, key) then holds 2 rows after the first trigger and 4 after
+    the second, so ``bucket_cap=3`` stops the second trigger's keys from
+    producing candidates while the first trigger's pair stands."""
+    words = [f"w{j}" for j in range(30)]
+    root = tempfile.mkdtemp(prefix="sk_neardup_cap_")
+    try:
+        _write_sources(root, [[("a", words), ("b", words)], [("c", words), ("d", words)]])
+        _run_stream(
+            spark, spark.createDataFrame([], _DOC_SCHEMA), root, bucket_cap=bucket_cap
+        )
+        assert _pairs(spark, root) == want
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_empty_trigger_runs_through(spark, caplog):
+    """A 0-row source file is a trigger like any other: it runs without
+    an emptiness probe, writes an empty pairs generation, logs its
+    timing record, and the later triggers still match against the
+    history before it."""
+    caplog.set_level(logging.DEBUG, logger="sketchlib.streaming")
+    words = [f"w{j}" for j in range(30)]
+    other = [f"v{j}" for j in range(30)]
+    files = [
+        [("a", words), ("x", other)],
+        [],
+        [("b", words[:-2] + ["z1", "z2"]), ("y", [f"u{j}" for j in range(30)])],
+    ]
+    root = tempfile.mkdtemp(prefix="sk_neardup_empty_")
+    try:
+        _write_sources(root, files)
+        docs = spark.createDataFrame([r for rows in files for r in rows], _DOC_SCHEMA)
+        _run_stream(spark, docs, root)
+        recs = [r for r in caplog.records if r.name == "sketchlib.streaming"]
+        assert sorted(r.batch_id for r in recs) == [0, 1, 2]
+        empty = spark.read.parquet(os.path.join(root, "pairs", "batch_id=1"))
+        assert empty.count() == 0
+        batch = {
+            (r.doc_a, r.doc_b)
+            for r in minhash_neardup_pairs(docs, "doc_id", "words", threshold=0.5).collect()
+        }
+        assert _pairs(spark, root) == batch == {("a", "b")}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_failed_trigger_unpersists_its_frames(spark):
+    """A trigger whose pairs write fails fails the query, and every
+    frame the trigger persisted is released on the way out."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    docs = _docs(spark, n=40)
+    root = tempfile.mkdtemp(prefix="sk_neardup_fail_")
+    try:
+        src = os.path.join(root, "src")
+        docs.repartition(1).write.parquet(src)
+        with open(os.path.join(root, "pairs"), "w") as fh:
+            fh.write("a regular file where the pairs directory should be")
+        with pytest.raises(Exception):
+            _run_stream(spark, docs, root)
+        assert jsc.getPersistentRDDs().size() == before
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_compact_after_only_empty_triggers(spark):
+    """A store whose every trigger was empty holds batch directories but
+    no rows; compacting it writes nothing and does not fail."""
+    from sketchlib.streaming import neardup_compact
+
+    root = tempfile.mkdtemp(prefix="sk_neardup_empty_compact_")
+    try:
+        _write_sources(root, [[]])
+        _run_stream(spark, spark.createDataFrame([], _DOC_SCHEMA), root)
+        assert os.path.isdir(os.path.join(root, "store", "keys", "batch_id=0"))
+        neardup_compact(spark, os.path.join(root, "store"), os.path.join(root, "store_c"))
+        assert not os.path.exists(os.path.join(root, "store_c"))
     finally:
         shutil.rmtree(root, ignore_errors=True)

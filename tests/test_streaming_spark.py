@@ -129,7 +129,8 @@ FOLD_BYTE_KINDS = {"hll", "cms", "bloom", "kmv", "ams", "dd", "hll_t"}
 def test_stateful_fold_matches_stage1_consumer(spark):
     """The windowed/session operators' fold over one pandas frame (as
     applyInPandasWithState delivers it: a nullable long arrives as
-    float64, an array column as objects) equals the batch path's stage-1
+    float64, an array column as objects, each next to its ``__x__``
+    column of non-null elements) equals the batch path's stage-1
     consumer over the same rows, byte for byte; folding two halves (the
     second with only null arrays) gives the same bytes for the
     byte-commutative kinds, and a spec that saw no value is an empty
@@ -154,6 +155,10 @@ def test_stateful_fold_matches_stage1_consumer(spark):
     ]
     pdf = pd.DataFrame({"v": v, "x": x, "w": w, "toks": pd.Series(toks, dtype=object)})
     assert pdf["v"].dtype == np.float64
+    # the stream also carries each nullable long and array input as its
+    # non-null elements, and those arrive as int64 arrays
+    pdf["__x__v"] = [np.array([] if np.isnan(e) else [e], dtype=np.int64) for e in v]
+    pdf["__x__toks"] = pdf["toks"]
 
     _, fold = _state_folder(
         spark.createDataFrame([], "v long, x double, w double, toks array<long>"),

@@ -24,19 +24,20 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sketchlib.agg import SketchSpec, load_state  # noqa: E402
+from sketchlib.agg import SketchSpec, _pa_type, load_state  # noqa: E402
 
 EPOCH = dt.datetime(2026, 1, 1, 0, 0, 0)
 
 
-def _write_batch(dir_: str, idx: int, rows: list[tuple[int, int]]) -> None:
-    """rows: (seconds_after_epoch, user_id)"""
+def _write_batch(
+    dir_: str, idx: int, rows: list[tuple], col: str = "user_id", type=pa.int64()
+) -> None:
+    """rows: (seconds_after_epoch, value of ``col``)"""
     ts = [EPOCH + dt.timedelta(seconds=s) for s, _ in rows]
-    users = [u for _, u in rows]
     tbl = pa.table(
         {
             "ts": pa.array(ts, type=pa.timestamp("us")),
-            "user_id": pa.array(users, type=pa.int64()),
+            col: pa.array([v for _, v in rows], type=type),
         }
     )
     pq.write_table(tbl, os.path.join(dir_, f"batch{idx}.parquet"))
@@ -389,25 +390,23 @@ def test_null_only_spec_still_emits_its_row(spark, tmp_path_factory):
     assert load_state(bytes(got[(60.0, "kll")]["state"])).n == 2
 
 
-def test_nullable_long_inputs_beyond_2_53_are_exact(spark, tmp_path_factory):
-    """A nullable long column reaches pandas as float64, where ids 2^60+1,
-    2^60+2 and 2^60+3 collapse into one value. The window of those three
-    ids and one null must equal the batch build over the same rows: equal
-    HLL/CMS bytes and n_updates 3."""
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+def _first_window_vs_batch(spark, tmp_path_factory, name, col_type, rows, specs):
+    """Stream ``rows`` (seconds_after_epoch, value of column ``v``) as
+    one file, close its first window with two later files, and return
+    that window's ``{sketch: (state, n_updates)}`` next to the batch
+    build's over the same file."""
+    from pyspark.sql.types import StructField, StructType, TimestampType
 
     from sketchlib.agg import sketch_aggregate
     from sketchlib.streaming import windowed_sketch_stream
 
-    src = str(tmp_path_factory.mktemp("win_big_src"))
-    ckpt = str(tmp_path_factory.mktemp("win_big_ckpt"))
-    schema = StructType(
-        [StructField("ts", TimestampType()), StructField("user_id", LongType())]
-    )
-    specs = [
-        SketchSpec("hll", "hll", "user_id", {"p": 12}),
-        SketchSpec("cms", "cms", "user_id", {"w": 256, "d": 3}),
-    ]
+    src = str(tmp_path_factory.mktemp(f"{name}_src"))
+    ckpt = str(tmp_path_factory.mktemp(f"{name}_ckpt"))
+    schema = StructType([StructField("ts", TimestampType()), StructField("v", col_type)])
+
+    def write(idx, rows):
+        _write_batch(src, idx, rows, "v", _pa_type(col_type))
+
     out = windowed_sketch_stream(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
         "ts",
@@ -416,34 +415,75 @@ def test_nullable_long_inputs_beyond_2_53_are_exact(spark, tmp_path_factory):
         window_duration="1 minute",
         watermark_delay="30 seconds",
     )
-    big = 1 << 60
-    _write_batch(src, 1, [(0, big + 1), (10, big + 2), (20, big + 3), (30, None)])
+    write(1, rows)
     q = (
         out.writeStream.format("memory")
-        .queryName("win_big_sink")
+        .queryName(f"{name}_sink")
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .start()
     )
     try:
         q.processAllAvailable()
-        _write_batch(src, 2, [(400, 9)])
+        nudge = rows[-1][1]
+        write(2, [(400, nudge)])
         q.processAllAvailable()
-        _write_batch(src, 3, [(500, 9)])
+        write(3, [(500, nudge)])
         q.processAllAvailable()
-        rows = spark.sql("select * from win_big_sink").collect()
+        got = spark.sql(f"select * from {name}_sink").collect()
     finally:
         q.stop()
-    got = {
-        r["sketch"]: (bytes(r["state"]), r["n_updates"])
-        for r in rows
-        if r["window_start"] == EPOCH
-    }
     batch = spark.read.schema(schema).parquet(os.path.join(src, "batch1.parquet"))
-    want = {
-        r["sketch"]: (bytes(r["state"]), r["n_updates"])
-        for r in sketch_aggregate(batch, [], specs).collect()
-    }
+
+    def states(rows):
+        return {r["sketch"]: (bytes(r["state"]), r["n_updates"]) for r in rows}
+
+    return (
+        states(r for r in got if r["window_start"] == EPOCH),
+        states(sketch_aggregate(batch, [], specs).collect()),
+    )
+
+
+def test_nullable_long_inputs_beyond_2_53_are_exact(spark, tmp_path_factory):
+    """A nullable long column reaches pandas as float64, where ids 2^60+1,
+    2^60+2 and 2^60+3 collapse into one value. The window of those three
+    ids and one null must equal the batch build over the same rows: equal
+    HLL/CMS bytes and n_updates 3."""
+    from pyspark.sql.types import LongType
+
+    big = 1 << 60
+    got, want = _first_window_vs_batch(
+        spark,
+        tmp_path_factory,
+        "win_big",
+        LongType(),
+        [(0, big + 1), (10, big + 2), (20, big + 3), (30, None)],
+        [
+            SketchSpec("hll", "hll", "v", {"p": 12}),
+            SketchSpec("cms", "cms", "v", {"w": 256, "d": 3}),
+        ],
+    )
+    assert got == want
+    assert got["hll"][1] == 3
+    assert load_state(got["hll"][0]).count() == 3
+
+
+def test_array_long_inputs_with_null_elements_beyond_2_53_are_exact(spark, tmp_path_factory):
+    """An ``array<long>`` that holds a null reaches pandas as a float64
+    array, where 2^60+1 and 2^60+3 collapse into one value. The window
+    of the rows [2^60+1, null, 2^60+3] and [2^60+2] must equal the batch
+    build over the same file: equal HLL bytes and n_updates 3."""
+    from pyspark.sql.types import ArrayType, LongType
+
+    big = 1 << 60
+    got, want = _first_window_vs_batch(
+        spark,
+        tmp_path_factory,
+        "win_arr",
+        ArrayType(LongType()),
+        [(0, [big + 1, None, big + 3]), (10, [big + 2])],
+        [SketchSpec("hll", "hll", "v", {"p": 12})],
+    )
     assert got == want
     assert got["hll"][1] == 3
     assert load_state(got["hll"][0]).count() == 3
