@@ -85,31 +85,33 @@ def run_concurrently(*thunks):
     executors freed by the current job's tail).
 
     Every thunk runs to completion before this returns or raises, so no
-    job outlives the call. The first failure is raised; each further
-    failure is attached to it as a note. ``InheritableThread`` so each
-    job inherits the caller's job group and local properties (a
+    job outlives the call. The first failing thunk's error is raised,
+    and each later thunk's error is attached to it as a note, in thunk
+    order whatever the order they failed in. ``InheritableThread`` so
+    each job inherits the caller's job group and local properties (a
     streaming query's ``stop()`` can then cancel them). Safe with shared
     persisted frames, though two jobs that reach an uncached block at
     the same time may both compute it (the BlockManager keeps one)."""
     from pyspark import InheritableThread
 
     results = [None] * len(thunks)
-    errs: list[BaseException] = []
+    errs: list[BaseException | None] = [None] * len(thunks)
 
     def run(i):
         try:
             results[i] = thunks[i]()
         except BaseException as e:  # surfaced after all joins
-            errs.append(e)
+            errs[i] = e
 
     threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
-    if errs:
-        first = errs[0]
-        for e in errs[1:]:
+    failed = [e for e in errs if e is not None]
+    if failed:
+        first = failed[0]
+        for e in failed[1:]:
             first.add_note(f"concurrent failure: {type(e).__name__}: {e}")
         raise first
     return results

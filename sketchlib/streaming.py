@@ -38,7 +38,6 @@ import logging
 import os
 import pickle
 import time
-from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -160,42 +159,50 @@ def compact(
 # ---------------------------------------------------------------------------
 
 
-def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
-    """``(hashed, fold)`` for the stateful operators: ``hashed`` is the
-    stream with string inputs pre-hashed (as the batch path does), and
-    ``fold(kernels, pdf)`` runs the batch path's stage-1 consumer over a
-    key's rows and merges each partial into the ``{name: (blob,
-    n_updates)}`` state. A spec with no state yet takes the partial's
-    bytes as they are; a spec still without state afterwards (no
-    non-null value so far) gets an empty kernel, so every emitted window
-    or session has one row per spec.
+def _state_folder(stream_df: DataFrame, specs: list[SketchSpec], keep: list[str]):
+    """``(shipped, fold)`` for the stateful operators: ``shipped`` is the
+    stream narrowed to the ``keep`` columns (key and event time) and the
+    inputs the specs read, and ``fold(kernels, pdf)`` runs the batch
+    path's stage-1 consumer over a key's rows and merges each partial
+    into the ``{name: (blob, n_updates)}`` state. A spec with no state
+    yet takes the partial's bytes as they are; a spec still without
+    state afterwards (no non-null value so far) gets an empty kernel, so
+    every emitted window or session has one row per spec.
 
     The rows go to Arrow with the types of the stream's Spark schema.
     Pandas hands an integer column or list over as float64 once it holds
-    a null, which loses longs ≥ 2^53, so ``hashed`` carries each array
-    or nullable long input ``c`` as ``__x__c``: its non-null elements
-    (a scalar as a 0-or-1-element array), filtered JVM-side, and the
-    spec reads that column. Nulls are never values (the consumer drops
-    them too), and group and time columns stay as they are."""
+    a null, which loses longs ≥ 2^53. So each input ``c`` (strings
+    pre-hashed, as the batch path does) travels once, as ``__x__c``: an
+    array as its non-null elements, filtered JVM-side; a nullable long
+    as ``coalesce(c, 0)`` next to a ``__n__c`` null flag, from which
+    ``fold`` rebuilds the masked column; anything else as it is. Nulls
+    are never values (the consumer drops them too), and the ``keep``
+    columns travel under their own names."""
     hashed, rspecs = _resolve_specs(stream_df, specs)
-    xspecs = []
-    for s in rspecs:
-        f = hashed.schema[s.col]
-        is_array = isinstance(f.dataType, ArrayType)
-        if is_array or (isinstance(f.dataType, LongType) and f.nullable):
-            xcol = f"__x__{s.col}"
-            if xcol not in hashed.columns:
-                arr = F.col(s.col) if is_array else F.array(s.col)
-                hashed = hashed.withColumn(xcol, F.filter(arr, lambda x: x.isNotNull()))
-            s = replace(s, col=xcol)
-        xspecs.append(s)
-    narrow, consume = _plan_stage1(hashed, [], xspecs)  # checks the specs
+    narrow, consume = _plan_stage1(hashed, [], rspecs)  # checks the specs
     schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in narrow.schema])
+    cols = [F.col(c) for c in dict.fromkeys(keep)]
+    flagged = set()
+    for f in narrow.schema:
+        x = F.col(f.name)
+        if isinstance(f.dataType, ArrayType):
+            x = F.filter(x, lambda e: e.isNotNull())
+        elif isinstance(f.dataType, LongType) and f.nullable:
+            flagged.add(f.name)
+            cols.append(x.isNull().alias(f"__n__{f.name}"))
+            x = F.coalesce(x, F.lit(0).cast("long"))
+        cols.append(x.alias(f"__x__{f.name}"))
+    shipped = hashed.select(*cols)
+
+    def column(pdf, f: pa.Field) -> pa.Array:
+        x = pdf[f"__x__{f.name}"]
+        if f.name in flagged:
+            nulls = pdf[f"__n__{f.name}"].to_numpy(dtype=bool)
+            return pa.array(x.to_numpy(), type=f.type, mask=nulls)
+        return pa.Array.from_pandas(x, type=f.type)
 
     def fold(kernels: dict, pdf) -> dict:
-        batch = pa.RecordBatch.from_arrays(
-            [pa.Array.from_pandas(pdf[f.name], type=f.type) for f in schema], schema=schema
-        )
+        batch = pa.RecordBatch.from_arrays([column(pdf, f) for f in schema], schema=schema)
         out = dict(kernels)
         for part in consume([batch], 0):
             cols = (part.column(c).to_pylist() for c in ("sketch", "state", "n_updates"))
@@ -206,12 +213,12 @@ def _state_folder(stream_df: DataFrame, specs: list[SketchSpec]):
                     out[name] = (kernel.to_bytes(), out[name][1] + n)
                 else:
                     out[name] = (blob, n)
-        for s in xspecs:
+        for s in rspecs:
             if s.name not in out:
                 out[s.name] = (s.make().to_bytes(), 0)
         return out
 
-    return hashed, fold
+    return shipped, fold
 
 
 def windowed_sketch_stream(
@@ -245,7 +252,7 @@ def windowed_sketch_stream(
     state, n_updates`` — readable by the same estimate UDFs as batch
     states.
     """
-    hashed, fold = _state_folder(stream_df, specs)
+    shipped, fold = _state_folder(stream_df, specs, [ts_col, *group_cols])
     names = [s.name for s in specs]
     delay_ms = int(pd.Timedelta(watermark_delay).total_seconds() * 1000)
     win = F.window(F.col(ts_col), window_duration, slide_duration or window_duration)
@@ -254,7 +261,7 @@ def windowed_sketch_stream(
     # each independently — a start x end cross product for sliding
     # windows (invalid (start_i, end_j) combos included)
     keyed = (
-        hashed.withWatermark(ts_col, watermark_delay)
+        shipped.withWatermark(ts_col, watermark_delay)
         .withColumn("__w", win)
         .withColumn("window_start", F.col("__w.start"))
         .withColumn("window_end", F.col("__w.end"))
@@ -761,7 +768,7 @@ def session_sketch_stream(
     time), sketch, state, n_updates`` — readable by the same estimate
     UDFs as batch states.
     """
-    hashed, fold = _state_folder(stream_df, specs)
+    shipped, fold = _state_folder(stream_df, specs, [ts_col, *key_cols])
     names = [s.name for s in specs]
     # all event-time arithmetic in MICROSECONDS (the column's native
     # precision — ms truncation would corrupt session_start as a join
@@ -769,7 +776,7 @@ def session_sketch_stream(
     # watermark/timeout surface stays in ms and is converted at the edge
     gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
     delay_us = int(pd.Timedelta(watermark_delay).total_seconds() * 1_000_000)
-    keyed = hashed.withWatermark(ts_col, watermark_delay)
+    keyed = shipped.withWatermark(ts_col, watermark_delay)
     out_fields = [
         *[keyed.schema[c] for c in key_cols],
         StructField("session_start", TimestampType(), False),

@@ -127,16 +127,14 @@ FOLD_BYTE_KINDS = {"hll", "cms", "bloom", "kmv", "ams", "dd", "hll_t"}
 
 
 def test_stateful_fold_matches_stage1_consumer(spark):
-    """The windowed/session operators' fold over one pandas frame (as
-    applyInPandasWithState delivers it: a nullable long arrives as
-    float64, an array column as objects, each next to its ``__x__``
-    column of non-null elements) equals the batch path's stage-1
-    consumer over the same rows, byte for byte; folding two halves (the
-    second with only null arrays) gives the same bytes for the
-    byte-commutative kinds, and a spec that saw no value is an empty
-    kernel with n_updates 0."""
+    """The windowed/session operators' fold over one pandas frame of the
+    stream they ship (as applyInPandasWithState delivers it: Arrow to
+    pandas, arrays as objects) equals the batch path's stage-1 consumer
+    over the same rows, byte for byte, longs beyond 2^53 included;
+    folding two halves (the second with only null arrays) gives the same
+    bytes for the byte-commutative kinds, and a spec that saw no value
+    is an empty kernel with n_updates 0."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     from sketchlib.agg import _consume_partials, load_state
@@ -144,37 +142,33 @@ def test_stateful_fold_matches_stage1_consumer(spark):
 
     rng = np.random.default_rng(5)
     n = 600
-    v = rng.integers(0, 300, n).astype(np.float64)
-    v[::7] = np.nan
+    v = [None if i % 7 == 0 else (1 << 60) + int(e) for i, e in enumerate(rng.integers(0, 300, n))]
     x = rng.gamma(2.0, 10.0, n)
     w = rng.uniform(0.5, 2.0, n)
     x[::11] = w[::11] = np.nan
     toks = [
-        rng.integers(0, 50, i % 5).astype(np.int64) if i < n // 2 and i % 3 else None
-        for i in range(n)
+        rng.integers(0, 50, i % 5).tolist() if i < n // 2 and i % 3 else None for i in range(n)
     ]
-    pdf = pd.DataFrame({"v": v, "x": x, "w": w, "toks": pd.Series(toks, dtype=object)})
-    assert pdf["v"].dtype == np.float64
-    # the stream also carries each nullable long and array input as its
-    # non-null elements, and those arrive as int64 arrays
-    pdf["__x__v"] = [np.array([] if np.isnan(e) else [e], dtype=np.int64) for e in v]
-    pdf["__x__toks"] = pdf["toks"]
+    for t in toks[1::10]:
+        if t:
+            t.append(None)  # null elements are not values
+    xs, ws = ([None if np.isnan(e) else float(e) for e in a] for a in (x, w))
+    rows = spark.createDataFrame(
+        list(zip(range(n), v, xs, ws, toks)), "i long, v long, x double, w double, toks array<long>"
+    ).orderBy("i")
 
-    _, fold = _state_folder(
-        spark.createDataFrame([], "v long, x double, w double, toks array<long>"),
-        FOLD_SPECS,
-    )
+    shipped, fold = _state_folder(rows, FOLD_SPECS, ["i"])
+    # each input travels once; the key column under its own name
+    assert sorted(shipped.columns) == ["__n__v", "__x__toks", "__x__v", "__x__w", "__x__x", "i"]
+    pdf = shipped.toPandas()
     got = fold({}, pdf)
-
-    def col(a, t):
-        return pa.array([None if np.isnan(e) else e for e in a.tolist()], type=t)
 
     batch = pa.RecordBatch.from_arrays(
         [
-            col(v, pa.int64()),
-            col(x, pa.float64()),
-            col(w, pa.float64()),
-            pa.array([None if t is None else t.tolist() for t in toks], pa.list_(pa.int64())),
+            pa.array(v, pa.int64()),
+            pa.array(xs, pa.float64()),
+            pa.array(ws, pa.float64()),
+            pa.array(toks, pa.list_(pa.int64())),
         ],
         names=["v", "x", "w", "toks"],
     )
@@ -187,9 +181,9 @@ def test_stateful_fold_matches_stage1_consumer(spark):
         )
     }
     assert got == want
-    assert got["hll"][1] == int(np.isfinite(v).sum())
+    assert got["hll"][1] == sum(e is not None for e in v)
     assert got["tdw"][1] == got["td"][1] == int(np.isfinite(x).sum())
-    assert got["hll_t"][1] == sum(len(t) for t in toks if t is not None)
+    assert got["hll_t"][1] == sum(e is not None for t in toks if t is not None for e in t)
 
     halves = fold(fold({}, pdf.iloc[: n // 2]), pdf.iloc[n // 2 :])
     for s in FOLD_SPECS:
