@@ -69,6 +69,7 @@ from pyspark.sql.types import (
 from .ams import CountSketch as AMSCountSketch
 from .bloom import BloomFilter
 from .cms import CountMinSketch
+from .codec import SketchCodecError, read_kind
 from .ddsketch import DDSketch
 from .fd import FrequentDirections
 from .hll import HLL
@@ -118,16 +119,15 @@ class SketchSpec:
         return KERNELS[self.kind](**self.params)
 
 
-def _deserialize(kind: str, blob: bytes):
-    return KERNELS[kind].from_bytes(bytes(blob))
-
-
 def load_state(blob: bytes):
-    """Deserialize any sketch state blob to its kernel object."""
-    from .codec import unpack
-
-    kind, _, _ = unpack(bytes(blob))
-    return _deserialize(kind, blob)
+    """Deserialize any sketch state blob to its kernel object: the
+    header names the kind, that kernel's ``from_bytes`` decodes the
+    payload once. A kind outside :data:`KERNELS` raises
+    :class:`~sketchlib.codec.SketchCodecError`."""
+    kind = read_kind(blob)
+    if kind not in KERNELS:
+        raise SketchCodecError(f"unknown state kind {kind!r}")
+    return KERNELS[kind].from_bytes(blob)
 
 
 # ---------------------------------------------------------------------------

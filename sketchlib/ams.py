@@ -189,9 +189,7 @@ class CountSketch:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountSketch":
-        kind, params, payload = unpack(bytes(blob))
-        if kind != KIND:
-            raise ValueError(f"not a countsketch blob: {kind}")
+        _, params, payload = unpack(blob, KIND)
         table = np.frombuffer(payload, dtype=np.int64).reshape(
             int(params["d"]), int(params["w"])
         ).copy()

@@ -23,7 +23,7 @@ import sys
 
 import numpy as np
 
-from .codec import SketchCodecError, check_mergeable, pack, unpack
+from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, hash_i64, k_positions
 
 _U = np.uint64
@@ -175,8 +175,6 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
-        kind, params, payload = unpack(data)
-        if kind != KIND:
-            raise SketchCodecError(f"expected {KIND} state, got {kind}")
+        _, params, payload = unpack(data, KIND)
         bits = np.frombuffer(payload, dtype=np.uint64)
         return cls(params["m"], params["k"], params["seed"], bits.copy())

@@ -23,7 +23,7 @@ import math
 
 import numpy as np
 
-from .codec import SketchCodecError, check_mergeable, pack, unpack
+from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, hash_i64, k_positions
 
 _U = np.uint64
@@ -163,8 +163,6 @@ class CountMinSketch:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CountMinSketch":
-        kind, params, payload = unpack(data)
-        if kind != KIND:
-            raise SketchCodecError(f"expected {KIND} state, got {kind}")
+        _, params, payload = unpack(data, KIND)
         table = np.frombuffer(payload, dtype=np.uint64).reshape(params["d"], params["w"])
         return cls(params["w"], params["d"], params["seed"], table.copy())

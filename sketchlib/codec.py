@@ -8,6 +8,12 @@ byte, a JSON params header (kind, seed, shape parameters), then the
 state payload. Merge validates header equality, mirroring the
 reference's buildhasher/parameter asserts (countminsketch.rs:271-284).
 
+This module is the only place that reads a blob's header: kernels'
+``from_bytes`` call ``unpack(data, KIND)``, which rejects a blob of any
+other kind with :class:`SketchCodecError` (a ``ValueError``), and
+``agg.load_state`` dispatches on :func:`read_kind`, which parses the
+header without touching the payload, so any blob is decoded once.
+
 Payloads compress transparently when that actually shrinks them:
 per-partition CMS tables / Bloom bitsets are mostly zeros at typical
 fill, and at cluster scale the stage-1→stage-2 shuffle is entirely
@@ -62,7 +68,10 @@ def pack(kind: str, params: dict, payload: bytes) -> bytes:
     return MAGIC + struct.pack("<BBI", VERSION, flags, len(header)) + header + payload
 
 
-def unpack(data: bytes) -> tuple[str, dict, bytes]:
+def _header(data: bytes) -> tuple[dict, int, int]:
+    """Parse the fixed header and the JSON params of a state blob:
+    ``(params with "kind", flags, payload offset)``. Touches no payload
+    byte; every malformed header raises :class:`SketchCodecError`."""
     if bytes(data[:4]) != MAGIC:
         raise SketchCodecError("bad magic: not a sketchlib state blob")
     try:
@@ -79,17 +88,33 @@ def unpack(data: bytes) -> tuple[str, dict, bytes]:
         raise SketchCodecError(f"truncated state header: {e}") from e
     try:
         header = json.loads(bytes(data[off : off + hlen]).decode())
-        if not isinstance(header, dict):
-            # valid non-dict JSON (array/scalar) from a corrupt header
-            # must surface as the codec's typed error, not a TypeError
-            # deep in .pop (ADVICE r5)
-            raise KeyError(f"not an object: {header!r}")
-        kind = header.pop("kind")
+        # valid non-dict JSON (array/scalar) or a non-string kind from a
+        # corrupt header must surface as the codec's typed error, not a
+        # TypeError deep in a caller (ADVICE r5)
+        if not isinstance(header, dict) or not isinstance(header["kind"], str):
+            raise KeyError(f"no string kind in {header!r}")
     except (ValueError, KeyError, UnicodeDecodeError) as e:
         # truncated/corrupt header — normalize to the codec's typed
         # error so callers need exactly one except clause
         raise SketchCodecError(f"corrupt state header: {e}") from e
-    payload = bytes(data[off + hlen :])
+    return header, flags, off + hlen
+
+
+def read_kind(data: bytes) -> str:
+    """The kind named in a state blob's header; the payload is not read."""
+    return _header(data)[0]["kind"]
+
+
+def unpack(data: bytes, kind: str | None = None) -> tuple[str, dict, bytes]:
+    """``(kind, params, raw payload)`` of a state blob. With ``kind``
+    given, a blob of any other kind raises :class:`SketchCodecError`
+    before its payload is read: this is the one kind check every
+    kernel's ``from_bytes`` relies on."""
+    header, flags, off = _header(data)
+    got = header.pop("kind")
+    if kind is not None and got != kind:
+        raise SketchCodecError(f"expected {kind} state, got {got}")
+    payload = bytes(data[off:])
     if flags & _FLAG_ZSTD:
         try:
             (rawlen,) = struct.unpack_from("<Q", payload, 0)
@@ -101,7 +126,7 @@ def unpack(data: bytes) -> tuple[str, dict, bytes]:
             payload = zlib.decompress(payload)
         except zlib.error as e:  # truncated/corrupt blob → codec error
             raise SketchCodecError(f"corrupt compressed state payload: {e}") from e
-    return kind, header, payload
+    return got, header, payload
 
 
 def check_mergeable(kind: str, a_params: dict, b_params: dict) -> None:

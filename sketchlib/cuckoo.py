@@ -243,9 +243,7 @@ class CuckooFilter:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CuckooFilter":
-        kind, params, payload = unpack(data)
-        if kind != "cuckoo":
-            raise ValueError(f"expected cuckoo state, got {kind}")
+        _, params, payload = unpack(data, "cuckoo")
         n_elements = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         rng_ctr = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         table = np.frombuffer(payload, dtype=np.uint64, offset=16).copy()

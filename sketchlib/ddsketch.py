@@ -221,9 +221,7 @@ class DDSketch:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "DDSketch":
-        kind, params, payload = unpack(data)
-        if kind != "ddsketch":
-            raise ValueError(f"expected ddsketch state, got {kind}")
+        _, params, payload = unpack(data, "ddsketch")
         n, zero, np_, nn = (int(x) for x in np.frombuffer(payload, dtype=np.int64, count=4))
         off = 32
         pos_idx = np.frombuffer(payload, dtype=np.int32, count=np_, offset=off).copy()

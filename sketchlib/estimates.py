@@ -2,10 +2,12 @@
 
 Two families (SURVEY.md §2.4):
 
-1. **per-state estimates** — vectorized pandas UDFs applied to the tiny
-   merged-state table (one deserialization per state row):
-   ``hll_count``, ``bloom_len``, ``cms_total``, ``tdigest_quantile``,
-   ``kll_quantile``, ``tdigest_cdf``.
+1. **per-state estimates** — module-level pandas UDFs applied to the
+   tiny merged-state table (one deserialization per state row):
+   ``hll_count``, ``bloom_len``, ``cms_total``, ``sketch_quantile``,
+   ``sketch_cdf``, ``heavy_hitters``, ``topk_items`` and the rest. One
+   object answers each question from a DataFrame (constant arguments
+   as ``F.lit``) and, via :func:`register_sql_functions`, from SQL.
 
 2. **broadcast point queries** — the merged sketch states are collected
    (kilobytes), broadcast to executors, and applied to a *big* DataFrame
@@ -20,7 +22,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType, StringType
 
 from .agg import load_state
 from .bloom import BloomFilter
@@ -159,22 +161,34 @@ def kmv_pair_stats(
     )
 
 
-def quantile_udf(q: float):
-    """Works for both tdigest and KLL states (same .quantile API)."""
+@F.pandas_udf(DoubleType())
+def sketch_quantile(state: pd.Series, q: pd.Series) -> pd.Series:
+    """q-quantile of any quantile-bearing state (tdigest, kll,
+    ddsketch: same ``.quantile`` API). SQL also names it
+    ``tdigest_quantile``; from a DataFrame pass ``F.lit(q)``."""
+    return pd.Series(
+        [float(load_state(b).quantile(float(qq))) for b, qq in zip(state, q)]
+    )
 
-    @F.pandas_udf(DoubleType())
-    def _q(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: float(load_state(b).quantile(q)))
 
-    return _q
+@F.pandas_udf(DoubleType())
+def sketch_cdf(state: pd.Series, x: pd.Series) -> pd.Series:
+    """Rank of ``x`` in a tdigest or ddsketch state. SQL also names it
+    ``tdigest_cdf``; from a DataFrame pass ``F.lit(x)``."""
 
+    def one(b, xx):
+        k = load_state(b)
+        if not hasattr(k, "cdf"):
+            # ADVICE r5: the kind-generic name invites use on KLL
+            # states, which have no cdf — fail with the kind named
+            # instead of an opaque executor AttributeError
+            raise TypeError(
+                f"sketch_cdf: state kind {type(k).__name__!r} has no cdf "
+                "(supported: tdigest, ddsketch)"
+            )
+        return float(k.cdf(float(xx)))
 
-def cdf_udf(x: float):
-    @F.pandas_udf(DoubleType())
-    def _c(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: float(load_state(b).cdf(x)))
-
-    return _c
+    return pd.Series([one(b, xx) for b, xx in zip(state, x)])
 
 
 def moment_udf(moment: str):
@@ -207,35 +221,28 @@ def reservoir_size(state: pd.Series) -> pd.Series:
     return state.map(lambda b: int(load_state(b).sample.size))
 
 
-def topk_items_udf():
+@F.pandas_udf(ArrayType(StringType()))
+def topk_items(state: pd.Series) -> pd.Series:
     """TopK query() → array of 'item:count' strings ordered by
     (count desc, item asc) (cmsheap.rs:213-219 iteration order,
     descending here for readability)."""
-    from pyspark.sql.types import ArrayType, StringType
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _t(state: pd.Series) -> pd.Series:
-        def render(b):
-            items, counts = load_state(b).query()
-            return [f"{i}:{c}" for i, c in zip(items.tolist(), counts.tolist())]
+    def render(b):
+        items, counts = load_state(b).query()
+        return [f"{i}:{c}" for i, c in zip(items.tolist(), counts.tolist())]
 
-        return state.map(render)
-
-    return _t
+    return state.map(render)
 
 
-def heavy_hitters_udf(theta: float):
+@F.pandas_udf(ArrayType(LongType()))
+def heavy_hitters(state: pd.Series, theta: pd.Series) -> pd.Series:
     """Heavy-hitter readout for LossyCounter states — query(theta) →
     array of items with f >= (theta - eps) * n (lossycounter.rs:258-273)
     — and, via the same ``load_state`` dispatch, SpaceSaving states
     (query(phi): items with f + err >= phi * n)."""
-    from pyspark.sql.types import ArrayType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _h(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: load_state(b).query(theta)[0].tolist())
-
-    return _h
+    return pd.Series(
+        [load_state(b).query(float(t))[0].tolist() for b, t in zip(state, theta)]
+    )
 
 
 # -- broadcast point queries (big column × small broadcast state) ------------
@@ -247,7 +254,8 @@ def _group_query_udf(spark, state_by_group: dict, from_bytes, query, dtype, retu
     broadcast ``state_by_group``; rows whose group has no state get
     0 / False. Per batch the group column is factorized once and each
     group's kernel answers its rows in one vectorized call; a null group
-    is the ``None`` key. Kernels deserialize once per worker process."""
+    is the ``None`` key. Kernels deserialize once per task: the cache
+    lives in the UDF's closure, which a worker unpickles for every task."""
     bc = spark.sparkContext.broadcast({k: bytes(v) for k, v in state_by_group.items()})
     cache: dict = {}
 
@@ -284,7 +292,7 @@ def membership_udf(spark, state_by_group: dict):
     pass ``{None: blob}`` with a null group column
     (``F.lit(None).cast("string")``): a null group looks up the ``None``
     key. Rows of a group without a filter are not members. The dict is a
-    Spark broadcast: one copy per executor, deserialized once.
+    Spark broadcast: one copy per executor, deserialized once per task.
     """
     return _group_query_udf(
         spark, state_by_group, BloomFilter.from_bytes, BloomFilter.query, bool, BooleanType()
@@ -341,75 +349,40 @@ def collect_states(
     return {tuple(r[:-1]): bytes(r[-1]) for r in rows}
 
 
+# SQL name → estimator; the ``tdigest_*`` names are the historical
+# spellings of the kind-generic ``sketch_*`` estimators
+SQL_FUNCTIONS = {
+    "hll_count": hll_count,
+    "ams_f2": ams_f2,
+    "ams_l2": ams_l2,
+    "kmv_distinct": kmv_distinct,
+    "kmv_jaccard": kmv_jaccard,
+    "kmv_intersection": kmv_intersection,
+    "kmv_difference": kmv_difference,
+    "bloom_len": bloom_len,
+    "cms_total": cms_total,
+    "reservoir_seen": reservoir_seen,
+    "reservoir_size": reservoir_size,
+    "tdigest_quantile": sketch_quantile,
+    "sketch_quantile": sketch_quantile,
+    "tdigest_cdf": sketch_cdf,
+    "sketch_cdf": sketch_cdf,
+    "heavy_hitters": heavy_hitters,
+}
+
+
 def register_sql_functions(spark) -> None:
-    """Expose the state-reading estimators to ``spark.sql`` so merged
-    sketch tables are queryable from plain SQL::
+    """Expose the state-reading estimators of :data:`SQL_FUNCTIONS` to
+    ``spark.sql`` so merged sketch tables are queryable from plain SQL::
 
         spark.sql("SELECT source, hll_count(state) FROM states "
                   "WHERE sketch = 'hll'")
 
-    Registered: hll_count, bloom_len, cms_total, ams_f2, ams_l2,
-    kmv_distinct, kmv_jaccard(a, b), kmv_intersection(a, b), kmv_difference(a, b),
-    reservoir_seen, reservoir_size, tdigest_quantile(state, q),
-    tdigest_cdf(state, x), heavy_hitters(state, theta) — the last works
-    on both lossy and spacesaving states — and the kind-generic aliases
-    sketch_quantile / sketch_cdf (same UDFs; the codec dispatch reads
-    any quantile-bearing state: tdigest / kll / ddsketch).
+    Each name registers the same module-level UDF a DataFrame calls
+    (``sketch_quantile("state", F.lit(0.5))`` is
+    ``sketch_quantile(state, 0.5)`` in SQL). ``heavy_hitters`` reads
+    lossy and spacesaving states, ``sketch_quantile`` tdigest, kll and
+    ddsketch states, ``sketch_cdf`` tdigest and ddsketch states.
     """
-    spark.udf.register("hll_count", hll_count)
-    spark.udf.register("ams_f2", ams_f2)
-    spark.udf.register("ams_l2", ams_l2)
-    spark.udf.register("kmv_distinct", kmv_distinct)
-    spark.udf.register("kmv_jaccard", kmv_jaccard)
-    spark.udf.register("kmv_intersection", kmv_intersection)
-    spark.udf.register("kmv_difference", kmv_difference)
-    spark.udf.register("bloom_len", bloom_len)
-    spark.udf.register("cms_total", cms_total)
-    spark.udf.register("reservoir_seen", reservoir_seen)
-    spark.udf.register("reservoir_size", reservoir_size)
-
-    @F.pandas_udf(DoubleType())
-    def _tdigest_quantile(state: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(load_state(b).quantile(float(qq))) for b, qq in zip(state, q)]
-        )
-
-    @F.pandas_udf(DoubleType())
-    def _tdigest_cdf(state: pd.Series, x: pd.Series) -> pd.Series:
-        def one(b, xx):
-            k = load_state(b)
-            if not hasattr(k, "cdf"):
-                # ADVICE r5: the kind-generic sketch_cdf alias invites
-                # use on KLL states, which have no cdf — fail with the
-                # kind named instead of an opaque executor AttributeError
-                raise TypeError(
-                    f"sketch_cdf: state kind {type(k).__name__!r} has no cdf "
-                    "(supported: tdigest, ddsketch)"
-                )
-            return float(k.cdf(float(xx)))
-
-        return pd.Series([one(b, xx) for b, xx in zip(state, x)])
-
-    spark.udf.register("tdigest_quantile", _tdigest_quantile)
-    spark.udf.register("tdigest_cdf", _tdigest_cdf)
-    # kind-generic aliases: the codec dispatch means the same UDFs read
-    # ANY quantile-bearing state (tdigest, kll, ddsketch — quantile;
-    # tdigest, ddsketch — cdf); the aliases make that intent visible in
-    # SQL without breaking the historical tdigest_* names
-    spark.udf.register("sketch_quantile", _tdigest_quantile)
-    spark.udf.register("sketch_cdf", _tdigest_cdf)
-
-    from pyspark.sql.types import ArrayType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _heavy_hitters(state: pd.Series, theta: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                load_state(bytes(b)).query(float(t))[0].tolist()
-                for b, t in zip(state, theta)
-            ]
-        )
-
-    # works on both heavy-hitter families via load_state dispatch:
-    # LossyCounter (f >= (theta-eps)*n) and SpaceSaving (f+err >= phi*n)
-    spark.udf.register("heavy_hitters", _heavy_hitters)
+    for name, udf in SQL_FUNCTIONS.items():
+        spark.udf.register(name, udf)

@@ -180,9 +180,7 @@ class FrequentDirections:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "FrequentDirections":
-        kind, params, payload = unpack(bytes(blob))
-        if kind != cls.kind:
-            raise ValueError(f"not an fd blob: {kind}")
+        _, params, payload = unpack(blob, cls.kind)
         out = cls(params["l"], params["dim"])
         n, rows, fro2, delta = struct.unpack_from("<qqdd", payload, 0)
         mat = np.frombuffer(payload, dtype=np.float64, offset=32).reshape(

@@ -25,7 +25,7 @@ from pathlib import Path
 
 import numpy as np
 
-from .codec import SketchCodecError, check_mergeable, pack, unpack
+from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, hash_i64
 
 _U = np.uint64
@@ -210,8 +210,6 @@ class HLL:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "HLL":
-        kind, params, payload = unpack(data)
-        if kind != KIND:
-            raise SketchCodecError(f"expected {KIND} state, got {kind}")
+        _, params, payload = unpack(data, KIND)
         regs = np.frombuffer(payload, dtype=np.uint8)
         return cls(params["p"], params["seed"], regs.copy())

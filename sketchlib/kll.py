@@ -21,7 +21,7 @@ import struct
 
 import numpy as np
 
-from .codec import SketchCodecError, check_mergeable, pack, unpack
+from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, splitmix64
 
 KIND = "kll"
@@ -157,9 +157,7 @@ class KLL:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "KLL":
-        kind, params, payload = unpack(data)
-        if kind != KIND:
-            raise SketchCodecError(f"expected {KIND} state, got {kind}")
+        _, params, payload = unpack(data, KIND)
         n, counter, n_levels, vmin, vmax, _ = struct.unpack_from("<qqqddq", payload, 0)
         off = struct.calcsize("<qqqddq")
         levels = []

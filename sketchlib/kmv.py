@@ -209,8 +209,6 @@ class KMV:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "KMV":
-        kind, params, payload = unpack(bytes(blob))
-        if kind != KIND:
-            raise ValueError(f"not a kmv blob: {kind}")
+        _, params, payload = unpack(blob, KIND)
         mins = np.frombuffer(payload, dtype=np.uint64).copy()
         return cls(int(params["k"]), int(params.get("seed", DEFAULT_SEED)), mins)

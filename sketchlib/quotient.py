@@ -247,9 +247,7 @@ class QuotientFilter:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "QuotientFilter":
-        kind, params, payload = unpack(data)
-        if kind != "quotient":
-            raise ValueError(f"expected quotient state, got {kind}")
+        _, params, payload = unpack(data, "quotient")
         size = 1 << params["q"]
         nbytes = (size + 7) // 8
         n_elements = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])

@@ -124,9 +124,7 @@ class Reservoir:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "Reservoir":
-        kind, params, payload = unpack(data)
-        if kind != "reservoir":
-            raise ValueError(f"expected reservoir state, got {kind}")
+        _, params, payload = unpack(data, "reservoir")
         n = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         sz = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         sample = np.frombuffer(payload, dtype=np.float64, count=sz, offset=16).copy()

@@ -30,7 +30,7 @@ import struct
 
 import numpy as np
 
-from .codec import SketchCodecError, check_mergeable, pack, unpack
+from .codec import check_mergeable, pack, unpack
 
 KIND = "tdigest"
 
@@ -265,9 +265,7 @@ class TDigest:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TDigest":
-        kind, params, payload = unpack(data)
-        if kind != KIND:
-            raise SketchCodecError(f"expected {KIND} state, got {kind}")
+        _, params, payload = unpack(data, KIND)
         nc, ns, vmin, vmax = struct.unpack_from("<qqdd", payload, 0)
         off = 32
         sums = np.frombuffer(payload, dtype=np.float64, count=nc, offset=off).copy()

@@ -188,9 +188,7 @@ class LossyCounter:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "LossyCounter":
-        kind, params, payload = unpack(data)
-        if kind != "lossy":
-            raise ValueError(f"expected lossy state, got {kind}")
+        _, params, payload = unpack(data, "lossy")
         n = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         sz = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         off = 16
@@ -331,9 +329,7 @@ class SpaceSaving:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "SpaceSaving":
-        kind, params, payload = unpack(data)
-        if kind != "spacesaving":
-            raise ValueError(f"expected spacesaving state, got {kind}")
+        _, params, payload = unpack(data, "spacesaving")
         n, err, sz = (int(v) for v in np.frombuffer(payload, dtype=np.int64, count=3))
         off = 24
         items = np.frombuffer(payload, dtype=np.int64, count=sz, offset=off).copy()
@@ -419,9 +415,7 @@ class TopK:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TopK":
-        kind, params, payload = unpack(data)
-        if kind != "topk":
-            raise ValueError(f"expected topk state, got {kind}")
+        _, params, payload = unpack(data, "topk")
         blen = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         cms = CountMinSketch.from_bytes(payload[8 : 8 + blen])
         off = 8 + blen

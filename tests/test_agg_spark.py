@@ -106,7 +106,7 @@ def test_quantile_estimates_close_to_exact(merged, seq_small):
     }
     for sk in ("td_ntok", "kll_ntok"):
         rows = merged.filter(F.col("sketch") == sk).select(
-            "source", E.quantile_udf(0.5)("state").alias("p50")
+            "source", E.sketch_quantile("state", F.lit(0.5)).alias("p50")
         ).collect()
         for r in rows:
             # n_tok spans 16..500; sketch p50 within 5% of the span

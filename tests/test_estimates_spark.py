@@ -4,11 +4,11 @@ from pyspark.sql import functions as F
 
 from sketchlib.agg import SketchSpec, sketch_aggregate
 from sketchlib.estimates import (
-    heavy_hitters_udf,
+    heavy_hitters,
     moment_udf,
     reservoir_seen,
     reservoir_size,
-    topk_items_udf,
+    topk_items,
 )
 
 
@@ -58,7 +58,7 @@ def test_estimate_udfs(spark, seq_small):
         assert res[src] == (min(50, n), n)
 
     tk = merged.filter(F.col("sketch") == "tk").select(
-        "source", topk_items_udf()("state").alias("top")
+        "source", topk_items("state").alias("top")
     )
     for r in tk.collect():
         assert len(r["top"]) == 3
@@ -68,7 +68,7 @@ def test_estimate_udfs(spark, seq_small):
     # P(token=0) = (1/V)^(1/3) ≈ 2.7% under the cube-skew generator, so
     # query at theta=0.02 (bound (0.02-eps)·n = 1.5% < 2.7%)
     hh = merged.filter(F.col("sketch") == "lossy").select(
-        "source", heavy_hitters_udf(0.02)("state").alias("hh")
+        "source", heavy_hitters("state", F.lit(0.02)).alias("hh")
     )
     for r in hh.collect():
         assert 0 in r["hh"]
@@ -128,3 +128,62 @@ def test_sql_heavy_hitters_both_families(spark, seq_small):
         hh_true = {t for (s, t), c in exact.items() if s == src and c >= 0.02 * n}
         assert hh_true <= got[(src, "lossy")]
         assert hh_true <= got[(src, "ss")]
+
+
+def test_dataframe_and_sql_share_one_estimator(spark, seq_small):
+    """Each SQL estimator name is the module-level UDF a DataFrame
+    calls: the same answers, and on a KLL state ``sketch_cdf`` fails
+    with the same kind-naming message from either surface."""
+    import pytest
+
+    from sketchlib.estimates import (
+        SQL_FUNCTIONS,
+        register_sql_functions,
+        sketch_cdf,
+        sketch_quantile,
+    )
+
+    assert len(SQL_FUNCTIONS) == 16
+    assert SQL_FUNCTIONS["tdigest_quantile"] is SQL_FUNCTIONS["sketch_quantile"] is sketch_quantile
+    assert SQL_FUNCTIONS["tdigest_cdf"] is SQL_FUNCTIONS["sketch_cdf"] is sketch_cdf
+    register_sql_functions(spark)
+    for name in SQL_FUNCTIONS:
+        assert spark.catalog.functionExists(name), name
+
+    specs = [
+        SketchSpec("td", "tdigest", "n_tok", {"delta": 200.0}),
+        SketchSpec("kll", "kll", "n_tok", {"k": 200}),
+    ]
+    merged = sketch_aggregate(seq_small, ["source"], specs, fanout=4).cache()
+    merged.createOrReplaceTempView("one_estimator_states")
+    df = {
+        (r["source"], r["sketch"]): (r["q"], r["c"])
+        for r in merged.filter(F.col("sketch") == "td")
+        .select(
+            "source",
+            "sketch",
+            sketch_quantile("state", F.lit(0.5)).alias("q"),
+            sketch_cdf("state", F.lit(100.0)).alias("c"),
+        )
+        .collect()
+    }
+    sql = {
+        (r["source"], r["sketch"]): (r["q"], r["c"])
+        for r in spark.sql(
+            "SELECT source, sketch, tdigest_quantile(state, 0.5) AS q, "
+            "sketch_cdf(state, 100.0) AS c FROM one_estimator_states "
+            "WHERE sketch = 'td'"
+        ).collect()
+    }
+    assert df and df == sql
+
+    kll = merged.filter(F.col("sketch") == "kll")
+    msg = "sketch_cdf: state kind 'KLL' has no cdf"
+    with pytest.raises(Exception, match=msg):
+        kll.select(sketch_cdf("state", F.lit(100.0))).collect()
+    with pytest.raises(Exception, match=msg):
+        spark.sql(
+            "SELECT sketch_cdf(state, 100.0) FROM one_estimator_states "
+            "WHERE sketch = 'kll'"
+        ).collect()
+    merged.unpersist()

@@ -24,7 +24,7 @@ def main() -> None:
 
     # resolved from --py-files sketchlib.zip on driver and executors
     from sketchlib.agg import SketchSpec, sketch_aggregate
-    from sketchlib.estimates import hll_count, quantile_udf
+    from sketchlib.estimates import hll_count, sketch_quantile
     from sketchlib.gen import sequences_df
 
     seqs = sequences_df(spark, n_docs, partitions=8)
@@ -40,7 +40,7 @@ def main() -> None:
         .select("source", hll_count("state").alias("distinct_tokens"), "n_updates")
         .join(
             merged.filter(F.col("sketch") == "tdigest").select(
-                "source", quantile_udf(0.5)("state").alias("median_n_tok")
+                "source", sketch_quantile("state", F.lit(0.5)).alias("median_n_tok")
             ),
             "source",
         )
