@@ -179,11 +179,11 @@ def _state_folder(stream_df: DataFrame, specs: list[SketchSpec], keep: list[str]
     are never values (the consumer drops them too), and the ``keep``
     columns travel under their own names."""
     hashed, rspecs = _resolve_specs(stream_df, specs)
-    narrow, consume = _plan_stage1(hashed, [], rspecs)  # checks the specs
-    schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in narrow.schema])
+    needed, consume = _plan_stage1(hashed.schema, [], rspecs)  # checks the specs
+    schema = pa.schema([(f.name, _pa_type(f.dataType)) for f in needed])
     cols = [F.col(c) for c in dict.fromkeys(keep)]
     flagged = set()
-    for f in narrow.schema:
+    for f in needed:
         x = F.col(f.name)
         if isinstance(f.dataType, ArrayType):
             x = F.filter(x, lambda e: e.isNotNull())

@@ -334,3 +334,128 @@ def test_mixed_int_widths_across_files(spark, tmp_path):
             sketch_aggregate_direct(spark, str(tmp_path), ["source"], specs, tasks=tasks).collect()
         )
         assert got == want, tasks
+
+
+# -- planning: the schema comes from the parquet footer, not a Spark job ---
+
+
+def test_planning_launches_no_job(spark, seq_path):
+    """Planning the direct build runs no Spark job; one collect runs
+    exactly two, stage 1 and the merge."""
+    sc = spark.sparkContext
+    group = "direct-feed-planning"
+    sc.setJobGroup(group, "plan and run one direct build")
+    try:
+        merged = sketch_aggregate_direct(spark, seq_path, ["source"], SPECS)
+        planned = list(sc.statusTracker().getJobIdsForGroup(group))
+        merged.collect()
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert planned == []
+    assert len(ran) == 2, ran
+
+
+def _planned_schema(path, group_cols, specs):
+    """The narrowed schema the direct feed plans with for ``path``."""
+    from sketchlib.agg import _footer_schema, _needed_cols, _plan_stage1
+
+    needed, _ = _plan_stage1(
+        _footer_schema(path, _needed_cols(group_cols, specs)), group_cols, specs
+    )
+    return needed
+
+
+def test_footer_schema_matches_spark(spark, seq_path, tmp_path):
+    """For each input the footer schema equals what ``spark.read.parquet``
+    infers for the needed columns, types and nullability both: the seq
+    corpus, a Spark-written REQUIRED ``id``, Spark-written date and
+    (INT96) timestamp group columns, pyarrow large types and a zoned
+    timestamp, and each file of the mixed int32/int64 manifest."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    hll_id = [SketchSpec("hll", "hll", "id", {"p": 12, "seed": SEED})]
+    cases = []
+    seq_first = sorted(glob.glob(os.path.join(seq_path, "*.parquet")))[0]
+    cases.append((seq_first, ["source"], SPECS))
+
+    spark_dir = str(tmp_path / "spark_written")
+    spark.range(0, 200, 1, 1).select(
+        "id",
+        F.expr("date_add(date'2024-01-01', cast(id % 3 as int))").alias("day"),
+        F.expr("timestamp_seconds(id % 4)").alias("ts"),
+        (F.col("id") % 100).cast("byte").alias("b"),
+    ).write.parquet(spark_dir)
+    (spark_file,) = glob.glob(os.path.join(spark_dir, "*.parquet"))
+    assert pq.read_schema(spark_file).field("id").nullable is False  # REQUIRED
+    hll_b = SketchSpec("hll_b", "hll", "b", {"p": 12, "seed": SEED})
+    cases.append((spark_file, [], hll_id))
+    cases.append((spark_file, ["day", "ts"], hll_id + [hll_b]))
+
+    # large strings and lists, a zoned timestamp (as other writers leave them)
+    large = str(tmp_path / "large.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "source": pa.array(["a", "b"], pa.large_string()),
+                "at": pa.array([1, 2], pa.timestamp("ms", tz="Europe/Paris")),
+                "tokens": pa.array([[1, 2], [3]], pa.large_list(pa.int64())),
+            }
+        ),
+        large,
+    )
+    cases.append((large, ["source", "at"], SPECS[:1]))
+
+    mixed = str(tmp_path / "mixed")
+    os.makedirs(mixed)
+    paths = _write_task_files(mixed, n_files=2, docs=50, seed=9)
+    tbl = pq.read_table(paths[1])
+    i = tbl.schema.get_field_index("n_tok")
+    pq.write_table(tbl.set_column(i, "n_tok", tbl.column("n_tok").cast(pa.int64())), paths[1])
+    n_tok = [SketchSpec("hll", "hll", "n_tok", {"p": 12, "seed": SEED})]
+    cases += [(p, ["source"], n_tok) for p in paths]
+
+    for path, group_cols, specs in cases:
+        needed = _planned_schema(path, group_cols, specs)
+        assert needed == spark.read.parquet(path).select(*needed.names).schema, path
+
+    # date and INT96 timestamp groups build through the direct feed as
+    # through the JVM feed
+    got = sketch_aggregate_direct(spark, spark_dir, ["day", "ts"], hll_id).collect()
+    want = sketch_aggregate(spark.read.parquet(spark_dir), ["day", "ts"], hll_id).collect()
+    key = lambda r: (r["day"], r["ts"])  # noqa: E731
+    assert {key(r): bytes(r["state"]) for r in got} == {
+        key(r): bytes(r["state"]) for r in want
+    }
+    assert len(got) == 12
+
+
+def test_footer_schema_unmappable_types(spark, tmp_path):
+    """A column of a type with no Spark mapping is never looked at unless
+    the build reads it; then planning raises ``TypeError`` naming it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = _write_task_files(str(tmp_path), n_files=2, docs=200, seed=5)
+    for p in paths:
+        tbl = pq.read_table(p)
+        n = tbl.num_rows
+        tbl = tbl.append_column("dec", pa.array([1] * n, pa.decimal128(10, 2))).append_column(
+            "u", pa.array(range(n), pa.uint32())
+        )
+        pq.write_table(tbl, p)
+    specs = SPECS[:3]
+    got = _states(sketch_aggregate_direct(spark, str(tmp_path), ["source"], specs).collect())
+    want = _states(
+        sketch_aggregate(spark.read.parquet(str(tmp_path)), ["source"], specs).collect()
+    )
+    assert got == want
+    with pytest.raises(TypeError, match="'dec'"):
+        build_partials_direct(spark, str(tmp_path), ["dec"], specs)
+    with pytest.raises(TypeError, match="'u'"):
+        build_partials_direct(
+            spark, str(tmp_path), ["source"], [SketchSpec("h", "hll", "u", {"p": 12})]
+        )

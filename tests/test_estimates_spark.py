@@ -1,5 +1,6 @@
 """Estimate-column UDFs over merged sketch states."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from sketchlib.agg import SketchSpec, sketch_aggregate
@@ -187,3 +188,77 @@ def test_dataframe_and_sql_share_one_estimator(spark, seq_small):
             "WHERE sketch = 'kll'"
         ).collect()
     merged.unpersist()
+
+
+def _hll_state_view(spark, name: str, n: int) -> None:
+    from sketchlib.hll import HLL
+
+    sk = HLL(p=12, seed=1)
+    sk.update(np.arange(n, dtype=np.int64))
+    spark.createDataFrame([(sk.to_bytes(),)], "state binary").createOrReplaceTempView(name)
+
+
+def test_register_sql_functions_restores_overrides(spark):
+    """A second call re-registers every name, so a name the user has
+    overridden answers as the estimator again; each name keeps its own
+    default output column name."""
+    from sketchlib.estimates import register_sql_functions
+
+    _hll_state_view(spark, "register_again_states", 1000)
+    q = "SELECT hll_count(state) FROM register_again_states"
+    register_sql_functions(spark)
+    est = spark.sql(q).first()[0]
+    assert abs(est - 1000) <= 50, est
+    spark.udf.register("hll_count", lambda s: -1, "long")
+    assert spark.sql(q).first()[0] == -1
+    register_sql_functions(spark)
+    assert spark.sql(q).first()[0] == est
+    cols = spark.sql(
+        "SELECT tdigest_quantile(state, 0.5), sketch_quantile(state, 0.5) "
+        "FROM register_again_states"
+    ).columns
+    assert cols == ["tdigest_quantile(state, 0.5)", "sketch_quantile(state, 0.5)"]
+
+
+_RESTART_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+sys.path.insert(0, {tests!r})
+from sketchlib import estimates
+from sketchlib.session import get_spark
+from test_estimates_spark import _hll_state_view
+
+for _ in range(2):
+    spark = get_spark(app="sketchlib-register-restart", cores=1, shuffle_partitions=1)
+    estimates.register_sql_functions(spark)
+    _hll_state_view(spark, "restart_states", 1000)
+    print("EST", spark.sql("SELECT hll_count(state) FROM restart_states").first()[0])
+    print("UDF", estimates._SQL_JUDFS[spark.sparkContext]["hll_count"]._target_id)
+    spark.stop()
+"""
+
+
+def test_register_sql_functions_after_session_restart(tmp_path):
+    """No cached UDF handle outlives its SparkContext: after
+    ``spark.stop()`` and a new ``get_spark()``, SQL ``hll_count`` works.
+    Runs in its own process, as the test session's Spark stays up."""
+    import os
+    import subprocess
+    import sys
+
+    tests = os.path.dirname(os.path.abspath(__file__))
+    script = _RESTART_SCRIPT.format(repo=os.path.dirname(tests), tests=tests)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    lines = [line.split() for line in out.stdout.splitlines() if line[:4] in ("EST ", "UDF ")]
+    ests = [int(v) for tag, v in lines if tag == "EST"]
+    udfs = [v for tag, v in lines if tag == "UDF"]
+    assert len(ests) == 2 and ests[0] == ests[1], out.stdout
+    assert abs(ests[0] - 1000) <= 50, ests
+    assert len(udfs) == 2 and udfs[0] != udfs[1], out.stdout  # built again
