@@ -23,7 +23,9 @@ stage 2 (*tree merge*, :func:`merge_partials`)
     ``applyInPandas`` because Python has no binary-state Aggregator API
     (SURVEY.md §4 custom item 1). Merges are associative + commutative
     (reference merge-equivalence contract, hyperloglog/mod.rs:556-574),
-    so partition order and salt layout never change results.
+    so partition order and salt layout never change a kernel's state
+    beyond its declared ``merge_contract`` (:data:`KERNELS`): not at all
+    for ``"bytes"`` kernels, within published bounds for ``"bounded"``.
 
     Every stage-2 entry point (:func:`sketch_aggregate`,
     :func:`sketch_aggregate_direct`, ``streaming.current_states`` /
@@ -80,41 +82,37 @@ from .reservoir import Reservoir
 from .tdigest import TDigest
 from .topk import LossyCounter, SpaceSaving, TopK
 
+# Each kernel class declares, next to its code: ``kind`` (SketchSpec.kind
+# and its blobs' header kind); ``input``: "hashed" (int64 items; string
+# columns are xxhash64'd JVM-side), "float" (float64 values) or
+# "weighted" (float64 values, optional SketchSpec.weight_col); and
+# ``merge_contract``: "bytes" (merged partials are byte-identical to one
+# kernel fed every value, under any partitioning and merge-tree shape) or
+# "bounded" (they agree within the kernel's published bounds). A class
+# with update_unique(uniq, counts) gets update's bytes from deduplicated
+# values, so the stage-1 consumer dedups for exactly those.
 KERNELS = {
-    "ams": AMSCountSketch,
-    "fd": FrequentDirections,
-    "hll": HLL,
-    "kmv": KMV,
-    "cms": CountMinSketch,
-    "bloom": BloomFilter,
-    "tdigest": TDigest,
-    "ddsketch": DDSketch,
-    "kll": KLL,
-    "lossy": LossyCounter,
-    "spacesaving": SpaceSaving,
-    "topk": TopK,
-    "reservoir": Reservoir,
+    c.kind: c
+    for c in (
+        AMSCountSketch, FrequentDirections, HLL, KMV, CountMinSketch, BloomFilter, TDigest,
+        DDSketch, KLL, LossyCounter, SpaceSaving, TopK, Reservoir,
+    )
 }
-
-_NUMERIC_KINDS = ("tdigest", "kll", "reservoir", "fd", "ddsketch")  # consume float64
-# consume int64; string inputs are pre-hashed JVM-side (note: for lossy /
-# topk over strings the emitted items are therefore xxhash64 values — use
-# topk_exact_rescore when the original values must appear in the output)
-_HASHED_KINDS = ("hll", "cms", "bloom", "lossy", "spacesaving", "topk", "ams", "kmv")
 
 
 @dataclass(frozen=True)
 class SketchSpec:
     """One sketch to build: which kernel, over which column, with which
-    params. ``col`` may be a scalar numeric column, a string column
-    (pre-hashed JVM-side via xxhash64 — never per-row Python), or an
-    ``array<int>`` column (consumed flattened, zero-copy)."""
+    params. ``col`` may be a scalar numeric column, an ``array<int>``
+    column (consumed flattened, zero-copy) or, for a ``"hashed"``
+    kernel, a string column (pre-hashed JVM-side via xxhash64 — never
+    per-row Python)."""
 
     name: str
     kind: str
     col: str
     params: dict = field(default_factory=dict)
-    weight_col: str | None = None  # tdigest only
+    weight_col: str | None = None  # "weighted" kernels only (tdigest)
 
     def make(self):
         return KERNELS[self.kind](**self.params)
@@ -126,9 +124,10 @@ def load_state(blob: bytes):
     payload once. A kind outside :data:`KERNELS` raises
     :class:`~sketchlib.codec.SketchCodecError`."""
     kind = read_kind(blob)
-    if kind not in KERNELS:
+    cls = KERNELS.get(kind)
+    if cls is None:
         raise SketchCodecError(f"unknown state kind {kind!r}")
-    return KERNELS[kind].from_bytes(blob)
+    return cls.from_bytes(blob)
 
 
 # ---------------------------------------------------------------------------
@@ -228,14 +227,19 @@ def partials_schema(schema: StructType | DataFrame, group_cols: list[str]) -> St
 
 
 def _resolve_specs(df: DataFrame, specs: list[SketchSpec]) -> tuple[DataFrame, list[SketchSpec]]:
-    """Pre-hash string-valued sketch inputs JVM-side (xxhash64) so Python
-    only ever sees fixed-width integers. Scalar strings hash directly;
-    ``array<string>`` hashes element-wise inside ``transform`` (still
-    whole-stage codegen, no explode, no per-row Python)."""
+    """Check the specs (:func:`_check_specs`), then pre-hash the
+    string-valued inputs of ``"hashed"`` kernels JVM-side (xxhash64) so
+    Python only ever sees fixed-width integers. Scalar strings hash
+    directly; ``array<string>`` hashes element-wise inside ``transform``
+    (still whole-stage codegen, no explode, no per-row Python). So the
+    items that lossy/spacesaving/topk over a string column report are
+    xxhash64 values: use ``topk_exact_rescore`` when the original values
+    must appear in the output."""
+    _check_specs(specs)
     out = df
     resolved = []
     for spec in specs:
-        if spec.kind not in _HASHED_KINDS:
+        if KERNELS[spec.kind].input != "hashed":
             resolved.append(spec)
             continue
         dt = out.schema[spec.col].dataType
@@ -374,9 +378,10 @@ def _grouped_unique_counts(arr: pa.Array, codes: np.ndarray, G: int):
     if not (rng <= max(4 * values.size, 1 << 16) and rng < (1 << 26) and G * rng < (1 << 31)):
         return None
     # comb = vcodes·rng + (value − vmin), kept in int32 when it fits
-    # (half the memory traffic of the int64 path)
+    # (half the memory traffic of the int64 path); a uint32 → int32
+    # cast must not wrap
     small = values.dtype.itemsize <= 4 and (
-        values.dtype.kind == "i" or vmax < (1 << 31)  # uint32 → int32 must not wrap
+        np.issubdtype(values.dtype, np.signedinteger) or vmax < (1 << 31)
     )
     if small:
         comb = values.astype(np.int32, copy=True)
@@ -421,10 +426,22 @@ def _consume_partials(
     default JVM-scan feed (:func:`build_partials`), the direct
     parquet-split feed (:func:`build_partials_direct`) and the stateful
     stream operators — so their states are built by byte-identical code
-    and differ only in partition boundaries."""
+    and differ only in partition boundaries. ``specs_payload`` holds one
+    ``(name, kind, col, params, weight_col)`` tuple per spec; each kind's
+    class is looked up once per call, and its declared ``input`` and
+    ``update_unique`` decide how its values are fed (see
+    :data:`KERNELS`)."""
+    specs = [(n, KERNELS[kind], c, p, w) for n, kind, c, p, w in specs_payload]
     states: dict = {}  # (gkey, name) -> kernel
     n_updates: dict = {}
     n_rows: dict = {}
+
+    def kernel_for(skey, cls, params):
+        kernel = states.get(skey)
+        if kernel is None:
+            kernel = states[skey] = cls(**params)
+            n_updates[skey] = 0
+        return kernel
 
     for batch in batches:
         n = batch.num_rows
@@ -459,7 +476,7 @@ def _consume_partials(
             row_order = np.argsort(codes, kind="stable")
             row_bounds = np.searchsorted(codes[row_order], np.arange(G + 1))
         col_cache: dict = {}
-        uniq_cache: dict = {}  # (col, gi) -> (uniq, counts), shared by hashed kinds
+        uniq_cache: dict = {}  # (col, gi) -> (uniq, counts), shared by update_unique kernels
         gu_cache: dict = {}  # col -> per-group (uniq, counts) list | None
 
         def grouped(col: str, want_float: bool):
@@ -478,14 +495,10 @@ def _consume_partials(
                 gu_cache[col] = _grouped_unique_counts(batch.column(col), codes, G)
             return gu_cache[col]
 
-        for name, kind, col, params, wcol in specs_payload:
-            want_float = kind in _NUMERIC_KINDS
-            if (
-                G > 1  # G==1 needs no reorder; plain unique_counts is cheaper
-                and kind in _HASHED_KINDS
-                and kind != "lossy"
-                and wcol is None
-            ):
+        for name, cls, col, params, wcol in specs:
+            dedup = hasattr(cls, "update_unique")
+            # G==1 needs no reorder; plain unique_counts below is cheaper
+            if G > 1 and dedup:
                 gu = grouped_uniques(col)
                 if gu is not None:
                     for gi in range(G):
@@ -493,15 +506,10 @@ def _consume_partials(
                         if uniq.size == 0:
                             continue
                         skey = (uniq_keys[gi], name)
-                        kernel = states.get(skey)
-                        if kernel is None:
-                            kernel = KERNELS[kind](**params)
-                            states[skey] = kernel
-                            n_updates[skey] = 0
-                        kernel.update_unique(uniq, cnts)
+                        kernel_for(skey, cls, params).update_unique(uniq, cnts)
                         n_updates[skey] += int(cnts.sum())
                     continue
-            values, bounds, vlens = grouped(col, want_float)
+            values, bounds, vlens = grouped(col, cls.input != "hashed")
             if values.size == 0:
                 continue
             weights = None
@@ -512,23 +520,16 @@ def _consume_partials(
                 # values with the wrong rows' weights
                 if not np.array_equal(wbounds, bounds) or not _rows_aligned(vlens, wlens):
                     raise ValueError(f"weight col {wcol} nulls misaligned with {col}")
-            dedupable = kind in _HASHED_KINDS and kind != "lossy"
             for gi in range(G):
                 lo, hi = int(bounds[gi]), int(bounds[gi + 1])
                 if lo == hi:
                     continue
-                gkey = uniq_keys[gi]
-                skey = (gkey, name)
-                kernel = states.get(skey)
-                if kernel is None:
-                    kernel = KERNELS[kind](**params)
-                    states[skey] = kernel
-                    n_updates[skey] = 0
-                if dedupable:
-                    # one dedup per (col, group), shared by hll/cms/
-                    # bloom/topk — their updates are count-aware or
-                    # idempotent, so this is exact (lossy is windowed
-                    # and consumes the raw stream instead)
+                skey = (uniq_keys[gi], name)
+                kernel = kernel_for(skey, cls, params)
+                if dedup:
+                    # one dedup per (col, group), shared by every
+                    # update_unique kernel on the column; lossy is
+                    # windowed and consumes the raw stream instead
                     uk = (col, gi)
                     uc = uniq_cache.get(uk)
                     if uc is None:
@@ -537,7 +538,7 @@ def _consume_partials(
                         uc = unique_counts(values[lo:hi])
                         uniq_cache[uk] = uc
                     kernel.update_unique(*uc)
-                elif kind == "tdigest" and weights is not None:
+                elif weights is not None:
                     kernel.update(values[lo:hi], weights[lo:hi])
                 else:
                     kernel.update(values[lo:hi])
@@ -569,13 +570,26 @@ def _consume_partials(
 
 
 def _check_specs(specs: list[SketchSpec]) -> None:
-    """Reject an empty spec list and repeated names: every operator keys
-    its kernels and output rows by ``SketchSpec.name``."""
+    """Reject, at planning, specs no task could build: an empty list,
+    repeated names (every operator keys its kernels and output rows by
+    ``SketchSpec.name``), a kind outside :data:`KERNELS`, and a
+    ``weight_col`` on a kernel whose input is not ``"weighted"`` (it
+    would be ignored)."""
     if not specs:
         raise ValueError("need at least one SketchSpec")
     names = [s.name for s in specs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate sketch names: {names}")
+    for s in specs:
+        cls = KERNELS.get(s.kind)
+        if cls is None:
+            raise ValueError(
+                f"spec {s.name!r}: unknown kind {s.kind!r}; known kinds: {sorted(KERNELS)}"
+            )
+        if s.weight_col is not None and cls.input != "weighted":
+            raise ValueError(
+                f"spec {s.name!r}: kind {s.kind!r} takes no weight_col (input {cls.input!r})"
+            )
 
 
 def _needed_cols(group_cols: list[str], specs: list[SketchSpec]) -> list[str]:
@@ -592,9 +606,28 @@ def _plan_stage1(schema: StructType, group_cols: list[str], specs: list[SketchSp
     """The planning every stage-1 feed shares: check the specs, narrow
     ``schema`` to the columns they read (:func:`_needed_cols` order) and
     bind :func:`_consume_partials` to them. Returns ``(needed,
-    consume)``; a task calls ``consume(batches, part_id)``."""
+    consume)``; a task calls ``consume(batches, part_id)``.
+
+    A sketch input column still ``string``/``array<string>`` here raises
+    ``ValueError``: no kernel takes strings. The JVM feeds have already
+    hashed the ``"hashed"`` kernels' ones (:func:`_resolve_specs`); the
+    direct feed cannot, since replicating Spark's exact xxhash64 in
+    Python would fork the hash contract."""
     _check_specs(specs)
     needed = StructType([schema[c] for c in _needed_cols(group_cols, specs)])
+    for s in specs:
+        dt = needed[s.col].dataType
+        if isinstance(dt, ArrayType):
+            dt = dt.elementType
+        if isinstance(dt, StringType):
+            if KERNELS[s.kind].input == "hashed":
+                hint = (
+                    "string inputs need the JVM-side xxhash64 pre-hash — "
+                    "use build_partials/sketch_aggregate"
+                )
+            else:
+                hint = f"kind {s.kind!r} takes float64 values"
+            raise ValueError(f"spec {s.name!r} sketches string column {s.col!r}; {hint}")
     pa_group_types = [_pa_type(needed[c].dataType) for c in group_cols]
     specs_payload = [(s.name, s.kind, s.col, dict(s.params), s.weight_col) for s in specs]
 
@@ -776,9 +809,10 @@ def build_partials_direct(
     single file of ≥ 65,536 rows already reached it before). ``part_id``
     is the task's first file index
     (deterministic for a given file list and ``tasks``). Final states
-    are byte-identical for the byte-commutative kinds (hll/cms/bloom/
-    kmv/ams — merge order invisible); order-sensitive kinds agree within
-    their published bounds, exactly as any repartition does. There is
+    keep each kernel's ``merge_contract`` (:data:`KERNELS`): the
+    ``"bytes"`` kernels' are byte-identical to the default feed's, the
+    ``"bounded"`` ones agree within their published bounds, exactly as
+    any repartition of the default feed does. There is
     no per-file resume: resume is the JVM feed's
     (:mod:`sketchlib.checkpoint`). ``premerge`` is accepted only as
     True, the one mode.
@@ -797,10 +831,10 @@ def build_partials_direct(
     ``TypeError``.
 
     Restrictions vs the default feed: inputs must be parquet, and
-    string-valued sketch columns are NOT supported (the default feed
-    hashes them JVM-side with ``xxhash64``; replicating Spark's exact
-    hash in Python would fork the hash contract) — pre-tokenized
-    integer corpora (the north-rule input shape) are the target."""
+    string-valued sketch columns raise ``ValueError`` at planning (the
+    default feed hashes them JVM-side with ``xxhash64``, see
+    :func:`_plan_stage1`) — pre-tokenized integer corpora (the
+    north-rule input shape) are the target."""
     if not premerge:
         raise ValueError("build_partials_direct always pre-merges per task")
     return _direct_partials(spark, _resolve_split_files(source), group_cols, specs, tasks)
@@ -815,19 +849,6 @@ def _direct_partials(
     needed, consume = _plan_stage1(
         _footer_schema(files[0], _needed_cols(group_cols, specs)), group_cols, specs
     )
-    # reject the string-hashed kinds the JVM feed handles
-    for s in specs:
-        if s.kind in _HASHED_KINDS:
-            dt = needed[s.col].dataType
-            is_str = isinstance(dt, StringType) or (
-                isinstance(dt, ArrayType) and isinstance(dt.elementType, StringType)
-            )
-            if is_str:
-                raise ValueError(
-                    f"build_partials_direct: spec {s.name!r} sketches string "
-                    f"column {s.col!r}; string inputs need the JVM-side "
-                    "xxhash64 pre-hash — use build_partials/sketch_aggregate"
-                )
     columns = needed.names
 
     # broadcast the manifest: at 100 TB it's ~10^6 paths, which must ship
@@ -864,12 +885,12 @@ def sketch_aggregate_direct(
     tasks: int | None = None,
 ) -> DataFrame:
     """Direct-feed build + merge (see :func:`build_partials_direct`):
-    one row per (group, sketch). Final HLL/CMS/Bloom/topk states are
-    BYTE-IDENTICAL to :func:`sketch_aggregate` on the same data
-    regardless of how the two feeds split the input (idempotent /
-    summed / OR-ed updates — tested); order-sensitive kernels
-    (t-digest, KLL, reservoir, lossy) agree within their published
-    bounds, exactly as any repartition of the default feed does.
+    one row per (group, sketch). Each state keeps its kernel's
+    ``merge_contract`` (:data:`KERNELS`) against
+    :func:`sketch_aggregate` on the same data, however the two feeds
+    split the input: byte-identical for ``"bytes"`` kernels
+    (hll/cms/bloom/kmv/ams/ddsketch), within published bounds for
+    ``"bounded"`` ones (tdigest/kll/reservoir/lossy/spacesaving/topk/fd).
 
     ``fanout="auto"`` (the default) resolves via :func:`resolve_fanout`
     from the task count, a free per-key partial bound (stage 1 emits one
@@ -929,8 +950,9 @@ def merge_partials(
 
     ``fanout`` enables the salted intermediate level: partials are first
     merged within ``pmod(part_id, fanout)`` buckets (bounding reducer
-    fan-in), then across buckets. Associativity/commutativity of every
-    kernel merge makes the tree shape invisible in the result. The
+    fan-in), then across buckets. The tree shape is invisible in a
+    ``"bytes"`` kernel's state and moves a ``"bounded"`` one only within
+    its published bounds (each class's ``merge_contract``). The
     default None is one merge level, as ``fanout="auto"`` resolves to at
     the entry points below 256 partials per key.
     """
@@ -984,6 +1006,8 @@ def rollup_states(merged: DataFrame, keep_cols: list[str]) -> DataFrame:
     """Multi-granularity rollup by merge-up (SURVEY.md §2.5): fold a
     finer-grained merged-state table to coarser groups (``keep_cols`` ⊂
     its group columns; ``[]`` = global) — a second pass over kilobyte
-    state rows instead of a recompute over the raw data. Exact for every
-    kernel: HLL/Bloom merges are idempotent, CMS/t-digest/KLL additive."""
+    state rows instead of a recompute over the raw data. Each state
+    keeps its kernel's ``merge_contract`` (:data:`KERNELS`) against a
+    direct build at the coarser grain: the same bytes for ``"bytes"``
+    kernels, within published bounds for ``"bounded"`` ones."""
     return merge_partials(merged, keep_cols, fanout=None)

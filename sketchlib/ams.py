@@ -40,8 +40,6 @@ import numpy as np
 from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, hash_i64, k_positions, mix_seed, splitmix64
 
-KIND = "ams"
-
 __all__ = ["CountSketch"]
 
 _U = np.uint64
@@ -56,6 +54,10 @@ class CountSketch:
     ``w`` controls variance (per-row point error ~ sqrt(F2/w)); ``d``
     rows drive the median's failure probability down exponentially.
     """
+
+    kind = "ams"
+    input = "hashed"
+    merge_contract = "bytes"
 
     __slots__ = ("w", "d", "seed", "table")
 
@@ -173,7 +175,7 @@ class CountSketch:
     # -- merge ----------------------------------------------------------
 
     def merge(self, other: "CountSketch") -> "CountSketch":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.table += other.table
         if np.abs(self.table).max() > _MAX_ABS:
             raise OverflowError("CountSketch counter overflow in merge")
@@ -182,14 +184,14 @@ class CountSketch:
     # -- serde ----------------------------------------------------------
 
     def params_header(self) -> dict:
-        return {"kind": KIND, **self.params()}
+        return {"kind": self.kind, **self.params()}
 
     def to_bytes(self) -> bytes:
-        return pack(KIND, self.params(), self.table.tobytes())
+        return pack(self.kind, self.params(), self.table.tobytes())
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountSketch":
-        _, params, payload = unpack(blob, KIND)
+        _, params, payload = unpack(blob, cls.kind)
         table = np.frombuffer(payload, dtype=np.int64).reshape(
             int(params["d"]), int(params["w"])
         ).copy()

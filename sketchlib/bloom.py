@@ -31,7 +31,6 @@ _U = np.uint64
 # byte i to word-bit i*8+j only on little-endian hosts; elsewhere fall
 # back to the (endian-agnostic) shift/or sparse path
 _LITTLE_ENDIAN = sys.byteorder == "little"
-KIND = "bloom"
 
 _HAS_BITCOUNT = hasattr(np, "bitwise_count")
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint64)
@@ -44,6 +43,10 @@ def _popcount(words: np.ndarray) -> int:
 
 
 class BloomFilter:
+    kind = "bloom"
+    input = "hashed"
+    merge_contract = "bytes"
+
     __slots__ = ("m", "k", "seed", "bits")
 
     def __init__(self, m: int, k: int, seed: int = DEFAULT_SEED, bits: np.ndarray | None = None):
@@ -163,7 +166,7 @@ class BloomFilter:
 
     # -- merge ------------------------------------------------------
     def merge(self, other: "BloomFilter") -> "BloomFilter":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         np.bitwise_or(self.bits, other.bits, out=self.bits)
         return self
 
@@ -171,10 +174,10 @@ class BloomFilter:
 
     # -- serde ------------------------------------------------------
     def to_bytes(self) -> bytes:
-        return pack(KIND, self.params(), self.bits.tobytes())
+        return pack(self.kind, self.params(), self.bits.tobytes())
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
-        _, params, payload = unpack(data, KIND)
+        _, params, payload = unpack(data, cls.kind)
         bits = np.frombuffer(payload, dtype=np.uint64)
         return cls(params["m"], params["k"], params["seed"], bits.copy())

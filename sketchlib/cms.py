@@ -30,10 +30,12 @@ _U = np.uint64
 # Beyond this, one more merge/add of two valid tables could wrap uint64.
 _MAX_COUNTER = np.uint64(1) << np.uint64(62)
 
-KIND = "cms"
-
 
 class CountMinSketch:
+    kind = "cms"
+    input = "hashed"
+    merge_contract = "bytes"
+
     __slots__ = ("w", "d", "seed", "table")
 
     def __init__(self, w: int, d: int, seed: int = DEFAULT_SEED, table: np.ndarray | None = None):
@@ -151,7 +153,7 @@ class CountMinSketch:
 
     # -- merge ------------------------------------------------------
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.table += other.table
         if self.table.max() > _MAX_COUNTER:
             raise OverflowError("CountMinSketch counter overflow in merge")
@@ -159,10 +161,10 @@ class CountMinSketch:
 
     # -- serde ------------------------------------------------------
     def to_bytes(self) -> bytes:
-        return pack(KIND, self.params(), self.table.tobytes())
+        return pack(self.kind, self.params(), self.table.tobytes())
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CountMinSketch":
-        _, params, payload = unpack(data, KIND)
+        _, params, payload = unpack(data, cls.kind)
         table = np.frombuffer(payload, dtype=np.uint64).reshape(params["d"], params["w"])
         return cls(params["w"], params["d"], params["seed"], table.copy())

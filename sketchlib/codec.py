@@ -9,7 +9,7 @@ state payload. Merge validates header equality, mirroring the
 reference's buildhasher/parameter asserts (countminsketch.rs:271-284).
 
 This module is the only place that reads a blob's header: kernels'
-``from_bytes`` call ``unpack(data, KIND)``, which rejects a blob of any
+``from_bytes`` call ``unpack(data, cls.kind)``, which rejects a blob of any
 other kind with :class:`SketchCodecError` (a ``ValueError``), and
 ``agg.load_state`` dispatches on :func:`read_kind`, which parses the
 header without touching the payload, so any blob is decoded once.

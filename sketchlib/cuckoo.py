@@ -42,6 +42,8 @@ class CuckooFilterFull(RuntimeError):
 
 
 class CuckooFilter:
+    kind = "cuckoo"
+
     def __init__(
         self,
         bucketsize: int = 4,
@@ -218,7 +220,7 @@ class CuckooFilter:
     def merge(self, other: "CuckooFilter") -> "CuckooFilter":
         """Union by re-inserting every stored fingerprint; on overflow
         the state is restored and CuckooFilterFull raised (:514-555)."""
-        check_mergeable("cuckoo", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         snapshot = (self.table.copy(), self.n_elements, self._rng_ctr)
         occupied = np.flatnonzero(other.table)
         try:
@@ -239,11 +241,11 @@ class CuckooFilter:
             + np.int64(self._rng_ctr).tobytes()
             + self.table.tobytes()
         )
-        return pack("cuckoo", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CuckooFilter":
-        _, params, payload = unpack(data, "cuckoo")
+        _, params, payload = unpack(data, cls.kind)
         n_elements = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         rng_ctr = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         table = np.frombuffer(payload, dtype=np.uint64, offset=16).copy()

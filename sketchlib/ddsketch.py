@@ -41,6 +41,10 @@ from .codec import check_mergeable, pack, unpack
 class DDSketch:
     """Relative-error quantile sketch over float64 values."""
 
+    kind = "ddsketch"
+    input = "float"
+    merge_contract = "bytes"
+
     def __init__(
         self,
         alpha: float = 0.01,
@@ -194,7 +198,7 @@ class DDSketch:
     # -- merge / codec ------------------------------------------------------
 
     def merge(self, other: "DDSketch") -> "DDSketch":
-        check_mergeable("ddsketch", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.pos_idx, self.pos_cnt = self._absorb(
             self.pos_idx, self.pos_cnt, other.pos_idx, other.pos_cnt
         )
@@ -217,11 +221,11 @@ class DDSketch:
             + self.neg_idx.tobytes()
             + self.neg_cnt.tobytes()
         )
-        return pack("ddsketch", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "DDSketch":
-        _, params, payload = unpack(data, "ddsketch")
+        _, params, payload = unpack(data, cls.kind)
         n, zero, np_, nn = (int(x) for x in np.frombuffer(payload, dtype=np.int64, count=4))
         off = 32
         pos_idx = np.frombuffer(payload, dtype=np.int32, count=np_, offset=off).copy()

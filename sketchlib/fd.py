@@ -47,6 +47,8 @@ class FrequentDirections:
     (state is O(l·dim) floats); covariance error ≤ ‖A‖_F²/l."""
 
     kind = "fd"
+    input = "float"
+    merge_contract = "bounded"
 
     def __init__(self, l: int, dim: int):
         if l < 2:

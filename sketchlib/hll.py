@@ -43,8 +43,6 @@ _BIAS = {b: _DATA[f"bias_{b}"] for b in range(4, 19)}
 # 2^-x for x in 0..64 (the reference's POW2MINX lookup, data.rs:4019-4278)
 _POW2MIN = 2.0 ** -np.arange(65, dtype=np.float64)
 
-KIND = "hll"
-
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
     """Exact vectorized bit_length for uint64 (position of highest set bit,
@@ -60,6 +58,10 @@ def _bit_length_u64(x: np.ndarray) -> np.ndarray:
 
 class HLL:
     """Mergeable dense HyperLogLog++ sketch."""
+
+    kind = "hll"
+    input = "hashed"
+    merge_contract = "bytes"
 
     __slots__ = ("p", "seed", "regs")
 
@@ -200,16 +202,16 @@ class HLL:
 
     # -- merge ------------------------------------------------------
     def merge(self, other: "HLL") -> "HLL":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         np.maximum(self.regs, other.regs, out=self.regs)
         return self
 
     # -- serde ------------------------------------------------------
     def to_bytes(self) -> bytes:
-        return pack(KIND, self.params(), self.regs.tobytes())
+        return pack(self.kind, self.params(), self.regs.tobytes())
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "HLL":
-        _, params, payload = unpack(data, KIND)
+        _, params, payload = unpack(data, cls.kind)
         regs = np.frombuffer(payload, dtype=np.uint8)
         return cls(params["p"], params["seed"], regs.copy())

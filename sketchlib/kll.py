@@ -24,11 +24,14 @@ import numpy as np
 from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, splitmix64
 
-KIND = "kll"
 _C = 2.0 / 3.0
 
 
 class KLL:
+    kind = "kll"
+    input = "float"
+    merge_contract = "bounded"
+
     __slots__ = ("k", "seed", "levels", "n", "rng_counter", "min", "max")
 
     def __init__(self, k: int = 200, seed: int = DEFAULT_SEED,
@@ -132,7 +135,7 @@ class KLL:
 
     # -- merge ------------------------------------------------------
     def merge(self, other: "KLL") -> "KLL":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.n += other.n
         self.min = min(self.min, other.min)
         self.max = max(self.max, other.max)
@@ -153,11 +156,11 @@ class KLL:
         for buf in self.levels:
             parts.append(struct.pack("<q", buf.size))
             parts.append(np.ascontiguousarray(buf, dtype=np.float64).tobytes())
-        return pack(KIND, self.params(), b"".join(parts))
+        return pack(self.kind, self.params(), b"".join(parts))
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "KLL":
-        _, params, payload = unpack(data, KIND)
+        _, params, payload = unpack(data, cls.kind)
         n, counter, n_levels, vmin, vmax, _ = struct.unpack_from("<qqqddq", payload, 0)
         off = struct.calcsize("<qqqddq")
         levels = []

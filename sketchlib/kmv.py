@@ -40,8 +40,6 @@ import numpy as np
 from .codec import check_mergeable, pack, unpack
 from .hashing import DEFAULT_SEED, hash_i64
 
-KIND = "kmv"
-
 __all__ = ["KMV"]
 
 # hashes are uniform in [0, 2^64); normalizing by 2^64 maps the k-th
@@ -55,6 +53,10 @@ class KMV:
     ``k`` trades accuracy for state size (k·8 bytes): distinct-count
     relative std ≈ 1/√(k−2), Jaccard std ≤ 0.5/√k.
     """
+
+    kind = "kmv"
+    input = "hashed"
+    merge_contract = "bytes"
 
     __slots__ = ("k", "seed", "mins")
 
@@ -152,7 +154,7 @@ class KMV:
         """Bottom-k resemblance estimate between the two underlying
         sets: the shared fraction of the union synopsis's bottom-k'
         (k' = min(k, |union synopsis|))."""
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         union = np.union1d(self.mins, other.mins)[: self.k]
         if union.size == 0:
             return 0.0
@@ -163,7 +165,7 @@ class KMV:
 
     def union_distinct(self, other: "KMV") -> float:
         """Distinct estimate of A∪B from the merged synopsis."""
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         merged = KMV(self.k, self.seed, np.union1d(self.mins, other.mins)[: self.k])
         return merged.distinct()
 
@@ -179,7 +181,7 @@ class KMV:
         fraction of |A∪B|). Completes the pairwise set algebra:
         union / intersection / difference, all between merged group
         states with no raw-data second pass."""
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         union = np.union1d(self.mins, other.mins)[: self.k]
         if union.size == 0:
             return 0.0
@@ -195,20 +197,20 @@ class KMV:
     def merge(self, other: "KMV") -> "KMV":
         """Union synopsis: keep the k smallest of both states (mutates
         self in place — the salted merge tree discards return values)."""
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self._absorb(other.mins)
         return self
 
     # -- serde ----------------------------------------------------------
 
     def params_header(self) -> dict:
-        return {"kind": KIND, **self.params()}
+        return {"kind": self.kind, **self.params()}
 
     def to_bytes(self) -> bytes:
-        return pack(KIND, self.params(), self.mins.tobytes())
+        return pack(self.kind, self.params(), self.mins.tobytes())
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "KMV":
-        _, params, payload = unpack(blob, KIND)
+        _, params, payload = unpack(blob, cls.kind)
         mins = np.frombuffer(payload, dtype=np.uint64).copy()
         return cls(int(params["k"]), int(params.get("seed", DEFAULT_SEED)), mins)

@@ -40,6 +40,8 @@ class QuotientFilterFull(RuntimeError):
 
 
 class QuotientFilter:
+    kind = "quotient"
+
     def __init__(self, bits_quotient: int, bits_remainder: int, seed: int = DEFAULT_SEED,
                  _state: dict | None = None):
         if not (0 < bits_remainder <= 64):
@@ -217,7 +219,7 @@ class QuotientFilter:
         reference requires equal (q, r, hasher) (:541-551)."""
         from .codec import check_mergeable
 
-        check_mergeable("quotient", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         snapshot = (
             self.occupied.copy(),
             self.continuation.copy(),
@@ -243,11 +245,11 @@ class QuotientFilter:
             + np.packbits(self.shifted).tobytes()
             + self.remainders.tobytes()
         )
-        return pack("quotient", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "QuotientFilter":
-        _, params, payload = unpack(data, "quotient")
+        _, params, payload = unpack(data, cls.kind)
         size = 1 << params["q"]
         nbytes = (size + 7) // 8
         n_elements = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])

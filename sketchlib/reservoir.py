@@ -42,6 +42,10 @@ def _rand_u01(seed: int, stream: int, start: int, count: int) -> np.ndarray:
 class Reservoir:
     """Fixed-size uniform sample over float64 values (ids/tokens cast)."""
 
+    kind = "reservoir"
+    input = "float"
+    merge_contract = "bounded"
+
     def __init__(self, k: int = 100, seed: int = DEFAULT_SEED, _state: dict | None = None):
         if k <= 0:
             raise ValueError(f"k ({k}) must be > 0")
@@ -93,7 +97,7 @@ class Reservoir:
         self.n += int(t.size)
 
     def merge(self, other: "Reservoir") -> "Reservoir":
-        check_mergeable("reservoir", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         if other.n == 0:
             return self
         if self.n == 0:
@@ -120,11 +124,11 @@ class Reservoir:
             + np.int64(self.sample.size).tobytes()
             + self.sample.tobytes()
         )
-        return pack("reservoir", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "Reservoir":
-        _, params, payload = unpack(data, "reservoir")
+        _, params, payload = unpack(data, cls.kind)
         n = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         sz = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         sample = np.frombuffer(payload, dtype=np.float64, count=sz, offset=16).copy()

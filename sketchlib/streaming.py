@@ -6,8 +6,9 @@ micro-batch runs the same stage-1 partial build as the batch path, and
 appends its partial states to a parquet state store partitioned by
 ``batch_id``. Because every kernel merge is associative + commutative
 (reference merge-equivalence contract, hyperloglog/mod.rs:556-574),
-batch boundaries, arrival order, and replays never change the merged
-result — no watermarks needed (SURVEY.md §2.5 streaming row).
+batch boundaries, arrival order, and replays change the merged result
+only within the kernel's declared ``merge_contract`` (``agg.KERNELS``)
+— no watermarks needed (SURVEY.md §2.5 streaming row).
 
 Exactly-once: the store is partitioned by batch_id and written with
 dynamic partition overwrite, so a replayed micro-batch (foreachBatch's
@@ -23,8 +24,9 @@ The stateful operators (:func:`windowed_sketch_stream`,
 value per open key and fold a key's new rows into it by merging the
 partials of the same stage-1 consumer the batch path runs
 (``agg._consume_partials``) — the merge contract again, so a finalized
-state equals a batch build of its rows (bytes for the byte-commutative
-kinds, published bounds for the rest).
+state equals a batch build of its rows per the kernel's
+``merge_contract``: the same bytes for ``"bytes"`` kernels, within
+published bounds for ``"bounded"`` ones.
 
 The near-dup writer (:func:`neardup_stream_writer`) keeps two
 bucket-partitioned stores, ``keys/`` and ``shingles/``. Each trigger

@@ -32,8 +32,6 @@ import numpy as np
 
 from .codec import check_mergeable, pack, unpack
 
-KIND = "tdigest"
-
 _TWO_PI = 2.0 * math.pi
 
 
@@ -85,6 +83,10 @@ def _interpolate(a: float, b: float, t: float) -> float:
 
 
 class TDigest:
+    kind = "tdigest"
+    input = "weighted"
+    merge_contract = "bounded"
+
     __slots__ = ("delta", "scale", "seed", "sums", "counts", "n_samples", "min", "max")
 
     def __init__(self, delta: float = 100.0, scale: str = "k1", seed: int = 0,
@@ -250,7 +252,7 @@ class TDigest:
 
     # -- merge ------------------------------------------------------
     def merge(self, other: "TDigest") -> "TDigest":
-        check_mergeable(KIND, self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.n_samples += other.n_samples
         self.min = min(self.min, other.min)
         self.max = max(self.max, other.max)
@@ -261,11 +263,11 @@ class TDigest:
     # -- serde ------------------------------------------------------
     def to_bytes(self) -> bytes:
         head = struct.pack("<qqdd", self.counts.size, self.n_samples, self.min, self.max)
-        return pack(KIND, self.params(), head + self.sums.tobytes() + self.counts.tobytes())
+        return pack(self.kind, self.params(), head + self.sums.tobytes() + self.counts.tobytes())
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TDigest":
-        _, params, payload = unpack(data, KIND)
+        _, params, payload = unpack(data, cls.kind)
         nc, ns, vmin, vmax = struct.unpack_from("<qqdd", payload, 0)
         off = 32
         sums = np.frombuffer(payload, dtype=np.float64, count=nc, offset=off).copy()

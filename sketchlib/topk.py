@@ -56,6 +56,10 @@ DEFAULT_SEED = 0x5EEDC0DE
 class LossyCounter:
     """Lossy counting over int64 items (strings pre-hashed upstream)."""
 
+    kind = "lossy"
+    input = "hashed"
+    merge_contract = "bounded"
+
     def __init__(self, epsilon: float = 0.001, _state: dict | None = None):
         if not (0.0 < epsilon < 1.0):
             raise ValueError(f"epsilon ({epsilon}) must be in (0, 1)")
@@ -135,7 +139,7 @@ class LossyCounter:
         return self.items[mask][order], self.f[mask][order]
 
     def merge(self, other: "LossyCounter") -> "LossyCounter":
-        check_mergeable("lossy", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         # an empty side contributes nothing — returning unchanged keeps
         # the merge a true identity (the general path below would still
         # run a mid-window prune at b = ceil(n/width), which is more
@@ -184,11 +188,11 @@ class LossyCounter:
             + self.f.tobytes()
             + self.delta.tobytes()
         )
-        return pack("lossy", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "LossyCounter":
-        _, params, payload = unpack(data, "lossy")
+        _, params, payload = unpack(data, cls.kind)
         n = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         sz = int(np.frombuffer(payload, dtype=np.int64, count=1, offset=8)[0])
         off = 16
@@ -230,6 +234,10 @@ class SpaceSaving:
       never changes the answer's validity. Like ``topk``/``lossy`` the
       state is estimate-equivalent (not byte-equal) across groupings.
     """
+
+    kind = "spacesaving"
+    input = "hashed"
+    merge_contract = "bounded"
 
     def __init__(self, m: int = 256, _state: dict | None = None):
         if int(m) < 1:
@@ -310,7 +318,7 @@ class SpaceSaving:
         return self.items[sel], self.f[sel]
 
     def merge(self, other: "SpaceSaving") -> "SpaceSaving":
-        check_mergeable("spacesaving", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self._absorb(other.items, other.f)
         self.err += other.err
         self.n += other.n
@@ -325,11 +333,11 @@ class SpaceSaving:
             + self.items.tobytes()
             + self.f.tobytes()
         )
-        return pack("spacesaving", self.params(), payload)
+        return pack(self.kind, self.params(), payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "SpaceSaving":
-        _, params, payload = unpack(data, "spacesaving")
+        _, params, payload = unpack(data, cls.kind)
         n, err, sz = (int(v) for v in np.frombuffer(payload, dtype=np.int64, count=3))
         off = 24
         items = np.frombuffer(payload, dtype=np.int64, count=sz, offset=off).copy()
@@ -341,6 +349,10 @@ class SpaceSaving:
 class TopK:
     """CMS-backed top-k over int64 items (cmsheap.rs:117-219 semantics,
     distributed: bounded candidate set re-scored against the CMS)."""
+
+    kind = "topk"
+    input = "hashed"
+    merge_contract = "bounded"
 
     def __init__(
         self,
@@ -398,7 +410,7 @@ class TopK:
         return self.candidates[order], est[order]
 
     def merge(self, other: "TopK") -> "TopK":
-        check_mergeable("topk", self.params(), other.params())
+        check_mergeable(self.kind, self.params(), other.params())
         self.cms.merge(other.cms)
         self._requalify(other.candidates)
         return self
@@ -411,11 +423,11 @@ class TopK:
             + np.int64(self.candidates.size).tobytes()
             + self.candidates.tobytes()
         )
-        return pack("topk", {"k": self.k, "budget": self.budget}, payload)
+        return pack(self.kind, {"k": self.k, "budget": self.budget}, payload)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TopK":
-        _, params, payload = unpack(data, "topk")
+        _, params, payload = unpack(data, cls.kind)
         blen = int(np.frombuffer(payload, dtype=np.int64, count=1)[0])
         cms = CountMinSketch.from_bytes(payload[8 : 8 + blen])
         off = 8 + blen

@@ -23,9 +23,14 @@ def _split(values: np.ndarray, cuts: list[int]):
 values_st = st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=3000)
 cuts_st = st.lists(st.integers(0, 10**9), min_size=0, max_size=6)
 order_seed_st = st.integers(0, 2**31)
+# merge-tree shapes: a left fold, neighbours merged level by level, and
+# a right fold (the last part merged into the one before it, and so on)
+shape_st = st.sampled_from(["flat", "binary", "right_deep"])
 
 
-def _merged(kernel_cls, kwargs, parts, order_seed):
+def _merged(kernel_cls, kwargs, parts, order_seed, shape):
+    """One kernel per part, each shipped through its bytes (the
+    shuffle), in a shuffled order, merged as a ``shape`` tree."""
     rng = np.random.default_rng(order_seed)
     sketches = []
     for p in parts:
@@ -34,31 +39,43 @@ def _merged(kernel_cls, kwargs, parts, order_seed):
             k.update(p)
         sketches.append(kernel_cls.from_bytes(k.to_bytes()))
     rng.shuffle(sketches)
-    out = sketches[0]
-    for s in sketches[1:]:
-        out.merge(s)
-    return out
+    if shape == "right_deep":
+        sketches.reverse()
+        out = sketches[0]
+        for s in sketches[1:]:
+            s.merge(out)
+            out = s
+        return out
+    while len(sketches) > 1:
+        if shape == "flat":
+            sketches[0].merge(sketches.pop(1))
+        else:
+            level = sketches[::2]
+            for a, b in zip(sketches[::2], sketches[1::2]):
+                a.merge(b)
+            sketches = level
+    return sketches[0]
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, p=st.integers(6, 12))
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, p=st.integers(6, 12), shape=shape_st)
 @settings(**SETTINGS)
-def test_hll_merge_equals_whole(values, cuts, order, p):
+def test_hll_merge_equals_whole(values, cuts, order, p, shape):
     v = np.array(values, dtype=np.int64)
     whole = HLL(p=p, seed=7)
     whole.update(v)
-    merged = _merged(HLL, {"p": p, "seed": 7}, _split(v, cuts), order)
+    merged = _merged(HLL, {"p": p, "seed": 7}, _split(v, cuts), order, shape)
     assert merged.to_bytes() == whole.to_bytes()  # byte-identical state
     exact = len(set(values))
     assert abs(whole.count() - exact) <= max(4 * 1.04 / np.sqrt(2**p) * exact, 3)
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st)
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, shape=shape_st)
 @settings(**SETTINGS)
-def test_cms_merge_equals_whole_and_overestimates(values, cuts, order):
+def test_cms_merge_equals_whole_and_overestimates(values, cuts, order, shape):
     v = np.array(values, dtype=np.int64)
     whole = CountMinSketch(512, 4, seed=3)
     whole.update(v)
-    merged = _merged(CountMinSketch, {"w": 512, "d": 4, "seed": 3}, _split(v, cuts), order)
+    merged = _merged(CountMinSketch, {"w": 512, "d": 4, "seed": 3}, _split(v, cuts), order, shape)
     assert merged.to_bytes() == whole.to_bytes()
     uniq, counts = np.unique(v, return_counts=True)
     est = whole.query_points(uniq)
@@ -68,13 +85,15 @@ def test_cms_merge_equals_whole_and_overestimates(values, cuts, order):
     assert (est >= counts.astype(np.uint64)).all()
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st)
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, shape=shape_st)
 @settings(**SETTINGS)
-def test_bloom_merge_equals_whole_no_fn(values, cuts, order):
+def test_bloom_merge_equals_whole_no_fn(values, cuts, order, shape):
     v = np.array(values, dtype=np.int64)
     whole = BloomFilter(1 << 14, 5, seed=11)
     whole.update(v)
-    merged = _merged(BloomFilter, {"m": 1 << 14, "k": 5, "seed": 11}, _split(v, cuts), order)
+    merged = _merged(
+        BloomFilter, {"m": 1 << 14, "k": 5, "seed": 11}, _split(v, cuts), order, shape
+    )
     assert merged.to_bytes() == whole.to_bytes()
     assert whole.query(v).all()  # zero false negatives, always
 
@@ -85,11 +104,12 @@ def test_bloom_merge_equals_whole_no_fn(values, cuts, order):
     ),
     cuts=cuts_st,
     order=order_seed_st,
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_kll_rank_error_after_merge(values, cuts, order):
+def test_kll_rank_error_after_merge(values, cuts, order, shape):
     v = np.array(values, dtype=np.float64)
-    merged = _merged(KLL, {"k": 200, "seed": 5}, _split(v, cuts), order)
+    merged = _merged(KLL, {"k": 200, "seed": 5}, _split(v, cuts), order, shape)
     assert merged.n == v.size
     s = np.sort(v)
     for q in (0.1, 0.5, 0.9):
@@ -106,11 +126,12 @@ def test_kll_rank_error_after_merge(values, cuts, order):
     ),
     cuts=cuts_st,
     order=order_seed_st,
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_tdigest_moments_exact_after_merge(values, cuts, order):
+def test_tdigest_moments_exact_after_merge(values, cuts, order, shape):
     v = np.array(values, dtype=np.float64)
-    merged = _merged(TDigest, {"delta": 100.0}, _split(v, cuts), order)
+    merged = _merged(TDigest, {"delta": 100.0}, _split(v, cuts), order, shape)
     assert merged.count() == v.size
     assert merged.min == v.min() and merged.max == v.max()
     # sums of float partitions reassociate; tolerance scales with mass
@@ -162,13 +183,13 @@ def test_cms_dense_and_sparse_paths_byte_identical(values, w, d, chunk):
     assert a.total() == v.size
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, k=st.integers(8, 256))
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, k=st.integers(8, 256), shape=shape_st)
 @settings(**SETTINGS)
-def test_kmv_merge_equals_whole_and_estimates(values, cuts, order, k):
+def test_kmv_merge_equals_whole_and_estimates(values, cuts, order, k, shape):
     v = np.array(values, dtype=np.int64)
     whole = KMV(k=k, seed=7)
     whole.update(v)
-    merged = _merged(KMV, {"k": k, "seed": 7}, _split(v, cuts), order)
+    merged = _merged(KMV, {"k": k, "seed": 7}, _split(v, cuts), order, shape)
     assert merged.to_bytes() == whole.to_bytes()  # byte-identical state
     exact = len(set(values))
     if exact < k:
@@ -181,9 +202,9 @@ def test_kmv_merge_equals_whole_and_estimates(values, cuts, order, k):
     assert bool(np.all(whole.mins[1:] > whole.mins[:-1]))
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, m=st.integers(1, 64))
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, m=st.integers(1, 64), shape=shape_st)
 @settings(**SETTINGS)
-def test_spacesaving_guarantees_any_partitioning(values, cuts, order, m):
+def test_spacesaving_guarantees_any_partitioning(values, cuts, order, m, shape):
     """SpaceSaving is estimate-equivalent (not byte-equal) across
     partitionings, so the fuzzed contract is its guarantee triple:
     undercount <= err <= n/(m+1), unmonitored true counts <= err, and
@@ -192,7 +213,7 @@ def test_spacesaving_guarantees_any_partitioning(values, cuts, order, m):
     from sketchlib import SpaceSaving
 
     v = np.array(values, dtype=np.int64)
-    merged = _merged(SpaceSaving, {"m": m}, _split(v, cuts), order)
+    merged = _merged(SpaceSaving, {"m": m}, _split(v, cuts), order, shape)
     uniq, counts = np.unique(v, return_counts=True)
     true = dict(zip(uniq.tolist(), counts.tolist()))
     n = v.size
@@ -221,9 +242,10 @@ def test_spacesaving_guarantees_any_partitioning(values, cuts, order, m):
     cuts=cuts_st,
     order=order_seed_st,
     inv_eps=st.sampled_from([50, 200, 1000]),
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_lossy_guarantees_any_partitioning(values, cuts, order, inv_eps):
+def test_lossy_guarantees_any_partitioning(values, cuts, order, inv_eps, shape):
     """LossyCounter's distributed merge (Manku–Motwani slack
     accounting) must keep the published guarantees under any split and
     merge order: reported f never overcounts, undercounts by at most
@@ -234,7 +256,7 @@ def test_lossy_guarantees_any_partitioning(values, cuts, order, inv_eps):
 
     eps = 1.0 / inv_eps
     v = np.array(values, dtype=np.int64)
-    merged = _merged(LossyCounter, {"epsilon": eps}, _split(v, cuts), order)
+    merged = _merged(LossyCounter, {"epsilon": eps}, _split(v, cuts), order, shape)
     uniq, counts = np.unique(v, return_counts=True)
     true = dict(zip(uniq.tolist(), counts.tolist()))
     n = v.size
@@ -269,9 +291,10 @@ def test_lossy_guarantees_any_partitioning(values, cuts, order, inv_eps):
     cuts=cuts_st,
     order=order_seed_st,
     alpha=st.sampled_from([0.005, 0.01, 0.05]),
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_ddsketch_merge_byte_identical_and_relative_error(values, cuts, order, alpha):
+def test_ddsketch_merge_byte_identical_and_relative_error(values, cuts, order, alpha, shape):
     """DDSketch merge is a bucket-wise counter add: the merged state
     must be BYTE-IDENTICAL to the whole-stream build for any split and
     merge order, and quantiles must sit within alpha relative error of
@@ -281,7 +304,7 @@ def test_ddsketch_merge_byte_identical_and_relative_error(values, cuts, order, a
     v = np.array(values, dtype=np.float64)
     whole = DDSketch(alpha=alpha)
     whole.update(v)
-    merged = _merged(DDSketch, {"alpha": alpha}, _split(v, cuts), order)
+    merged = _merged(DDSketch, {"alpha": alpha}, _split(v, cuts), order, shape)
     assert merged.to_bytes() == whole.to_bytes()
     s = np.sort(v)
     for q in (0.0, 0.25, 0.5, 0.9, 1.0):
@@ -338,9 +361,10 @@ def test_codec_never_silently_accepts_corruption(cut, flip, data):
     cuts=cuts_st,
     order=order_seed_st,
     k=st.integers(1, 300),
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k):
+def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k, shape):
     """Weighted reservoir merge (Efraimidis–Spirakis): for ANY split,
     merge order, and k — seen-count is exact, sample size is
     min(k, n), and every sampled element came from the data (uniformity
@@ -348,7 +372,7 @@ def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k):
     from sketchlib import Reservoir
 
     v = np.array(values, dtype=np.float64)
-    merged = _merged(Reservoir, {"k": k, "seed": 7}, _split(v, cuts), order)
+    merged = _merged(Reservoir, {"k": k, "seed": 7}, _split(v, cuts), order, shape)
     assert merged.n == v.size
     assert merged.sample.size == min(k, v.size)
     # every kept element is a real data element (bitwise: float64 ==)
@@ -356,9 +380,9 @@ def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k):
     assert all(x in data for x in merged.sample.tolist())
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, k=st.integers(1, 12))
+@given(values=values_st, cuts=cuts_st, order=order_seed_st, k=st.integers(1, 12), shape=shape_st)
 @settings(**SETTINGS)
-def test_topk_merge_contract_any_partitioning(values, cuts, order, k):
+def test_topk_merge_contract_any_partitioning(values, cuts, order, k, shape):
     """Merged CMS-backed TopK under any split/merge order: the CMS
     substrate is exact-sum (so estimates of returned items never
     undercount their true counts and respect the e/w bound), candidates
@@ -369,7 +393,7 @@ def test_topk_merge_contract_any_partitioning(values, cuts, order, k):
     v = np.array(values, dtype=np.int64)
     w, d = 1024, 4
     merged = _merged(
-        TopK, {"k": k, "w": w, "d": d, "seed": 9}, _split(v, cuts), order
+        TopK, {"k": k, "w": w, "d": d, "seed": 9}, _split(v, cuts), order, shape
     )
     uniq, counts = np.unique(v, return_counts=True)
     true = dict(zip(uniq.tolist(), counts.tolist()))
@@ -396,9 +420,10 @@ def test_topk_merge_contract_any_partitioning(values, cuts, order, k):
     cuts=cuts_st,
     order=order_seed_st,
     l=st.integers(2, 4),
+    shape=shape_st,
 )
 @settings(**SETTINGS)
-def test_fd_spectral_bound_any_partitioning(rows, cuts, order, l):
+def test_fd_spectral_bound_any_partitioning(rows, cuts, order, l, shape):
     """Frequent Directions under any split/merge order: the carried
     shrinkage total must remain a true spectral bound
     ||A^T A - B^T B||_2 <= delta_total <= ||A||_F^2 / l (Liberty
@@ -411,7 +436,7 @@ def test_fd_spectral_bound_any_partitioning(rows, cuts, order, l):
     # split by ROWS (dim-aligned), then flatten each part
     row_parts = _split(np.arange(A.shape[0]), cuts)
     parts = [A[idx].ravel() for idx in row_parts]
-    merged = _merged(FrequentDirections, {"l": l, "dim": dim}, parts, order)
+    merged = _merged(FrequentDirections, {"l": l, "dim": dim}, parts, order, shape)
     assert merged.n == A.shape[0]
     assert abs(merged.fro2 - np.einsum("ij,ij->", A, A)) <= 1e-6 * max(merged.fro2, 1.0)
     gram = A.T @ A
@@ -421,9 +446,15 @@ def test_fd_spectral_bound_any_partitioning(rows, cuts, order, l):
     assert merged.delta_total <= merged.fro2 / l + 1e-6 * max(1.0, merged.fro2)
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, w=st.sampled_from([256, 1024]))
+@given(
+    values=values_st,
+    cuts=cuts_st,
+    order=order_seed_st,
+    w=st.sampled_from([256, 1024]),
+    shape=shape_st,
+)
 @settings(**SETTINGS)
-def test_ams_merge_equals_whole_and_unbiased_family(values, cuts, order, w):
+def test_ams_merge_equals_whole_and_unbiased_family(values, cuts, order, w, shape):
     """CountSketch/AMS merge is a signed int64 table add — merged state
     must be byte-identical to a whole-stream build for any split and
     merge order; point estimates of present items stay within the
@@ -434,7 +465,7 @@ def test_ams_merge_equals_whole_and_unbiased_family(values, cuts, order, w):
     v = np.array(values, dtype=np.int64)
     whole = CountSketch(w=w, d=5, seed=13)
     whole.update(v)
-    merged = _merged(CountSketch, {"w": w, "d": 5, "seed": 13}, _split(v, cuts), order)
+    merged = _merged(CountSketch, {"w": w, "d": 5, "seed": 13}, _split(v, cuts), order, shape)
     assert merged.to_bytes() == whole.to_bytes()
     uniq, counts = np.unique(v, return_counts=True)
     est = whole.query_points(uniq)
