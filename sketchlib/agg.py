@@ -572,9 +572,12 @@ def _consume_partials(
 def _check_specs(specs: list[SketchSpec]) -> None:
     """Reject, at planning, specs no task could build: an empty list,
     repeated names (every operator keys its kernels and output rows by
-    ``SketchSpec.name``), a kind outside :data:`KERNELS`, and a
+    ``SketchSpec.name``), a kind outside :data:`KERNELS`, a
     ``weight_col`` on a kernel whose input is not ``"weighted"`` (it
-    would be ignored)."""
+    would be ignored), and params the kernel's constructor refuses (a
+    misspelt name, a value out of range): each spec's kernel is built
+    once here, so the error names the spec instead of surfacing inside
+    the first task."""
     if not specs:
         raise ValueError("need at least one SketchSpec")
     names = [s.name for s in specs]
@@ -590,6 +593,11 @@ def _check_specs(specs: list[SketchSpec]) -> None:
             raise ValueError(
                 f"spec {s.name!r}: kind {s.kind!r} takes no weight_col (input {cls.input!r})"
             )
+        try:
+            s.make()
+        except (TypeError, ValueError) as e:
+            err = TypeError if isinstance(e, TypeError) else ValueError
+            raise err(f"spec {s.name!r}: bad params {s.params!r} for {s.kind!r}: {e}") from e
 
 
 def _needed_cols(group_cols: list[str], specs: list[SketchSpec]) -> list[str]:
@@ -760,14 +768,25 @@ def _row_chunks(batches: Iterable[pa.RecordBatch], max_rows: int):
 
 
 def _direct_tasks(spark, n_files: int, tasks: int | None) -> int:
-    """Task count of the direct feed: ``tasks`` or 2 × defaultParallelism,
-    capped at the file count. One wave of parallelism-sized tasks
-    measures 0.06 s faster on a quiet 4-vCPU host (1.06 vs 1.12 s over
-    48 files) but has zero straggler slack — under exogenous load bursts
-    the leg swung 3.9–9.0 s vs a steady ~3.6 s at 2× (32 CPUs). Keep 2×:
-    scheduling freedom beats the quiet-host win on any shared machine."""
+    """Task count of the direct feed: ``tasks``, or one wave of
+    ``defaultParallelism`` tasks, capped at the file count. That is the
+    JVM feed's rule too: Spark's file scan sizes its splits
+    (``FilePartition.maxSplitBytes``) for ``spark.sql.files.minPartitionNum``,
+    which defaults to the default parallelism.
+
+    A task's cost is mostly fixed, since each folds all its files in one
+    chunk (:func:`_row_chunks`): per-group dedup, hashing and kernel
+    work over the distinct tokens, plus ``to_bytes``, grow far more
+    slowly than its file count, and every Python task costs about 0.06
+    core-s more. Measured on 4 vCPUs over the 48 bench-shape files
+    (medians of 7): the Spark-free consumer took 0.142 s for 6 files and
+    0.185 s for 12, so 8 tasks cost 1.14 core-s and 4 tasks 0.74; an
+    empty ``mapInArrow`` took 0.131 s at 4 tasks and 0.194 s at 8; stage
+    1 alone took 0.506 s at 8 tasks and 0.325 s at 4. A second wave
+    repeats both fixed costs, and the partial count never shows in a
+    ``"bytes"`` kernel's result."""
     if tasks is None:
-        tasks = 2 * spark.sparkContext.defaultParallelism
+        tasks = spark.sparkContext.defaultParallelism
     return max(1, min(n_files, tasks))
 
 
@@ -787,26 +806,26 @@ def build_partials_direct(
     read split-wise by pyarrow cost <1 s on 32 threads).
 
     The work is still distributed BY SPARK — a ``spark.range`` over
-    file indices packs the SORTED file list into ``tasks`` partitions
-    (see :func:`_direct_tasks`: measured on 4 vCPUs over 48 files, one
-    task per file costs 2.0 s and 6.8 core-s against 1.1 s and 3.7
-    core-s for 8 tasks, ~0.08 core-s of fixed Python-task cost per extra
-    task even with the :mod:`sketchlib._daemon` worker path, 0.23 core-s
-    without it; a handful of files per task amortizes it while range
-    packing keeps ±1-file balance). A task folds ALL its files through
-    one call of the SAME consumer as the default feed
-    (:func:`_consume_partials`, byte-identical kernel code) — map-side
-    combine, guide §2.3 "aggregate before you shuffle": one partial per
-    (group, sketch) per TASK, so the job's only shuffle shrinks by the
-    files-per-task factor (measured 86 MB → ~11 MB at the bench shape,
-    8 files/task). The consumer sees the task's rows in chunks of at
-    most :data:`DIRECT_BATCH_ROWS` rows concatenated across file
-    boundaries (:func:`_row_chunks`), not one batch per file: per-group
-    dedup, hashing and kernel updates run once per chunk — once per
-    task at the bench shape, where a task's 6 files of 1,000 docs hold
-    3.2× fewer distinct tokens per group than the six files' per-file
-    distinct counts summed. A chunk is the per-task memory bound (a
-    single file of ≥ 65,536 rows already reached it before). ``part_id``
+    file indices packs the SORTED file list into ``tasks`` partitions,
+    by default one wave of ``defaultParallelism`` tasks (see
+    :func:`_direct_tasks`: measured on 4 vCPUs over 48 files, stage 1
+    took 0.51 s with 8 tasks and 0.33 s with 4; every Python task costs
+    about 0.06 core-s of fixed overhead even with the
+    :mod:`sketchlib._daemon` worker path, and range packing keeps ±1-file
+    balance). A task folds ALL its files through one call of the SAME
+    consumer as the default feed (:func:`_consume_partials`,
+    byte-identical kernel code) — map-side combine, guide §2.3
+    "aggregate before you shuffle": one partial per (group, sketch) per
+    TASK, so the job's only shuffle shrinks by the files-per-task
+    factor. The consumer sees the task's rows in chunks of at most
+    :data:`DIRECT_BATCH_ROWS` rows concatenated across file boundaries
+    (:func:`_row_chunks`), not one batch per file: per-group dedup,
+    hashing and kernel updates run once per chunk — once per task at
+    the bench shape, where a task's 12 files of 1,000 docs cost the
+    consumer 0.185 s against 0.142 s for 6, since their distinct tokens
+    per group grow far more slowly than the file count. A chunk is the
+    per-task memory bound (a single file of ≥ 65,536 rows already
+    reached it before). ``part_id``
     is the task's first file index
     (deterministic for a given file list and ``tasks``). Final states
     keep each kernel's ``merge_contract`` (:data:`KERNELS`): the
@@ -895,8 +914,8 @@ def sketch_aggregate_direct(
     ``fanout="auto"`` (the default) resolves via :func:`resolve_fanout`
     from the task count, a free per-key partial bound (stage 1 emits one
     partial per key per task). Below 256 that is one shuffle and one
-    merge pass — the bench-scale build's 8 partials per key pay for no
-    salted level that merges nothing."""
+    merge pass — the bench-scale build's one partial per key per core
+    pays for no salted level that merges nothing."""
     files = _resolve_split_files(source)
     tasks = _direct_tasks(spark, len(files), tasks)
     partials = _direct_partials(spark, files, group_cols, specs, tasks)

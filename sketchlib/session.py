@@ -132,13 +132,29 @@ def _workers_see(pkg_parent: str) -> bool:
     return pkg_parent in pp.split(os.pathsep)
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The driver heap :func:`get_spark` asks for by default: the smaller
+    of 48g and half of ``phys_bytes``, the host's physical memory when
+    not given (``os.sysconf``), in whole megabytes. A heap allowed to
+    grow past the host's memory gets the JVM killed by the kernel's OOM
+    killer instead of failing a task with an ``OutOfMemoryError``."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48 * 1024, phys_bytes // 2 // 2**20))}m"
+
+
 def get_spark(
     app: str = "sketchlib",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A local session with the confs this library depends on (module
+    docstring). ``driver_memory`` defaults to
+    :func:`default_driver_memory`."""
+    if driver_memory is None:
+        driver_memory = default_driver_memory()
     pkg_parent = ensure_worker_pythonpath()
     daemon = _workers_see(pkg_parent)
 

@@ -36,6 +36,7 @@ the pairs output, so a replay rewrites exactly what it wrote.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import pickle
@@ -122,6 +123,49 @@ def _salt_by_batch(partials: DataFrame) -> DataFrame:
     ).drop(_BATCH_COL)
 
 
+def _store_schema(spark: SparkSession, state_path: str) -> StructType | None:
+    """The store's Spark schema from the footer of its first part file,
+    read on the driver through the JVM's Hadoop FS and parquet-hadoop,
+    so ``spark.read`` runs no schema-inference job. Spark keeps the
+    schema it wrote under the footer key
+    ``org.apache.spark.sql.parquet.row.metadata``; ``batch_id`` is
+    appended as the ``IntegerType`` Spark infers for it
+    (:func:`_salt_by_batch` hashes it, and a long would change the
+    tree). ``None`` when the path, a part file or the key is missing:
+    the caller then reads as before, and an empty store raises Spark's
+    own ``AnalysisException``."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(state_path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return None
+
+    def listed(path, directories: bool):
+        return sorted(
+            (st.getPath() for st in fs.listStatus(path) if st.isDirectory() == directories),
+            key=lambda p: p.getName(),
+        )
+
+    for batch_dir in listed(root, True):
+        if not batch_dir.getName().startswith(f"{_BATCH_COL}="):
+            continue
+        for part in listed(batch_dir, False):
+            if part.getName().startswith(("_", ".")):
+                continue
+            pq = jvm.org.apache.parquet.hadoop
+            reader = pq.ParquetFileReader.open(pq.util.HadoopInputFile.fromPath(part, conf))
+            try:
+                meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+                row_meta = meta.get("org.apache.spark.sql.parquet.row.metadata")
+            finally:
+                reader.close()
+            if row_meta is None:
+                return None
+            return StructType.fromJson(json.loads(row_meta)).add(_BATCH_COL, IntegerType())
+    return None
+
+
 def current_states(
     spark: SparkSession,
     state_path: str,
@@ -132,7 +176,9 @@ def current_states(
 
     ``fanout="auto"`` resolves from the store's file count: each file is
     one write task's output and holds at most one partial per key."""
-    partials = spark.read.parquet(state_path)
+    schema = _store_schema(spark, state_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    partials = reader.parquet(state_path)
     fanout = resolve_fanout(fanout, lambda: len(partials.inputFiles()))
     return merge_partials(_salt_by_batch(partials), group_cols, fanout)
 

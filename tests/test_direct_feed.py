@@ -15,6 +15,7 @@ import pytest
 from sketchlib.agg import (
     KERNELS,
     SketchSpec,
+    _direct_tasks,
     build_partials_direct,
     load_state,
     sketch_aggregate,
@@ -338,6 +339,16 @@ def test_mixed_int_widths_across_files(spark, tmp_path):
             sketch_aggregate_direct(spark, str(tmp_path), ["source"], specs, tasks=tasks).collect()
         )
         assert got == want, tasks
+
+
+def test_default_is_one_wave_of_tasks(spark):
+    """Without ``tasks`` the direct feed runs one task per core (the
+    session's ``local[4]``), never more tasks than files; an explicit
+    ``tasks`` is kept."""
+    assert spark.sparkContext.defaultParallelism == 4
+    assert _direct_tasks(spark, 48, None) == 4
+    assert _direct_tasks(spark, 2, None) == 2
+    assert _direct_tasks(spark, 48, 8) == 8
 
 
 # -- planning: the schema comes from the parquet footer, not a Spark job ---

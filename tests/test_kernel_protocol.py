@@ -154,3 +154,19 @@ def test_string_input_rejected_at_planning(kind, col):
     match = "xxhash64" if hashed else "takes float64"
     with pytest.raises(ValueError, match=match):
         _plan_stage1(SCHEMA, [], [SketchSpec("q", kind, col, PARAMS[kind])])
+
+
+@pytest.mark.parametrize(
+    "params, err, match",
+    [
+        ({"pp": 12}, TypeError, r"spec 'a'.*'pp'"),
+        ({"p": 30}, ValueError, r"spec 'a'.*p \(30\)"),
+    ],
+    ids=["misspelt", "out_of_range"],
+)
+def test_bad_params_rejected_at_planning(params, err, match):
+    """Each spec's kernel is built once at planning, so params its
+    constructor refuses fail there, naming the spec, not inside the
+    first task."""
+    with pytest.raises(err, match=match):
+        _plan_stage1(SCHEMA, [], [SketchSpec("a", "hll", "x", params)])

@@ -20,7 +20,37 @@ def _split(values: np.ndarray, cuts: list[int]):
     return np.split(values, pts)
 
 
-values_st = st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=3000)
+
+
+def _ints(n: int, seed: int, spread: int) -> list:
+    """``n`` int64 items over a ``spread``-wide domain (narrow ones repeat)."""
+    return np.random.default_rng(seed).integers(-spread, spread, n, dtype=np.int64).tolist()
+
+
+def _floats(n: int, seed: int, spread: float, bound: float) -> list:
+    """``n`` float64 values inside ±``bound``, with repeats, zeros and
+    negatives."""
+    rng = np.random.default_rng(seed)
+    v = np.round(rng.normal(0.0, spread, n), 1)
+    v[rng.random(n) < 0.05] = 0.0
+    return np.clip(v, -bound, bound).tolist()
+
+
+# sizes and values drawn from a Hypothesis seed with numpy, as in
+# test_kernel_protocol.py: drawn element by element, the median list
+# held 5 values, too few for KLL compaction, TopK pruning, lossy
+# windows or a full SpaceSaving table
+values_st = st.tuples(
+    st.integers(1, 3000), st.integers(0, 2**31), st.sampled_from([40, 1000, 2**40])
+).map(lambda t: _ints(*t))
+
+
+def floats_st(bound: float, max_size: int):
+    return st.tuples(
+        st.integers(1, max_size), st.integers(0, 2**31), st.sampled_from([1.0, 1e3, bound / 10])
+    ).map(lambda t: _floats(*t, bound))
+
+
 cuts_st = st.lists(st.integers(0, 10**9), min_size=0, max_size=6)
 order_seed_st = st.integers(0, 2**31)
 # merge-tree shapes: a left fold, neighbours merged level by level, and
@@ -99,9 +129,7 @@ def test_bloom_merge_equals_whole_no_fn(values, cuts, order, shape):
 
 
 @given(
-    values=st.lists(
-        st.floats(-1e9, 1e9, allow_nan=False, allow_infinity=False), min_size=1, max_size=2000
-    ),
+    values=floats_st(1e9, 2000),
     cuts=cuts_st,
     order=order_seed_st,
     shape=shape_st,
@@ -121,9 +149,7 @@ def test_kll_rank_error_after_merge(values, cuts, order, shape):
         assert lo - 0.15 <= q <= hi + 0.15  # generous: k=200 ⇒ eps ~ 1-2%
 
 @given(
-    values=st.lists(
-        st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False), min_size=1, max_size=2000
-    ),
+    values=floats_st(1e6, 2000),
     cuts=cuts_st,
     order=order_seed_st,
     shape=shape_st,
@@ -283,11 +309,7 @@ def test_lossy_guarantees_any_partitioning(values, cuts, order, inv_eps, shape):
 
 
 @given(
-    values=st.lists(
-        st.floats(-1e12, 1e12, allow_nan=False, allow_infinity=False),
-        min_size=1,
-        max_size=2000,
-    ),
+    values=floats_st(1e12, 2000),
     cuts=cuts_st,
     order=order_seed_st,
     alpha=st.sampled_from([0.005, 0.01, 0.05]),
@@ -353,11 +375,7 @@ def test_codec_never_silently_accepts_corruption(cut, flip, data):
 
 
 @given(
-    values=st.lists(
-        st.floats(-1e9, 1e9, allow_nan=False, allow_infinity=False),
-        min_size=1,
-        max_size=2500,
-    ),
+    values=floats_st(1e9, 2500),
     cuts=cuts_st,
     order=order_seed_st,
     k=st.integers(1, 300),
@@ -384,10 +402,17 @@ def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k, sha
 @settings(**SETTINGS)
 def test_topk_merge_contract_any_partitioning(values, cuts, order, k, shape):
     """Merged CMS-backed TopK under any split/merge order: the CMS
-    substrate is exact-sum (so estimates of returned items never
-    undercount their true counts and respect the e/w bound), candidates
-    only ever come from the data, and the readout is (count desc, item
-    asc)-ordered with at most k rows."""
+    substrate is exact-sum (estimates of returned items equal the
+    whole-stream CMS's and never undercount their true counts),
+    candidates only ever come from the data, and the readout is (count
+    desc, item asc)-ordered with at most k rows.
+
+    The e/w·N upper bound is not asserted per example: it holds with
+    probability 1-delta for a fixed item, and the readout picks the
+    highest estimates, so over many flat counts (131 distinct items,
+    k=1) it returns a colliding item above the bound on working code.
+    test_cms.py checks that bound statistically."""
+    from sketchlib import CountMinSketch
     from sketchlib.topk import TopK
 
     v = np.array(values, dtype=np.int64)
@@ -395,14 +420,16 @@ def test_topk_merge_contract_any_partitioning(values, cuts, order, k, shape):
     merged = _merged(
         TopK, {"k": k, "w": w, "d": d, "seed": 9}, _split(v, cuts), order, shape
     )
+    whole = CountMinSketch(w, d, seed=9)
+    whole.update(v)
     uniq, counts = np.unique(v, return_counts=True)
     true = dict(zip(uniq.tolist(), counts.tolist()))
     items, est = merged.query()
     assert items.size <= k
     assert set(items.tolist()) <= set(true)  # candidates ⊆ data
-    eps_n = np.e / w * v.size
+    assert est.tolist() == whole.query_points(items).tolist()
     for it, e in zip(items.tolist(), est.tolist()):
-        assert true[it] <= e <= true[it] + eps_n
+        assert true[it] <= e
     keys = [(-e, it) for it, e in zip(items.tolist(), est.tolist())]
     assert keys == sorted(keys)
 

@@ -203,6 +203,37 @@ def test_empty_batch_leaves_no_partition(spark, stream_store):
             assert streamed[k][0] == batched[k][0], k
 
 
+def test_store_read_runs_no_schema_job(spark, stream_store, tmp_path):
+    """The store's schema comes from a part file's footer on the driver:
+    planning ``current_states`` runs no Spark job, and the schema is the
+    one ``spark.read.parquet`` infers. A store without a part file still
+    raises Spark's ``AnalysisException``."""
+    from pyspark.errors import AnalysisException
+
+    sc = spark.sparkContext
+    group = "stream-store-planning"
+    sc.setJobGroup(group, "plan a merge-on-read of the stream store")
+    try:
+        planned = current_states(spark, stream_store["state"], ["source"])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        read = spark.read.schema(streaming._store_schema(spark, stream_store["state"]))
+        schema = read.parquet(stream_store["state"]).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert schema == spark.read.parquet(stream_store["state"]).schema
+    assert schema[streaming._BATCH_COL].dataType == IntegerType()
+    assert set(_states(planned)) == set(
+        _states(current_states(spark, stream_store["state"], ["source"], fanout=None))
+    )
+    empty = tmp_path / "empty_store"
+    (empty / "batch_id=0").mkdir(parents=True)
+    for path in (empty, tmp_path / "no_store"):
+        with pytest.raises(AnalysisException):
+            current_states(spark, str(path), ["source"])
+
+
 def test_current_states_default_is_one_merge_pass(spark, stream_store):
     auto_df = current_states(spark, stream_store["state"], ["source"])
     tree_df = current_states(spark, stream_store["state"], ["source"], fanout=4)
