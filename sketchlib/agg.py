@@ -227,19 +227,20 @@ def partials_schema(schema: StructType | DataFrame, group_cols: list[str]) -> St
 
 
 def _resolve_specs(df: DataFrame, specs: list[SketchSpec]) -> tuple[DataFrame, list[SketchSpec]]:
-    """Check the specs (:func:`_check_specs`), then pre-hash the
-    string-valued inputs of ``"hashed"`` kernels JVM-side (xxhash64) so
-    Python only ever sees fixed-width integers. Scalar strings hash
-    directly; ``array<string>`` hashes element-wise inside ``transform``
-    (still whole-stage codegen, no explode, no per-row Python). So the
-    items that lossy/spacesaving/topk over a string column report are
-    xxhash64 values: use ``topk_exact_rescore`` when the original values
-    must appear in the output."""
-    _check_specs(specs)
+    """Pre-hash the string-valued inputs of ``"hashed"`` kernels
+    JVM-side (xxhash64) so Python only ever sees fixed-width integers.
+    Scalar strings hash directly; ``array<string>`` hashes element-wise
+    inside ``transform`` (still whole-stage codegen, no explode, no
+    per-row Python). So the items that lossy/spacesaving/topk over a
+    string column report are xxhash64 values: use ``topk_exact_rescore``
+    when the original values must appear in the output. The specs are
+    checked by the :func:`_plan_stage1` that follows (a kind outside
+    :data:`KERNELS` passes through unhashed), so a plan builds each
+    spec's kernel once."""
     out = df
     resolved = []
     for spec in specs:
-        if KERNELS[spec.kind].input != "hashed":
+        if getattr(KERNELS.get(spec.kind), "input", None) != "hashed":
             resolved.append(spec)
             continue
         dt = out.schema[spec.col].dataType
@@ -784,7 +785,15 @@ def _direct_tasks(spark, n_files: int, tasks: int | None) -> int:
     empty ``mapInArrow`` took 0.131 s at 4 tasks and 0.194 s at 8; stage
     1 alone took 0.506 s at 8 tasks and 0.325 s at 4. A second wave
     repeats both fixed costs, and the partial count never shows in a
-    ``"bytes"`` kernel's result."""
+    ``"bytes"`` kernel's result.
+
+    One wave was measured only on that 4-vCPU host, idle and under one
+    busy-loop process, where it won both times. It has no straggler
+    slack: the 2× rule it replaces came from 32 CPUs, where under
+    exogenous load bursts one wave of the older tasks (one chunk per
+    file) swung 3.9–9.0 s against a steady ~3.6 s at 2×. Whether that
+    still holds for one-chunk tasks, on many cores or under bursty
+    co-tenants, is open."""
     if tasks is None:
         tasks = spark.sparkContext.defaultParallelism
     return max(1, min(n_files, tasks))

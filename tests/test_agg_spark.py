@@ -315,3 +315,19 @@ def test_point_queries_mixed_groups_match_per_row_kernel(spark):
         v = np.array([r["v"]], dtype=np.int64)
         assert r["hit"] == bool(kernel[0].query(v)[0]), r
         assert r["est"] == int(kernel[1].query_points(v)[0]), r
+
+
+def test_build_partials_checks_each_spec_once(spark, monkeypatch):
+    """Planning ``build_partials`` builds each spec's kernel once (a
+    stream trigger plans it anew), and bad params on a pre-hashed
+    string input still fail there, naming the spec."""
+    made = []
+    make = SketchSpec.make
+    monkeypatch.setattr(SketchSpec, "make", lambda s: made.append(s.name) or make(s))
+    df = spark.range(10).withColumn("s", F.col("id").cast("string"))
+    build_partials(df, [], [SketchSpec("h", "hll", "s", {"p": 10}), SketchSpec("c", "cms", "id", {"w": 64, "d": 2})])
+    assert sorted(made) == ["c", "h"]
+    with pytest.raises(TypeError, match=r"spec 'h'.*'pp'"):
+        build_partials(df, [], [SketchSpec("h", "hll", "s", {"pp": 12})])
+    with pytest.raises(ValueError, match=r"spec 'x': unknown kind"):
+        build_partials(df, [], [SketchSpec("x", "nosuch", "s")])

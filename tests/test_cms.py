@@ -57,6 +57,47 @@ def test_never_underestimates_and_eps_bound():
     assert viol < delta
 
 
+def test_merged_states_keep_eps_bound():
+    """The same bound after a merge: 8 uneven partials of CMS and of
+    CMS-backed TopK (each pruned to its 64-candidate budget), shipped
+    through their bytes and merged, keep the never-undercount and eps*N
+    guarantees over every item, and TopK's returned items sit inside
+    them."""
+    from sketchlib.topk import TopK
+
+    rng = np.random.default_rng(3)
+    data = (50_000 * rng.random(200_000) ** 3).astype(np.int64)
+    eps, delta = 0.001, 0.01
+    whole = CountMinSketch.with_point_query_properties(eps, delta)
+    whole.update(data)
+    w, d = whole.w, whole.d
+    cuts = np.sort(rng.choice(np.arange(1, data.size), 7, replace=False))
+    cms_parts, topk_parts = [], []
+    for part in np.split(data, cuts):
+        c, t = CountMinSketch(w, d), TopK(k=10, w=w, d=d)
+        c.update(part)
+        t.update(part)
+        assert t.candidates.size == t.budget  # pruned
+        cms_parts.append(CountMinSketch.from_bytes(c.to_bytes()))
+        topk_parts.append(TopK.from_bytes(t.to_bytes()))
+    cms, topk = cms_parts[0], topk_parts[0]
+    for c, t in zip(cms_parts[1:], topk_parts[1:]):
+        cms.merge(c)
+        topk.merge(t)
+    assert cms.to_bytes() == whole.to_bytes()
+    uniq, counts = np.unique(data, return_counts=True)
+    true = dict(zip(uniq.tolist(), counts.tolist()))
+    for merged in (cms, topk.cms):
+        est = merged.query_points(uniq).astype(np.int64)
+        assert (est >= counts).all(), "merged CMS must never underestimate"
+        viol = (est > counts + eps * len(data)).mean()
+        assert viol < delta
+    items, est = topk.query()
+    assert items.size == 10
+    for it, e in zip(items.tolist(), est.astype(np.int64).tolist()):
+        assert true[it] <= e <= true[it] + eps * len(data)
+
+
 def test_merge_equals_single_sketch():
     a, b = CountMinSketch(100, 3), CountMinSketch(100, 3)
     a.update(np.array([1, 2, 3]))

@@ -20,20 +20,24 @@ def _split(values: np.ndarray, cuts: list[int]):
     return np.split(values, pts)
 
 
-
-
 def _ints(n: int, seed: int, spread: int) -> list:
     """``n`` int64 items over a ``spread``-wide domain (narrow ones repeat)."""
     return np.random.default_rng(seed).integers(-spread, spread, n, dtype=np.int64).tolist()
 
 
-def _floats(n: int, seed: int, spread: float, bound: float) -> list:
-    """``n`` float64 values inside ±``bound``, with repeats, zeros and
-    negatives."""
+def _floats(n: int, seed: int, distinct: int | None, bound: float, edges: list) -> list:
+    """``n`` float64 values inside ±``bound``: magnitudes log-uniform
+    from 1e-300 up to ``bound``, random signs and about 5% zeros, picked
+    from a pool of ``distinct`` values (all distinct when None; a small
+    pool repeats), with the Hypothesis-drawn ``edges`` (subnormals,
+    ±``bound``, signed zeros) written at random positions."""
     rng = np.random.default_rng(seed)
-    v = np.round(rng.normal(0.0, spread, n), 1)
-    v[rng.random(n) < 0.05] = 0.0
-    return np.clip(v, -bound, bound).tolist()
+    m = n if distinct is None else distinct
+    pool = 10.0 ** rng.uniform(-300.0, np.log10(bound), m) * rng.choice([-1.0, 1.0], m)
+    pool[rng.random(m) < 0.05] = 0.0
+    v = pool if distinct is None else rng.choice(pool, n)
+    v[rng.integers(0, n, len(edges))] = edges
+    return v.tolist()
 
 
 # sizes and values drawn from a Hypothesis seed with numpy, as in
@@ -46,9 +50,12 @@ values_st = st.tuples(
 
 
 def floats_st(bound: float, max_size: int):
+    edges = st.lists(
+        st.floats(-bound, bound, allow_nan=False, allow_infinity=False), max_size=8
+    )
     return st.tuples(
-        st.integers(1, max_size), st.integers(0, 2**31), st.sampled_from([1.0, 1e3, bound / 10])
-    ).map(lambda t: _floats(*t, bound))
+        st.integers(1, max_size), st.integers(0, 2**31), st.sampled_from([5, 200, None]), edges
+    ).map(lambda t: _floats(t[0], t[1], t[2], bound, t[3]))
 
 
 cuts_st = st.lists(st.integers(0, 10**9), min_size=0, max_size=6)
@@ -398,21 +405,25 @@ def test_reservoir_merge_invariants_any_partitioning(values, cuts, order, k, sha
     assert all(x in data for x in merged.sample.tolist())
 
 
-@given(values=values_st, cuts=cuts_st, order=order_seed_st, k=st.integers(1, 12), shape=shape_st)
+# drawn element by element over a 2^41-wide domain, where nearly every
+# item is distinct and the per-example e/w·N bound holds. Over many flat
+# counts (values_st) the readout picks the highest estimates, so a
+# colliding item exceeds that bound on working code; test_cms.py checks
+# it after merges over pruned TopK partials instead.
+@given(
+    values=st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=3000),
+    cuts=cuts_st,
+    order=order_seed_st,
+    k=st.integers(1, 12),
+    shape=shape_st,
+)
 @settings(**SETTINGS)
 def test_topk_merge_contract_any_partitioning(values, cuts, order, k, shape):
     """Merged CMS-backed TopK under any split/merge order: the CMS
     substrate is exact-sum (estimates of returned items equal the
-    whole-stream CMS's and never undercount their true counts),
-    candidates only ever come from the data, and the readout is (count
-    desc, item asc)-ordered with at most k rows.
-
-    The e/w·N upper bound is not asserted per example: it holds with
-    probability 1-delta for a fixed item, and the readout picks the
-    highest estimates, so over many flat counts (131 distinct items,
-    k=1) it returns a colliding item above the bound on working code.
-    test_cms.py checks that bound statistically."""
-    from sketchlib import CountMinSketch
+    whole-stream CMS's, never undercount their true counts and respect
+    the e/w bound), candidates only ever come from the data, and the
+    readout is (count desc, item asc)-ordered with at most k rows."""
     from sketchlib.topk import TopK
 
     v = np.array(values, dtype=np.int64)
@@ -428,8 +439,9 @@ def test_topk_merge_contract_any_partitioning(values, cuts, order, k, shape):
     assert items.size <= k
     assert set(items.tolist()) <= set(true)  # candidates ⊆ data
     assert est.tolist() == whole.query_points(items).tolist()
+    eps_n = np.e / w * v.size
     for it, e in zip(items.tolist(), est.tolist()):
-        assert true[it] <= e
+        assert true[it] <= e <= true[it] + eps_n
     keys = [(-e, it) for it, e in zip(items.tolist(), est.tolist())]
     assert keys == sorted(keys)
 
